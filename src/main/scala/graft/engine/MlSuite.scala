@@ -43,11 +43,13 @@ object MlSuite {
     * memo) and the three frozen-model deployment reads
     * (`q_lr_confusion`, `q_gbt_confusion`, `q_rf_confusion`). The frame
     * is |customers| rows × 10 columns (~15k rows at sf0.1) — customer-
-    * dimension-sized by construction, never fact-table-sized — so the
-    * cache is memory-trivial at any scale while each later consumer
-    * saves the full fact-side pass. Serialized storage keeps the
-    * session-long footprint minimal (guide §5); the eviction cleanup
-    * unpersists.
+    * dimension-sized by construction, never fact-table-sized, but it
+    * still grows with the customer dimension, so it is not free at
+    * scale. `MEMORY_AND_DISK_SER` is what makes it safe: serialized
+    * blocks keep the session-long footprint small (guide §5) and what
+    * does not fit in memory goes to disk instead of being dropped and
+    * recomputed, while each later consumer saves the full fact-side
+    * pass. The eviction cleanup unpersists.
     */
   private def labeledCached(spark: SparkSession, dir: String): DataFrame =
     SessionMemo.getOrComputeCleanup(spark, s"ml.labeled:$dir") {

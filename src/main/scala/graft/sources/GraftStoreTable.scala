@@ -168,8 +168,7 @@ class GraftStoreTable(root: String, m: Manifest)
                 VersionedStore.commitBatch(
                   data.drop("gen").drop("bucket")
                     .withColumn("bucket",
-                      pmod(coalesce(col("user_id"), lit(-1L)),
-                        lit(VersionedStore.Buckets.toLong))),
+                      VersionedStore.bucketOf(col("user_id"))),
                   root): Unit
               }
             }

@@ -46,9 +46,10 @@ object StreamingQueries {
   private val StateRowsPerPartition = 16384L
 
   /** Isolated child session with the stream's shuffle-partition sizing
-    * (one state partition per ~4k input rows, capped at the batch
-    * default) — the conf must not leak into concurrently running batch
-    * queries; the SparkContext is shared, the SQLConf not.
+    * (one state partition per [[StateRowsPerPartition]] input rows,
+    * capped at the batch default) — the conf must not leak into
+    * concurrently running batch queries; the SparkContext is shared,
+    * the SQLConf not.
     */
   private def sizedStreamSession(spark: SparkSession,
       dir: String): SparkSession = {
@@ -302,11 +303,10 @@ object StreamingQueries {
         col("event_type").as("last_event_type"),
         col("value").as("last_value"),
         lit(1L).as("n_versions"),
-        // coalesce sentinel: a null key must still route to a REAL
-        // bucket (pmod(-1)=15) — a null partition value would break the
-        // touched-bucket collect and the partition layout alike
-        pmod(coalesce(col("user_id"), lit(-1L)),
-          lit(UpsertBuckets.toLong)).as("bucket"))
+        // a null key must still route to a REAL bucket — a null
+        // partition value would break the touched-bucket collect and
+        // the partition layout alike
+        VersionedStore.bucketOf(col("user_id")).as("bucket"))
       val touched = batchRows.select("bucket").distinct()
         .collect().map(_.getLong(0)).toSeq
       val existing = sp.read.schema(upsertStoreSchema).parquet(target)
@@ -566,8 +566,7 @@ object StreamingQueries {
       // mergeGeneration's own touched-distinct each paid a collect)
       val sets = batch.agg(
         collect_set(col("__batch")).as("carried"),
-        collect_set(pmod(coalesce(col("user_id"), lit(-1L)),
-          lit(VersionedStore.Buckets.toLong))).as("touched"))
+        collect_set(VersionedStore.bucketOf(col("user_id"))).as("touched"))
         .collect()(0)
       val carried = sets.getSeq[Int](0).sorted
       // an EMPTY batch (empty fixture replay) carries no ids but must
@@ -580,8 +579,7 @@ object StreamingQueries {
           col("event_id").as("last_event_id"),
           col("event_type").as("last_event_type"),
           col("value").as("last_value"), lit(1L).as("n_versions"),
-          pmod(coalesce(col("user_id"), lit(-1L)),
-            lit(VersionedStore.Buckets.toLong)).as("bucket")),
+          VersionedStore.bucketOf(col("user_id")).as("bucket")),
         gen, root,
         // deterministic fixture commit clock — see [[StoreCommitBase]]
         commitTs = StoreCommitBase + gen * StoreCommitStepMs,
@@ -808,10 +806,13 @@ object StreamingQueries {
     val dest = graft.engine.TempArtifacts.tempDir(tag)
     def copyTree(from: Path, to: Path): Unit = {
       Files.createDirectories(to.getParent)
-      Files.walk(from).forEach { p =>
-        val t = to.resolve(from.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t): Unit
-        else Files.copy(p, t): Unit
+      // the walk holds open directory handles until closed
+      scala.util.Using.resource(Files.walk(from)) { paths =>
+        paths.forEach { p =>
+          val t = to.resolve(from.relativize(p).toString)
+          if (Files.isDirectory(p)) Files.createDirectories(t): Unit
+          else Files.copy(p, t): Unit
+        }
       }
     }
     (0 to upToGen).foreach { g =>
@@ -876,8 +877,7 @@ object StreamingQueries {
           col("event_id").as("last_event_id"),
           col("event_type").as("last_event_type"),
           col("value").as("last_value"), lit(1L).as("n_versions"),
-          pmod(coalesce(col("user_id"), lit(-1L)),
-            lit(VersionedStore.Buckets.toLong)).as("bucket"),
+          VersionedStore.bucketOf(col("user_id")).as("bucket"),
           col("__b").cast("int").as("__b"))
         .cache()
     }(df => df.unpersist(): Unit)
@@ -1429,8 +1429,8 @@ object StreamingQueries {
     "q_store_restore" -> storeRestore _,
     "q_store_schema_evolution" -> storeSchemaEvolution _)
 
-  /** Null-safe bucket derivation in DuckDB terms — the oracle twin of
-    * the stores' routing `pmod(coalesce(user_id, -1), UpsertBuckets)`
+  /** Null-safe bucket derivation in DuckDB terms — the SQL twin of
+    * [[VersionedStore.bucketOf]], the stores' one routing expression
     * (ADVICE r16: today's fixture has no NULL user_id, but the
     * implementation and specs explicitly guarantee null-key routing, so
     * the oracles must encode the same contract instead of drifting

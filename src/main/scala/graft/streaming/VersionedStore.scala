@@ -63,17 +63,26 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * renames onto, or deletes, another driver's data) and writing
   * manifest `g` create-if-absent with the token recorded in
   * `writer_dirs`. A failed create means a concurrent commit won `g`:
-  * the claim renames its private dir back to staged and [[commitBatch]]
-  * re-reads the new latest manifest and REBASES — the copy-on-write
-  * layout makes the rebase manifest-only when every winner either
-  * touched disjoint buckets or was a compaction (a logical no-op),
-  * because in both cases the loser's staged merge output is still
-  * byte-for-byte what a serial re-merge against the winner's snapshot
-  * would produce; a winner that logically changed an overlapping
-  * bucket is a SEMANTIC conflict and fails loudly
-  * ([[BucketConflictException]]). Compaction restarts instead of
-  * rebasing — its staged data is a full snapshot rewrite, stale the
-  * moment anyone else commits.
+  * the claim renames its private dir back to staged.
+  *
+  * Write paths: every writer stages, takes stats, builds its manifest
+  * and claims through one of two private loops; they differ only in
+  * what a lost claim of `g` does:
+  *   - ingest ([[commitBatch]]) REBASES: re-read the new latest and
+  *     re-claim with the same staged data. The copy-on-write layout
+  *     makes this manifest-only when every winner touched disjoint
+  *     buckets or was a compaction (a logical no-op) — either way the
+  *     staged merge is byte-for-byte what a serial re-merge would
+  *     produce; a winner that logically changed an overlapping bucket
+  *     is a SEMANTIC conflict ([[BucketConflictException]]).
+  *     [[mergeGeneration]] is the same core with zero retries: the
+  *     strict chain FAILS (IllegalArgumentException).
+  *   - rewrites ([[compact]], [[deleteWhere]], [[updateWhere]]) RESTART:
+  *     drop the staged dir, re-read, re-plan — a rewrite is stale the
+  *     moment anyone else commits.
+  *   - [[restore]] is manifest-only, claims once, and FAILS on a loss.
+  * `maxRetries` bounds consecutive losses (livelock guard,
+  * IllegalStateException); every failure path deletes its staged dir.
   *
   * Because data dirs are private and the manifest create is atomic,
   * NOTHING ELSE is safety-critical: the per-root JVM lock (same-driver)
@@ -138,6 +147,12 @@ object VersionedStore {
     */
   val Buckets: Int = StreamingQueries.UpsertBuckets
 
+  /** The bucket routing both stores write under; a NULL key routes to
+    * a real bucket. SQL twin: [[StreamingQueries.bucketSql]].
+    */
+  def bucketOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    pmod(coalesce(c, lit(-1L)), lit(Buckets.toLong))
+
   /** How long an UNREGISTERED `.staged-*` dir must sit before [[vacuum]]
     * may reclaim it — the cross-driver half of the staged-sweep guard
     * (the same-driver half is the live registry). 24 h: orders of
@@ -197,8 +212,8 @@ object VersionedStore {
     * `removed` names the buckets this commit DROPPED from the live set
     * (a [[deleteWhere]] that purged every row of a bucket) — recorded
     * explicitly (ADVICE r18 high) because an emptied bucket is invisible
-    * in the bucket map itself, and the OCC overlap scan in
-    * [[commitBatch]] must still detect a racing ingest that merged the
+    * in the bucket map itself, and the ingest core's OCC overlap scan
+    * must still detect a racing ingest that merged the
     * bucket's pre-delete rows (a manifest-only rebase there would
     * silently resurrect the deleted rows — the compliance-delete
     * guarantee forbids it).
@@ -840,6 +855,8 @@ object VersionedStore {
     }
     val rows = df.groupBy("bucket").agg(aggs.head, aggs.drop(1): _*)
       .collect()
+    require(rows.forall(!_.isNullAt(0)),
+      "staged rows carry a NULL bucket id — route keys through bucketOf")
     val stats = rows.map { r =>
       r.getLong(0) -> cols.flatMap { f =>
         val lo = r.get(r.fieldIndex(s"__lo_${f.name}"))
@@ -933,6 +950,16 @@ object VersionedStore {
     val (fs, p) = fsOf(staged)
     fs.delete(p, true): Unit
     releaseStaged(staged)
+  }
+
+  /** Run `body` against a freshly allocated staged dir; any throw inside
+    * it (the write, its stats, a contract check, the manifest build — a
+    * rejected non-monotonic commitTs, ADVICE r17) reclaims the dir.
+    */
+  private def staging[A](root: String)(body: String => A): A = {
+    val staged = stagedPath(root)
+    try body(staged)
+    catch { case t: Throwable => deleteStaged(staged); throw t }
   }
 
   /** Writer dirs (relative to `root/data`) mid-claim in THIS driver —
@@ -1091,18 +1118,21 @@ object VersionedStore {
   }
 
   /** Manifest for committing `touched` buckets at generation `g` on top
-    * of `base`, with writer-cols pruned to the generations the new
-    * bucket map still references (keeps manifests bounded AND makes the
-    * schema metadata vacuum-proof — a live manifest always carries the
-    * entries for everything it references).
+    * of `base`, dropping the `removed` (emptied) buckets from the live
+    * set, with writer-cols pruned to the generations the new bucket map
+    * still references (keeps manifests bounded AND makes the schema
+    * metadata vacuum-proof — a live manifest always carries the entries
+    * for everything it references). The successor of every ingest,
+    * delete and update commit.
     */
   private def nextManifest(base: Manifest, g: Int, touched: Seq[Long],
       schema: StructType, gCols: Seq[String], commitTs: Long,
       kind: String,
       touchedStats: Map[Long, Map[String, (String, String)]],
       touchedCounts: Map[Long, BucketCounts],
-      stagedClusteredBy: Seq[String]): Manifest = {
-    val buckets = base.buckets ++ touched.map(_ -> g)
+      stagedClusteredBy: Seq[String],
+      removed: Set[Long] = Set.empty): Manifest = {
+    val buckets = (base.buckets -- removed) ++ touched.map(_ -> g)
     val referenced = buckets.values.toSet
     val writerCols = (base.writerCols ++
       base.buckets.values.toSet.diff(base.writerCols.keySet)
@@ -1117,6 +1147,7 @@ object VersionedStore {
     val counts = (base.counts -- touched) ++ touchedCounts
     Manifest(g, buckets, resolveTs(base.commitTs, commitTs), kind,
       schema, writerCols, stats.filter { case (b, _) => buckets.contains(b) },
+      removed = removed,
       // writer-dir tokens carry forward for every referenced generation
       // (vacuum-proof path resolution, like writerCols); generation g's
       // own token is injected by the claim itself
@@ -1136,17 +1167,18 @@ object VersionedStore {
     * or a reordered delivery corrupts the generation accounting and must
     * fail loudly, never rebase. (Concurrent writers use [[commitBatch]],
     * which rebases instead.) `batchRows` carry the payload columns plus
-    * a `bucket` routing column, `n_versions` pre-set to 1; the merge
-    * reads the touched buckets' CURRENT data by reference from older
-    * generation dirs (copy-on-write — the read side is never the write
-    * target) under the latest-per-key (ts, event_id) argmax.
+    * a `bucket` routing column ([[bucketOf]]), `n_versions` pre-set to
+    * 1; the merge reads the touched buckets' CURRENT data by reference
+    * from older generation dirs (copy-on-write — the read side is never
+    * the write target) under the latest-per-key (ts, event_id) argmax.
     * `commitTs` < 0 = driver clock; an explicit value (deterministic
-    * fixtures) must be monotonic in the chain.
+    * fixtures) must be monotonic in the chain. A caller that already
+    * aggregated the batch (the streaming replay) passes its exact bucket
+    * set as `touchedHint`, saving the touched-bucket collect job.
     */
   def mergeGeneration(batchRows: DataFrame, gen: Int,
       root: String, commitTs: Long = -1L,
       touchedHint: Option[Seq[Long]] = None): Unit = {
-    val sp = batchRows.sparkSession
     val base: Manifest =
       if (gen == 0) {
         require(latestGen(root).isEmpty,
@@ -1158,148 +1190,176 @@ object VersionedStore {
             s"(store at ${latestGen(root).getOrElse(-1)})")
         readManifest(root, gen - 1)
       }
-    // bounded by the layout constant (<= Buckets), never by data volume.
-    // r21: a caller that already aggregated the batch (the streaming
-    // replay's order-contract check scans it anyway) passes the bucket
-    // set as a hint — one collect job per commit instead of two.
-    val touched = touchedHint.map(_.sorted).getOrElse(
-      batchRows.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted)
-    val schema = mergedSchema(base.schema, batchRows.schema)
-    val staged = stagedPath(root)
-    // any throw between the staged write and a successful claim must
-    // reclaim the staged dir (ADVICE r17: a rejected non-monotonic
-    // commitTs inside nextManifest used to leak it until vacuum)
-    val committed = try {
-      val (stats, counts) = stageWithStats(
-        mergeTouched(existingFor(sp, root, base, touched, schema),
-          batchRows, schema), base.clusteredBy, staged, schema)
-      tryClaimAndCommit(root, Some(staged),
-        nextManifest(base, gen, touched, schema,
-          schema.fieldNames.toSeq, commitTs, "ingest", stats, counts,
-          base.clusteredBy))
-    } catch { case t: Throwable => deleteStaged(staged); throw t }
-    if (!committed) {
-      deleteStaged(staged)
-      throw new IllegalArgumentException(
-        s"generation $gen is already committed at $root — a replayed " +
-          "or concurrent strict-chain commit is a bug, not a retry " +
-          "(concurrent writers go through commitBatch)")
-    }
+    ingest(batchRows, root, base, touchedHint, commitTs, maxRetries = 0,
+      beforeClaim = _ => (), lostRace = _ =>
+        throw new IllegalArgumentException(
+          s"generation $gen is already committed at $root — a replayed " +
+            "or concurrent strict-chain commit is a bug, not a retry " +
+            "(concurrent writers go through commitBatch)")): Unit
   }
 
   /** Optimistic-concurrency commit (VERDICT r16 #1): merge `batchRows`
     * against the LATEST snapshot and commit as the next generation,
-    * rebasing on conflict. See the object scaladoc for the protocol;
-    * the short form:
-    *
-    *   - lost race, every winner disjoint-or-compaction → manifest-only
-    *     rebase (the staged merge output is provably what a serial
-    *     re-merge would produce) and retry at `newLatest + 1`;
-    *   - lost race, an ingest winner touched one of OUR buckets →
-    *     [[BucketConflictException]] — the caller must re-derive its
-    *     batch from source and re-submit;
-    *   - `maxRetries` exhausted → IllegalStateException (livelock guard).
-    *
-    * `beforeClaim(g)` fires after the staged write, immediately before
-    * each claim attempt of generation `g` — the deterministic
-    * interleaving hook the spec and `q_concurrent_commit` drive the
-    * canonical OPTIMIZE-vs-ingest race through (no sleeps).
+    * rebasing on a lost race (object scaladoc); an overlapping winner is
+    * a [[BucketConflictException]] — re-derive the batch from source and
+    * re-submit. `beforeClaim(g)` fires after the staged write,
+    * immediately before each claim attempt of generation `g` — the
+    * deterministic interleaving hook the spec and `q_concurrent_commit`
+    * drive the canonical OPTIMIZE-vs-ingest race through (no sleeps).
     * Returns the committed generation id.
     */
   def commitBatch(batchRows: DataFrame, root: String,
       commitTs: Long = -1L, maxRetries: Int = 5,
-      beforeClaim: Int => Unit = _ => ()): Int = {
-    val sp = batchRows.sparkSession
-    val touched = batchRows.select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+      beforeClaim: Int => Unit = _ => ()): Int =
+    ingest(batchRows, root,
+      latestGen(root).map(readManifest(root, _))
+        .getOrElse(Manifest(-1, Map.empty)),
+      None, commitTs, maxRetries, beforeClaim, lostRace = n =>
+        throw new IllegalStateException(
+          s"commitBatch lost $n consecutive races at $root — " +
+            "livelock guard tripped"))
+
+  /** The ingest core: merge `batchRows` against `start`, stage once,
+    * claim the next generation, and on a lost race rebase
+    * ([[rebasedBase]]) and re-claim the same staged data, up to
+    * `maxRetries` times; then `lostRace(races lost)` throws the caller's
+    * error. Two contract checks, both on data already collected (no
+    * extra job), fail loudly instead of committing rows no read reaches:
+    * touched ids must be non-null and in [0, [[Buckets]]), and the staged
+    * buckets must equal the touched set (an inexact `touchedHint`).
+    */
+  private def ingest(batchRows: DataFrame, root: String, start: Manifest,
+      touchedHint: Option[Seq[Long]], commitTs: Long, maxRetries: Int,
+      beforeClaim: Int => Unit, lostRace: Int => Nothing): Int = {
+    // bounded by the layout constant (<= Buckets), never by data volume
+    val touched = touchedHint.getOrElse {
+      val ids = batchRows.select("bucket").distinct().collect()
+      require(ids.forall(!_.isNullAt(0)),
+        s"batch for $root carries a NULL bucket id — route keys through " +
+          "bucketOf")
+      ids.map(_.getLong(0)).toSeq
+    }.sorted
+    val unroutable = touched.filter(b => b < 0 || b >= Buckets)
+    require(unroutable.isEmpty,
+      s"batch for $root writes bucket id(s) ${unroutable.mkString(",")} " +
+        s"outside [0, $Buckets) — lookupKey can never route to them")
     val touchedSet = touched.toSet
-    var base = latestGen(root) match {
-      case Some(g) => readManifest(root, g)
-      case None => Manifest(-1, Map.empty)
-    }
-    var schema = mergedSchema(base.schema, batchRows.schema)
+    val schema = mergedSchema(start.schema, batchRows.schema)
     // the columns the staged files PHYSICALLY contain — frozen at write
     // time; a rebase can widen the manifest `schema` with a winner's
     // added columns, but writer_cols must stay honest about these files
     val stagedCols = schema.fieldNames.toSeq
-    val staged = stagedPath(root)
-    val stagedClusteredBy = base.clusteredBy
-    val (stats, statCounts) = try {
-      stageWithStats(mergeTouched(existingFor(sp, root, base, touched,
-          schema), batchRows, schema), stagedClusteredBy, staged, schema)
-    } catch { case t: Throwable => deleteStaged(staged); throw t }
-    def cleanupStaged(): Unit = deleteStaged(staged)
-    var attempt = 0
-    while (true) {
+    val (staged, stats, counts) = staging(root) { s =>
+      val (stats, counts) = stageWithStats(
+        mergeTouched(existingFor(batchRows.sparkSession, root, start,
+          touched, schema), batchRows, schema),
+        start.clusteredBy, s, schema)
+      require(counts.keySet == touchedSet,
+        s"touched buckets for $root are inexact: the batch writes " +
+          s"[${counts.keys.toSeq.sorted.mkString(",")}], the touched " +
+          s"set names [${touched.mkString(",")}]")
+      (s, stats, counts)
+    }
+    @annotation.tailrec
+    def claimFrom(base: Manifest, schema: StructType, attempt: Int): Int = {
       val g = base.gen + 1
       beforeClaim(g)
-      // claim throws (e.g. a rejected fixture clock) must not leak the
-      // staged dir — same contract as the strict-chain path
-      val claimed = try {
-        tryClaimAndCommit(root, Some(staged),
+      if (tryClaimAndCommit(root, Some(staged),
           nextManifest(base, g, touched, schema, stagedCols, commitTs,
-            "ingest", stats, statCounts, stagedClusteredBy))
-      } catch { case t: Throwable => cleanupStaged(); throw t }
-      if (claimed) return g
-      attempt += 1
-      if (attempt > maxRetries) {
-        cleanupStaged()
-        throw new IllegalStateException(
-          s"commitBatch lost $attempt consecutive races at $root — " +
-            "livelock guard tripped")
+            "ingest", stats, counts, start.clusteredBy))) g
+      else if (attempt >= maxRetries) lostRace(attempt + 1)
+      else {
+        val rebased = rebasedBase(root, g, touchedSet)
+        // schema rebase: keep every column the winners' chain knows
+        // about, appending only our genuinely-new ones (common columns
+        // were type-checked against OUR batch by mergedSchema on entry;
+        // a winner cannot have changed a type — add-only is enforced on
+        // every path)
+        val baseNames = rebased.schema.fieldNames.toSet
+        claimFrom(rebased, StructType(rebased.schema.fields ++
+          schema.fields.filterNot(f => baseNames(f.name))), attempt + 1)
       }
-      val newLatest = latestGen(root).getOrElse(
-        throw new IllegalStateException(
-          s"claim of generation $g failed but $root has no manifests"))
-      // validate every commit that landed since our snapshot: a
-      // compaction is a logical no-op (rebase fine); a disjoint ingest
-      // didn't change what we merged against (rebase fine); an
-      // OVERLAPPING ingest invalidates our merge — semantic conflict —
-      // and a RESTORE rewrites the whole snapshot lineage, so every
-      // in-flight merge (computed against the pre-restore state) is
-      // stale regardless of buckets
-      (g to newLatest).foreach { wg =>
-        val wm = readManifest(root, wg)
-        if (wm.kind == "restore") {
-          cleanupStaged()
-          throw new BucketConflictException(
-            s"concurrent generation $wg RESTORED the store to an " +
-              "earlier snapshot — this batch was merged against the " +
-              "pre-restore state; re-derive it from source against the " +
-              "restored snapshot and re-submit")
-        } else if (wm.kind != "compact") {
-          // a winner's LOGICAL change to one of our buckets shows up in
-          // one of two manifest forms: the bucket REWRITTEN at wg, or —
-          // a deleteWhere that purged every row — the bucket REMOVED
-          // from the live set entirely (ADVICE r18 high: the removed
-          // form is invisible to the gw == wg scan, and rebasing over
-          // it would resurrect the deleted rows from our staged merge
-          // of the pre-delete state)
-          val overlap = wm.buckets.collect {
-            case (b, gw) if gw == wg && touchedSet(b) => b
-          } ++ wm.removed.filter(touchedSet)
-          if (overlap.nonEmpty) {
-            cleanupStaged()
-            throw new BucketConflictException(
-              s"concurrent generation $wg wrote or emptied bucket(s) " +
-                s"${overlap.toSeq.sorted.mkString(",")} this batch also " +
-                "touches — rebase would lose or resurrect its rows; " +
-                "re-derive the batch from source and re-submit")
-          }
-        }
-      }
-      base = readManifest(root, newLatest)
-      // schema rebase: keep every column the winners' chain knows about,
-      // appending only our genuinely-new ones (common columns were
-      // type-checked against OUR batch by mergedSchema on entry; a
-      // winner cannot have changed a type — add-only is enforced on
-      // every path)
-      val baseNames = base.schema.fieldNames.toSet
-      schema = StructType(base.schema.fields ++
-        schema.fields.filterNot(f => baseNames(f.name)))
     }
-    -1 // unreachable
+    try claimFrom(start, schema, 0)
+    catch { case t: Throwable => deleteStaged(staged); throw t }
+  }
+
+  /** The new latest manifest after an ingest lost generation `lost`,
+    * once every winner is validated: a compaction or a disjoint ingest
+    * rebases fine; an OVERLAPPING logical change invalidates our merge,
+    * and a RESTORE stales every in-flight merge regardless of buckets.
+    */
+  private def rebasedBase(root: String, lost: Int,
+      touched: Set[Long]): Manifest = {
+    val newLatest = latestGen(root).getOrElse(
+      throw new IllegalStateException(
+        s"claim of generation $lost failed but $root has no manifests"))
+    (lost to newLatest).foreach { wg =>
+      val wm = readManifest(root, wg)
+      if (wm.kind == "restore")
+        throw new BucketConflictException(
+          s"concurrent generation $wg RESTORED the store to an " +
+            "earlier snapshot — this batch was merged against the " +
+            "pre-restore state; re-derive it from source against the " +
+            "restored snapshot and re-submit")
+      else if (wm.kind != "compact") {
+        // a winner's LOGICAL change to one of our buckets shows up in
+        // one of two manifest forms: the bucket REWRITTEN at wg, or —
+        // a deleteWhere that purged every row — the bucket REMOVED
+        // from the live set entirely (ADVICE r18 high: the removed
+        // form is invisible to the gw == wg scan, and rebasing over
+        // it would resurrect the deleted rows from our staged merge
+        // of the pre-delete state)
+        val overlap = wm.buckets.collect {
+          case (b, gw) if gw == wg && touched(b) => b
+        } ++ wm.removed.filter(touched)
+        if (overlap.nonEmpty)
+          throw new BucketConflictException(
+            s"concurrent generation $wg wrote or emptied bucket(s) " +
+              s"${overlap.toSeq.sorted.mkString(",")} this batch also " +
+              "touches — rebase would lose or resurrect its rows; " +
+              "re-derive the batch from source and re-submit")
+      }
+    }
+    readManifest(root, newLatest)
+  }
+
+  /** A planned rewrite: staged dir (None = manifest-only) + manifest. */
+  private final case class Rewrite(staged: Option[String], manifest: Manifest)
+
+  /** The restart loop of [[compact]], [[deleteWhere]], [[updateWhere]]:
+    * read the latest manifest, `plan` a rewrite for `latest + 1` (None =
+    * no-op, returns `latest`), fire `beforeClaim`, claim; a lost race
+    * drops the staged dir and restarts, up to `maxRetries` times.
+    */
+  private def rewriteLoop(op: String, root: String, maxRetries: Int,
+      beforeClaim: Int => Unit)(
+      plan: (Manifest, Int) => Option[Rewrite]): Int = {
+    @annotation.tailrec
+    def attempt(n: Int): Int = {
+      val latest = latestGen(root).getOrElse(
+        throw new IllegalArgumentException(s"empty store at $root"))
+      val g = latest + 1
+      plan(readManifest(root, latest), g) match {
+        case None => latest
+        case Some(Rewrite(staged, manifest)) =>
+          val won = try {
+            beforeClaim(g)
+            tryClaimAndCommit(root, staged, manifest)
+          } catch { case t: Throwable =>
+            staged.foreach(deleteStaged); throw t
+          }
+          if (won) g
+          else {
+            staged.foreach(deleteStaged)
+            if (n >= maxRetries) throw new IllegalStateException(
+              s"$op lost ${n + 1} consecutive races at $root — " +
+                "livelock guard tripped")
+            attempt(n + 1)
+          }
+      }
+    }
+    attempt(0)
   }
 
   /** Compaction (the OPTIMIZE half of the store lifecycle): commit a
@@ -1311,11 +1371,8 @@ object VersionedStore {
     * pruned `<=Buckets` dirs and the write is one pass over the LIVE
     * data — at 100 TB this is the periodic maintenance job a streaming
     * store schedules off-peak, cost bounded by live-store size, never
-    * by generation count. Concurrency: compaction claims `latest + 1`
-    * optimistically like any writer, but on a lost race it RESTARTS
-    * (re-read, rewrite) — its staged data is a full-snapshot copy,
-    * stale the moment any other commit lands; since it is a logical
-    * no-op, restarting can never conflict semantically.
+    * by generation count. A lost race restarts the rewrite (the shared
+    * rewrite loop); as a logical no-op it never conflicts semantically.
     *
     * `clusterBy` (VERDICT r17 missing #5 — OPTIMIZE ZORDER integrated
     * with the store): when non-empty, the rewrite routes each bucket to
@@ -1335,50 +1392,30 @@ object VersionedStore {
   def compact(spark: SparkSession, root: String,
       commitTs: Long = -1L, maxRetries: Int = 5,
       beforeClaim: Int => Unit = _ => (),
-      clusterBy: Seq[String] = Nil): Int = {
-    var attempt = 0
-    while (true) {
-      val latest = latestGen(root).getOrElse(
-        throw new IllegalArgumentException(s"empty store at $root"))
-      val m = readManifest(root, latest)
+      clusterBy: Seq[String] = Nil): Int =
+    rewriteLoop("compact", root, maxRetries, beforeClaim) { (m, g) =>
       require(clusterBy.forall(m.schema.fieldNames.contains),
         s"clusterBy ${clusterBy.mkString(",")} must name payload " +
           s"columns of ${m.schema.fieldNames.mkString(",")}")
-      val g = latest + 1
-      val staged = if (m.buckets.isEmpty) None else {
-        val s = stagedPath(root)
-        val snap = readBuckets(spark, root, m, None).drop("gen")
-        try clusterWrite(snap, clusterBy)
-          .write.mode("errorifexists").partitionBy("bucket").parquet(s)
-        catch { case t: Throwable => deleteStaged(s); throw t }
-        Some(s)
-      }
-      beforeClaim(g)
-      val claimed = try {
-        // the rewrite is a logical no-op, so every bucket's zone map
-        // (ranges AND counts) carries forward by reference — zero
-        // stats recomputation
-        val manifest = Manifest(g, m.buckets.keys.map(_ -> g).toMap,
-          resolveTs(m.commitTs, commitTs), "compact", m.schema,
-          if (m.buckets.isEmpty) Map.empty
-          else Map(g -> m.schema.fieldNames.toSeq), m.stats,
-          counts = m.counts,
-          // the layout this rewrite PRODUCED: the requested cluster
-          // keys, or honestly unclustered for a plain compact
-          clusteredBy = clusterBy)
-        tryClaimAndCommit(root, staged, manifest)
-      } catch { case t: Throwable =>
-        staged.foreach(deleteStaged); throw t
-      }
-      if (claimed) return g
-      staged.foreach(deleteStaged)
-      attempt += 1
-      if (attempt > maxRetries) throw new IllegalStateException(
-        s"compact lost $attempt consecutive races at $root — " +
-          "livelock guard tripped")
+      // the rewrite is a logical no-op, so every bucket's zone map
+      // (ranges AND counts) carries forward by reference — zero stats
+      // recomputation
+      def manifest = Manifest(g, m.buckets.keys.map(_ -> g).toMap,
+        resolveTs(m.commitTs, commitTs), "compact", m.schema,
+        if (m.buckets.isEmpty) Map.empty
+        else Map(g -> m.schema.fieldNames.toSeq), m.stats,
+        counts = m.counts,
+        // the layout this rewrite PRODUCED: the requested cluster keys,
+        // or honestly unclustered for a plain compact
+        clusteredBy = clusterBy)
+      if (m.buckets.isEmpty) Some(Rewrite(None, manifest))
+      else Some(staging(root) { s =>
+        clusterWrite(readBuckets(spark, root, m, None).drop("gen"),
+          clusterBy).write.mode("errorifexists").partitionBy("bucket")
+          .parquet(s)
+        Rewrite(Some(s), manifest)
+      })
     }
-    -1 // unreachable
-  }
 
   /** RESTORE (Delta's `RESTORE TABLE ... VERSION AS OF`): make snapshot
     * `toGen` the store's LATEST state again by committing a NEW
@@ -1782,85 +1819,50 @@ object VersionedStore {
     * History is preserved: earlier snapshots still read the deleted
     * rows until a vacuum drops them — retention-then-erasure, the same
     * lifecycle as the tombstone path but predicate-addressed instead of
-    * key-addressed. Concurrency: claims optimistically like any writer
-    * and RESTARTS on a lost race (its rewrite is stale the moment
-    * anyone commits); to racing ingests it is an ordinary
-    * bucket-overlap conflict (`kind != "compact"`). No matching rows
+    * key-addressed. A lost race restarts the rewrite; to racing
+    * ingests it is an ordinary bucket-overlap conflict. No matching rows
     * anywhere → NO new generation (a no-op returns the current latest).
     * Returns the generation id the caller should now read.
     */
   def deleteWhere(spark: SparkSession, root: String,
       pred: StorePredicate, commitTs: Long = -1L,
-      maxRetries: Int = 5, beforeClaim: Int => Unit = _ => ()): Int = {
-    var attempt = 0
-    while (true) {
-      val latest = latestGen(root).getOrElse(
-        throw new IllegalArgumentException(s"empty store at $root"))
-      val m = readManifest(root, latest)
-      val g = latest + 1
+      maxRetries: Int = 5, beforeClaim: Int => Unit = _ => ()): Int =
+    rewriteLoop("deleteWhere", root, maxRetries, beforeClaim) { (m, g) =>
       val candidates = survivingBuckets(m, pred)
-      if (candidates.isEmpty) return latest
       // bounded by the layout constant: how many rows match per bucket,
       // and how many rows the bucket holds at all (emptied detection)
-      val counts = readBuckets(spark, root, m, Some(candidates))
-        .groupBy("bucket")
-        .agg(sum(when(pred.toColumn, 1L).otherwise(0L)).as("nm"),
-          count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val counts =
+        if (candidates.isEmpty) Array.empty[(Long, Long, Long)]
+        else readBuckets(spark, root, m, Some(candidates))
+          .groupBy("bucket")
+          .agg(sum(when(pred.toColumn, 1L).otherwise(0L)).as("nm"),
+            count(lit(1)).as("n"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val touched = counts.collect { case (b, nm, _) if nm > 0 => b }
         .toSeq.sorted
-      if (touched.isEmpty) return latest
       val emptied = counts.collect { case (b, nm, n) if nm == n => b }.toSet
       val kept = touched.filterNot(emptied)
-      // survivors re-staged WITHOUT the matching rows, re-sorted by
-      // the store's recorded cluster keys (VERDICT r18 #6: a delete
-      // rewrite must not silently un-sort what OPTIMIZE clustered);
-      // stats ride the same cached materialization (stageWithStats)
-      val (staged, freshStats, freshCounts) = if (kept.isEmpty)
-        (None, Map.empty[Long, Map[String, (String, String)]],
-          Map.empty[Long, BucketCounts])
-      else {
-        val s = stagedPath(root)
-        val (fs, fc) = try stageWithStats(
-            readBuckets(spark, root, m, Some(kept.toSet)).drop("gen")
-              .filter(!pred.toColumn || pred.toColumn.isNull),
-            m.clusteredBy, s, m.schema)
-          catch { case t: Throwable => deleteStaged(s); throw t }
-        (Some(s), fs, fc)
-      }
-      beforeClaim(g)
-      val claimed = try {
-        val buckets = (m.buckets -- emptied) ++ kept.map(_ -> g)
-        val referenced = buckets.values.toSet
-        val writerCols = (m.writerCols ++
-          m.buckets.values.toSet.diff(m.writerCols.keySet)
-            .map(gw => gw -> m.colsOf(gw)).toMap ++
-          (if (kept.isEmpty) Map.empty
-           else Map(g -> m.schema.fieldNames.toSeq)))
-          .filter { case (gw, _) => referenced(gw) }
-        val stats = ((m.stats -- touched) ++ freshStats)
-          .filter { case (b, _) => buckets.contains(b) }
-        val counts = ((m.counts -- touched) ++ freshCounts)
-          .filter { case (b, _) => buckets.contains(b) }
-        tryClaimAndCommit(root, staged,
-          Manifest(g, buckets, resolveTs(m.commitTs, commitTs), "delete",
-            m.schema, writerCols, stats, removed = emptied,
-            writerDirs = m.writerDirs
-              .filter { case (gw, _) => referenced(gw) },
-            counts = counts, clusteredBy = m.clusteredBy))
-      } catch { case t: Throwable =>
-        staged.foreach(deleteStaged); throw t
-      }
-      if (claimed) return g
-      staged.foreach(deleteStaged)
-      attempt += 1
-      if (attempt > maxRetries) throw new IllegalStateException(
-        s"deleteWhere lost $attempt consecutive races at $root — " +
-          "livelock guard tripped")
+      def manifest(stats: Map[Long, Map[String, (String, String)]],
+          bucketCounts: Map[Long, BucketCounts]) =
+        nextManifest(m, g, kept, m.schema, m.schema.fieldNames.toSeq,
+          commitTs, "delete", stats, bucketCounts, m.clusteredBy,
+          removed = emptied)
+      if (touched.isEmpty) None
+      else if (kept.isEmpty)
+        Some(Rewrite(None, manifest(Map.empty, Map.empty)))
+      // survivors re-staged WITHOUT the matching rows, re-sorted by the
+      // store's recorded cluster keys (VERDICT r18 #6: a delete rewrite
+      // must not silently un-sort what OPTIMIZE clustered); stats ride
+      // the same cached materialization (stageWithStats)
+      else Some(staging(root) { s =>
+        val (stats, bucketCounts) = stageWithStats(
+          readBuckets(spark, root, m, Some(kept.toSet)).drop("gen")
+            .filter(!pred.toColumn || pred.toColumn.isNull),
+          m.clusteredBy, s, m.schema)
+        Rewrite(Some(s), manifest(stats, bucketCounts))
+      })
     }
-    -1 // unreachable
-  }
 
   /** Predicate-level UPDATE (VERDICT r18 #4 — the other compliance DML:
     * `UPDATE store SET col = expr, ... WHERE <pred>`): a copy-on-write
@@ -1889,29 +1891,24 @@ object VersionedStore {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     require(set.map(_._1).distinct.size == set.size,
       "UPDATE assigns a column twice")
-    var attempt = 0
-    while (true) {
-      val latest = latestGen(root).getOrElse(
-        throw new IllegalArgumentException(s"empty store at $root"))
-      val m = readManifest(root, latest)
+    rewriteLoop("updateWhere", root, maxRetries, beforeClaim) { (m, g) =>
       set.foreach { case (c, _) =>
         require(m.schema.fieldNames.contains(c),
           s"UPDATE SET names unknown column '$c' (payload: " +
             s"${m.schema.fieldNames.mkString(",")})")
       }
-      val g = latest + 1
       val candidates = survivingBuckets(m, pred)
-      if (candidates.isEmpty) return latest
       // bounded by the layout constant: which candidates hold matches
-      val matches = readBuckets(spark, root, m, Some(candidates))
-        .groupBy("bucket")
-        .agg(sum(when(pred.toColumn, 1L).otherwise(0L)).as("nm"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val touched = matches.collect { case (b, nm) if nm > 0 => b }
-        .toSeq.sorted
-      if (touched.isEmpty) return latest
-      val (staged, freshStats, freshCounts) = {
-        val s = stagedPath(root)
+      val touched =
+        if (candidates.isEmpty) Nil
+        else readBuckets(spark, root, m, Some(candidates))
+          .groupBy("bucket")
+          .agg(sum(when(pred.toColumn, 1L).otherwise(0L)).as("nm"))
+          .collect()
+          .collect { case r if r.getLong(1) > 0 => r.getLong(0) }
+          .toSeq.sorted
+      if (touched.isEmpty) None
+      else {
         val src = readBuckets(spark, root, m, Some(touched.toSet))
           .drop("gen")
         val assigns = set.toMap
@@ -1930,39 +1927,15 @@ object VersionedStore {
               s"${updated.schema(c).dataType.catalogString} — type " +
               "changes are not supported")
         }
-        val (fs, fc) = try stageWithStats(updated, m.clusteredBy, s,
-            m.schema)
-          catch { case t: Throwable => deleteStaged(s); throw t }
-        (s, fs, fc)
+        Some(staging(root) { s =>
+          val (stats, bucketCounts) =
+            stageWithStats(updated, m.clusteredBy, s, m.schema)
+          Rewrite(Some(s), nextManifest(m, g, touched, m.schema,
+            m.schema.fieldNames.toSeq, commitTs, "update", stats,
+            bucketCounts, m.clusteredBy))
+        })
       }
-      beforeClaim(g)
-      val claimed = try {
-        val buckets = m.buckets ++ touched.map(_ -> g)
-        val referenced = buckets.values.toSet
-        val writerCols = (m.writerCols ++
-          m.buckets.values.toSet.diff(m.writerCols.keySet)
-            .map(gw => gw -> m.colsOf(gw)).toMap +
-          (g -> m.schema.fieldNames.toSeq))
-          .filter { case (gw, _) => referenced(gw) }
-        tryClaimAndCommit(root, Some(staged),
-          Manifest(g, buckets, resolveTs(m.commitTs, commitTs), "update",
-            m.schema, writerCols,
-            ((m.stats -- touched) ++ freshStats)
-              .filter { case (b, _) => buckets.contains(b) },
-            writerDirs = m.writerDirs
-              .filter { case (gw, _) => referenced(gw) },
-            counts = ((m.counts -- touched) ++ freshCounts)
-              .filter { case (b, _) => buckets.contains(b) },
-            clusteredBy = m.clusteredBy))
-      } catch { case t: Throwable => deleteStaged(staged); throw t }
-      if (claimed) return g
-      deleteStaged(staged)
-      attempt += 1
-      if (attempt > maxRetries) throw new IllegalStateException(
-        s"updateWhere lost $attempt consecutive races at $root — " +
-          "livelock guard tripped")
     }
-    -1 // unreachable
   }
 
   /** Snapshot read AS OF a wall-clock instant (VERDICT r16 #4): resolve

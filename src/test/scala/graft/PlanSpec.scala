@@ -199,9 +199,11 @@ class PlanSpec extends SparkSpec {
     // (AQE exchange reuse deduped them before; over the shared cached
     // labeled basetable the deduplicated branch stops canonicalizing
     // equal and reuse fails, so the structural pin replaced it). The
-    // assertion: at most one fresh cell exchange in the executed plan —
-    // 1 when this query populates the cell cache, 0 when it is warm;
-    // 2 would mean both branches recompute the scoring pass.
+    // assertion: NO fresh cell exchange in the executed plan (the
+    // cache's population plan is not a child of the scans that read
+    // it) and at least two in-memory cache scans, the union branches
+    // reading the cached cell table; a fresh exchange would mean a
+    // branch recomputes the scoring pass inline.
     import graft.engine.MlSuite
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,

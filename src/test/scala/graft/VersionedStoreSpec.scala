@@ -91,6 +91,51 @@ class VersionedStoreSpec extends SparkSpec {
     }
   }
 
+  private def stagedDirs(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/data").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(".staged-"))
+      .map(_.getName)
+
+  test("a batch routing rows to a bucket id outside [0, Buckets) or to " +
+      "a NULL bucket is rejected before it commits") {
+    val root = freshRoot("unroutable")
+    VersionedStore.mergeGeneration(batch((1L, 10L, "a", 1.0)), 0, root)
+    val rows = batch((2L, 20L, "b", 2.0))
+    // lookupKey routes every key into [0, Buckets): a manifest entry
+    // outside it could never be read back by key
+    Seq(lit(VersionedStore.Buckets.toLong), lit(-1L), lit(null).cast("long"))
+      .foreach { b =>
+        intercept[IllegalArgumentException] {
+          VersionedStore.commitBatch(rows.withColumn("bucket", b), root)
+        }
+      }
+    // a NULL id behind a touchedHint is caught on the staged stats
+    intercept[IllegalArgumentException] {
+      VersionedStore.mergeGeneration(
+        rows.withColumn("bucket", lit(null).cast("long")), 1, root,
+        touchedHint = Some(Nil))
+    }
+    assert(VersionedStore.latestGen(root) === Some(0))
+    assert(stagedDirs(root).isEmpty)
+  }
+
+  test("a touchedHint that omits a bucket the batch writes fails loudly " +
+      "instead of dropping that bucket's staged rows") {
+    val root = freshRoot("hint")
+    // users 1 and 2 route to buckets 1 and 2
+    val rows = batch((1L, 10L, "a", 1.0), (2L, 11L, "b", 2.0))
+    intercept[IllegalArgumentException] {
+      VersionedStore.mergeGeneration(rows, 0, root,
+        touchedHint = Some(Seq(1L)))
+    }
+    assert(VersionedStore.latestGen(root) === None)
+    assert(stagedDirs(root).isEmpty)
+    // the exact hint commits both buckets
+    VersionedStore.mergeGeneration(rows, 0, root,
+      touchedHint = Some(Seq(2L, 1L)))
+    assert(snapshot(root, 0) === Seq((1L, 10L, 0), (2L, 11L, 0)))
+  }
+
   private def fileDigest(dir: java.io.File): Map[String, String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
