@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // JIT sink for the calibration loop result — a volatile write the
   // optimizer cannot prove dead, so the fixed-work loop is never elided
@@ -71,17 +70,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // '*' is valid for local[*]; the probe then matches its parallelism
-    val nThreads = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", nThreads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // '*' means every processor; the probe then matches its parallelism
+    val nThreads = GraftSession.cpus(4)
+    val spark = GraftSession.getOrCreate(nThreads)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet datasource init, codegen compiler, shuffle
     // machinery) so the first timed query is not charged ~4s of one-time

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints `explain("formatted")` for the named
   * queries (or a representative default set) so scan pruning, pushed
   * filters, broadcast joins, and whole-stage-codegen spans can be audited.
@@ -13,13 +11,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_scan_project", "q_agg_multi", "q_join_inner",
         "q_basetable_star", "q_pivot_dummies", "q_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(4)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

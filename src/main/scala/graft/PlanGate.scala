@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The standing plan-SHAPE gate (VERDICT r15 #1) — third standing gate
   * beside SCALE_GATE (time exponents) and BENCH_MATERIALIZED (per-row
   * cost): committed normalized plan fingerprints for EVERY
@@ -115,14 +113,7 @@ object PlanGate {
     val commit = args.contains("--commit")
     val only = args.drop(1).filterNot(_ == "--commit").toSet
     val sfName = new java.io.File(sfDir).getName
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     val measured = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }

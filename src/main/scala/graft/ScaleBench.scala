@@ -718,16 +718,8 @@ object ScaleBench {
       if (args.nonEmpty) withContext(requested).filter(QueryNames.contains)
       else QueryNames
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val commitMode = sys.env.get("SPARK_GRAFT_SCALE_COMMIT").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        scala.util.Try(cpus.toInt).getOrElse(32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     var times = runLadder(spark, base, names, Scales)
     // rows eligible for gating/commit/report: the REQUESTED queries plus

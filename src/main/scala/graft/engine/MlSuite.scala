@@ -801,15 +801,6 @@ object MlSuite {
     */
   private def confusionTable(spark: SparkSession, dir: String,
       marginSql: String): DataFrame = {
-    val scored = deployFeatures(spark, dir)
-      .filter(col("is_test"))
-      .select(
-        (col("label") > 0.5).as("actual"),
-        round(expr(marginSql), 6).as("margin"))
-      .select(col("actual"), col("margin"),
-        (col("margin") > 0.0).as("pred"),
-        least(greatest(floor(col("margin")), lit(-DeployBucketClamp.toDouble)),
-          lit(DeployBucketClamp.toDouble)).cast("long").as("bucket"))
     // r21: CACHED — the metric branch and the histogram branch both
     // aggregate this <= (2*clamp+1)*4-row cell table. Before the shared
     // [[labeledCached]] memo, AQE's runtime exchange reuse deduped the
@@ -817,9 +808,24 @@ object MlSuite {
     // the deduplicated second branch no longer canonicalizes equal and
     // reuse fails, so the bounded cache pins the once-only property
     // structurally instead (PlanSpec's frozen-confusion shape test).
-    val g = scored.groupBy("bucket", "pred", "actual")
-      .agg(count(lit(1)).as("n"))
-      .cache()
+    // Memoized per (dir, margin), since the deployment gates share this
+    // skeleton, so session eviction unpersists it.
+    val g = SessionMemo.getOrComputeCleanup(spark,
+        s"ml.confusion:$dir:$marginSql") {
+      deployFeatures(spark, dir)
+        .filter(col("is_test"))
+        .select(
+          (col("label") > 0.5).as("actual"),
+          round(expr(marginSql), 6).as("margin"))
+        .select(col("actual"), col("margin"),
+          (col("margin") > 0.0).as("pred"),
+          least(greatest(floor(col("margin")),
+            lit(-DeployBucketClamp.toDouble)),
+            lit(DeployBucketClamp.toDouble)).cast("long").as("bucket"))
+        .groupBy("bucket", "pred", "actual")
+        .agg(count(lit(1)).as("n"))
+        .cache()
+    }(df => scala.util.Try(df.unpersist()): Unit)
     def cell(p: Boolean, a: Boolean): Column =
       coalesce(sum(when(col("pred") === p && col("actual") === a,
         col("n"))), lit(0L))

@@ -349,9 +349,9 @@ object SqlEntry {
 
   def sqlKmv(spark: SparkSession, dir: String): DataFrame = {
     registerTables(spark, dir)
-    // self-sufficient like registerTables: the driver's Verify session
-    // is a plain builder (no spark.sql.extensions), and register() is
-    // an idempotent createOrReplace either way
+    // self-sufficient like registerTables: register() stays so the
+    // engine functions also work on sessions GraftSession did not build,
+    // and it is an idempotent createOrReplace either way
     graft.GraftExtensions.register(spark)
     spark.sql(qKmvSql)
   }

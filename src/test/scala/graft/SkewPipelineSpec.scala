@@ -134,5 +134,17 @@ class SkewPipelineSpec extends SparkSpec {
     val v = s.sql("SELECT cosine_sim(array(CAST(3.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
       .collect()(0).getDouble(0)
     assert(math.abs(v - 1.0) < 1e-12)
+    assert(s.sql("SELECT size(kmv_sketch(CAST(7 AS BIGINT)))")
+      .collect()(0).getInt(0) === 1)
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(s.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") ===
+      "false")
+    // AQE runs at Spark's defaults, not factory-set values
+    Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.skewJoin.enabled")
+      .foreach(k => assert(s.conf.get(k) === "true", k))
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") === "false")
   }
 }

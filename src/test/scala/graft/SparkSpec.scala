@@ -7,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixtures, UTC, small shuffle partitions).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.getOrCreate(4)
 
   val sf = "/root/testdata/sf0.001"
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Second-JVM writer for VersionedStoreSpec's cross-process OCC test
@@ -16,12 +15,7 @@ import org.apache.spark.sql.functions._
 object StoreContenderMain {
   def main(args: Array[String]): Unit = {
     val Array(root, userId, eventId) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val batch = Seq((userId.toLong, eventId.toLong))
