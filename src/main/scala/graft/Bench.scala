@@ -1,4 +1,7 @@
 package graft
+
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+
 object Bench {
   // JIT sink for the calibration loop result — a volatile write the
   // optimizer cannot prove dead, so the fixed-work loop is never elided
@@ -360,30 +363,22 @@ object Bench {
   val MaterializedAbsCaps: Map[String, Double] = Map(
     "q_substring_scrub" -> 4.0, "q_dedup_report" -> 4.0)
 
-  /** Parsed committed bench record (sf name, per-query seconds, calib
-    * series) via a REAL JSON parser (jackson, bundled with Spark) —
-    * the advice-r14 fix for the regex-plus-first-'}' slice whose
-    * silent parse failure would vacuously disable the materialized
-    * gate. None if the file is absent or unparseable.
+  /** The committed bench record's fields the gates compare against.
+    * Records before round 17 carry no `cpus` field: 0 = unknown.
     */
-  private def readBenchRecord(path: String)
-      : Option[(String, Map[String, Double], Seq[Double], Int)] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)))
-      val sf = root.path("sf").asText("")
-      val qsNode = root.path("queries")
-      val qs = scala.jdk.CollectionConverters
-        .IteratorHasAsScala(qsNode.fields()).asScala
-        .map(e => e.getKey -> e.getValue.asDouble).toMap
-      val calib = scala.jdk.CollectionConverters
-        .IteratorHasAsScala(root.path("calib_series").elements()).asScala
-        .map(_.asDouble).toSeq
-      // records before round 17 carry no cpus field -> 0 = unknown
-      if (sf.isEmpty) None
-      else Some((sf, qs, calib, root.path("cpus").asInt(0)))
-    } catch { case _: Throwable => None }
+  private final case class BenchRecord(sf: String = "",
+      @JsonDeserialize(contentAs = classOf[java.lang.Double])
+      queries: Map[String, Double] = Map.empty,
+      cpus: Int = 0)
+
+  /** Parsed committed bench record via a REAL JSON parser — the
+    * advice-r14 fix for the regex-plus-first-'}' slice whose silent
+    * parse failure would vacuously disable the materialized gate. None
+    * if the file is absent, unparseable or names no sf.
+    */
+  private def readBenchRecord(path: String): Option[BenchRecord] =
+    scala.util.Try(Json.mapper.readValue(new java.io.File(path),
+      classOf[BenchRecord])).toOption.filter(_.sf.nonEmpty)
 
   /** Per-query count-mode seconds from the committed BENCH_LOCAL.json
     * (the audit's reference side); empty map — with a LOUD stderr note,
@@ -391,8 +386,8 @@ object Bench {
     */
   private def countModeReference(sfName: String): Map[String, Double] =
     readBenchRecord("BENCH_LOCAL.json") match {
-      case Some((sf, qs, _, _)) if sf == sfName && qs.nonEmpty => qs
-      case Some((sf, _, _, _)) =>
+      case Some(r) if r.sf == sfName && r.queries.nonEmpty => r.queries
+      case Some(BenchRecord(sf, _, _)) =>
         System.err.println(s"[bench] WARNING: materialized-cost gate is " +
           s"VACUOUS — BENCH_LOCAL.json records sf '$sf', this run is " +
           s"'$sfName'; run count-mode at the same sf first")
@@ -555,7 +550,7 @@ object Bench {
     val diverted = !materializeMode && {
       val runMed = median(probes)
       val sfMismatch = readBenchRecord("BENCH_LOCAL.json") match {
-        case Some((refSf, _, _, _)) if refSf != sfName =>
+        case Some(BenchRecord(refSf, _, _)) if refSf != sfName =>
           System.err.println(s"[bench] NOTE: sf '$sfName' run diverted " +
             s"to BENCH_LOADED.json (committed record is sf '$refSf')")
           true
@@ -565,7 +560,7 @@ object Bench {
         // probe contends less), sails past the loaded-boot gate, and
         // clobbers the record with uniformly slower apples-to-oranges
         // times. cpus=0 (a pre-round-17 record) compares permissively.
-        case Some((_, _, _, refCpus))
+        case Some(BenchRecord(_, _, refCpus))
             if refCpus > 0 && refCpus != nThreads =>
           System.err.println(s"[bench] NOTE: ${nThreads}-thread run " +
             s"diverted to BENCH_LOADED.json (committed record is " +

@@ -58,41 +58,24 @@ object PlanGate {
       measured: Map[String, Map[String, Int]]): Seq[String] =
     (measured.keySet -- committed.keySet).toSeq.sorted
 
+  /** Every committed section: sf name -> query -> operator counts;
+    * empty when the file is absent or unparseable.
+    */
+  def readAll(path: String): Map[String, Map[String, Map[String, Int]]] =
+    scala.util.Try(Json.mapper.readValue[Map[String,
+      Map[String, Map[String, Int]]]](new java.io.File(path)))
+      .getOrElse(Map.empty)
+
   def readCommitted(path: String, sf: String)
       : Map[String, Map[String, Int]] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)))
-      val section = root.path(sf)
-      scala.jdk.CollectionConverters
-        .IteratorHasAsScala(section.fields()).asScala.map { q =>
-          q.getKey -> scala.jdk.CollectionConverters
-            .IteratorHasAsScala(q.getValue.fields()).asScala
-            .map(e => e.getKey -> e.getValue.asInt).toMap
-        }.toMap
-    } catch { case _: Throwable => Map.empty }
+    readAll(path).getOrElse(sf, Map.empty)
 
   /** Merge a run's fingerprints into the artifact's sf section — one
     * line per query for reviewable git diffs.
     */
   def writeCommitted(path: String, sf: String,
       fps: Map[String, Map[String, Int]]): Unit = {
-    val existing: Map[String, Map[String, Map[String, Int]]] =
-      try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)))
-        scala.jdk.CollectionConverters
-          .IteratorHasAsScala(root.fields()).asScala.map { s =>
-            s.getKey -> scala.jdk.CollectionConverters
-              .IteratorHasAsScala(s.getValue.fields()).asScala.map { q =>
-                q.getKey -> scala.jdk.CollectionConverters
-                  .IteratorHasAsScala(q.getValue.fields()).asScala
-                  .map(e => e.getKey -> e.getValue.asInt).toMap
-              }.toMap
-          }.toMap
-      } catch { case _: Throwable => Map.empty }
+    val existing = readAll(path)
     val merged = existing.getOrElse(sf, Map.empty) ++ fps
     val all = existing + (sf -> merged)
     val body = all.toSeq.sortBy(_._1).map { case (s, qs) =>

@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+
 /** The standing scale-regression gate (VERDICT r14 #1): committed
   * per-query scaling exponents live in [[DefaultPath]] (checked in), and
   * every ScaleBench run re-measures its queries and FAILS (exit 3) when
@@ -93,19 +95,25 @@ object ScaleGate {
 
   private def ladderKey(scales: Seq[Int]): String = scales.mkString(",")
 
+  /** One committed ladder: each query's alpha and its endpoint seconds. */
+  final case class Ladder(
+      @JsonDeserialize(contentAs = classOf[java.lang.Double])
+      alphas: Map[String, Double] = Map.empty,
+      @JsonDeserialize(contentAs = classOf[java.lang.Double])
+      tLast: Map[String, Double] = Map.empty)
+
+  /** Every committed ladder, keyed by its scale list; empty when the
+    * file is absent or unparseable.
+    */
+  def readAll(path: String): Map[String, Ladder] =
+    scala.util.Try(Json.mapper.readValue[Map[String, Ladder]](
+      new java.io.File(path))).getOrElse(Map.empty)
+
   /** Committed alphas for one ladder; empty when the file or the
     * ladder's entry is absent (the caller warns — never silent).
     */
   def readCommitted(path: String, scales: Seq[Int]): Map[String, Double] =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)))
-      val entry = root.path(ladderKey(scales)).path("alphas")
-      scala.jdk.CollectionConverters
-        .IteratorHasAsScala(entry.fields()).asScala
-        .map(e => e.getKey -> e.getValue.asDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    readAll(path).get(ladderKey(scales)).map(_.alphas).getOrElse(Map.empty)
 
   /** Commit (merge) a run's measured alphas for its ladder. Alphas are
     * rounded to 2 decimals (the reporting precision); `t_last` endpoint
@@ -114,21 +122,10 @@ object ScaleGate {
   def writeCommitted(path: String, scales: Seq[Int],
       alphas: Map[String, Double], tLast: Map[String, Double]): Unit = {
     val p = java.nio.file.Paths.get(path)
-    val existing: Map[String, Map[String, (Double, Double)]] =
-      try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-        scala.jdk.CollectionConverters
-          .IteratorHasAsScala(root.fields()).asScala.map { lad =>
-            val a = lad.getValue.path("alphas")
-            val t = lad.getValue.path("t_last")
-            lad.getKey -> scala.jdk.CollectionConverters
-              .IteratorHasAsScala(a.fields()).asScala.map { e =>
-                e.getKey -> (e.getValue.asDouble,
-                  t.path(e.getKey).asDouble)
-              }.toMap
-          }.toMap
-      } catch { case _: Throwable => Map.empty }
+    val existing = readAll(path).map { case (lad, l) =>
+      lad -> l.alphas.map { case (n, a) =>
+        n -> (a, l.tLast.getOrElse(n, 0.0)) }
+    }
     val merged = existing.getOrElse(ladderKey(scales), Map.empty) ++
       alphas.map { case (n, a) => n -> (a, tLast.getOrElse(n, 0.0)) }
     val all = existing + (ladderKey(scales) -> merged)

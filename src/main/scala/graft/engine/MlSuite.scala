@@ -139,10 +139,11 @@ object MlSuite {
     * classifier fit iterates the train frame — without the memo each query
     * re-runs the whole preparation. The post-selection frames are tiny
     * (|customers| rows × selected-feature vectors), so keeping them cached
-    * for the session costs ~nothing; [[SessionMemo]] evicts on session end.
+    * for the session costs ~nothing; [[SessionMemo]] evicts on session end
+    * and unpersists both frames.
     */
   def prepared(spark: SparkSession, dir: String): PreparedMl =
-    SessionMemo.getOrCompute(spark, s"ml.prepare:$dir") {
+    SessionMemo.getOrComputeCleanup(spark, s"ml.prepare:$dir") {
       // the two StringIndexer fits, the OHE fit, the RFormula fit, and the
       // formula transform each traverse the labeled basetable — served
       // from the session-wide [[labeledCached]] memo (r21: the confusion
@@ -262,6 +263,9 @@ object MlSuite {
       // shared with the deployment confusion reads
       formed.unpersist()
       PreparedMl(trainS, testS, statistic, selIdx.length, nTotal)
+    } { p =>
+      scala.util.Try(p.train.unpersist()): Unit
+      scala.util.Try(p.test.unpersist()): Unit
     }
 
   /** M4–M6 frames only (the common call shape). */

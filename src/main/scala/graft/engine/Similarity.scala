@@ -356,12 +356,13 @@ object Similarity {
     * path scores new vectors against the index's own quantizer rather
     * than refitting over data that includes them. nCells rows, cached.
     */
-  private def corpusCentroids(spark: SparkSession, dir: String): DataFrame =
-    SessionMemo.getOrCompute(spark, s"sim.corpusCent:$dir") {
+  private[graft] def corpusCentroids(spark: SparkSession,
+      dir: String): DataFrame =
+    SessionMemo.getOrComputeCleanup(spark, s"sim.corpusCent:$dir") {
       centroidsOf(Tables.embeddings(spark, dir)
         .filter(col("vec_id") >= NQueryVecs)
         .withColumn("cell", col("label"))).cache()
-    }
+    }(df => scala.util.Try(df.unpersist()): Unit)
 
   /** Persisted corpus cell INDEX — the artifact a production vector store
     * keeps BETWEEN ingest batches. Corpus vectors are assigned to their
@@ -664,15 +665,15 @@ object Similarity {
     * [[embedQuantize]] and [[embedProject]] derive their codes from it,
     * so one corpus pass serves both queries in a sweep (64 cached rows).
     */
-  private def dimStats(spark: SparkSession, dir: String): DataFrame =
-    SessionMemo.getOrCompute(spark, s"sim.dimStats:$dir") {
+  private[graft] def dimStats(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.getOrComputeCleanup(spark, s"sim.dimStats:$dir") {
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("pos"), col("col").cast("double").as("v"))
         .groupBy("pos")
         .agg(min(col("v")).as("dmin"), max(col("v")).as("dmax"))
         .cache()
-    }
+    }(df => scala.util.Try(df.unpersist()): Unit)
 
   def embedQuantize(spark: SparkSession, dir: String): DataFrame = {
     val dims = Tables.embeddings(spark, dir)

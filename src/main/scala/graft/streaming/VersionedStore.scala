@@ -6,6 +6,13 @@ import org.apache.spark.sql.types._
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
+import scala.collection.immutable.SortedSet
+
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonPropertyOrder}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+
+import graft.Json
+
 /** Generational (time-travel) keyed store — the versioned sibling of
   * [[StreamingQueries.streamUpsert]]'s bucket-partitioned MERGE store
   * (VERDICT r15 #5): where the destructive store overwrites touched
@@ -195,7 +202,9 @@ object VersionedStore {
     * columns the writer's files contain; a column absent from the map
     * (added by later evolution) is UNKNOWN, not zero.
     */
-  final case class BucketCounts(rows: Long, nulls: Map[String, Long])
+  final case class BucketCounts(rows: Long,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
+      nulls: Map[String, Long])
 
   /** Full-snapshot manifest for one generation: every live bucket mapped
     * to the generation whose dir holds its current data, plus the commit
@@ -238,15 +247,36 @@ object VersionedStore {
     * row-group skipping the clustering buys does not silently degrade
     * between OPTIMIZE runs; a plain unclustered `compact()` honestly
     * resets it to Nil).
+    *
+    * On disk (`graft.Json.mapper`) a manifest is one JSON object whose
+    * keys are these field names in snake_case, in `@JsonPropertyOrder`
+    * order; map entries are sorted by key, `removed` and `clustered_by`
+    * are omitted when empty, and the schema is Spark's `StructType`
+    * JSON. A reader ignores unknown fields and reads an absent one as
+    * its default parameter value. `src/test/resources/manifest` pins
+    * the bytes.
     */
-  final case class Manifest(gen: Int, buckets: Map[Long, Int],
+  @JsonPropertyOrder(Array("gen", "kind", "commit_ts", "schema",
+    "writer_cols", "buckets", "stats", "removed", "writer_dirs", "counts",
+    "clustered_by"))
+  final case class Manifest(gen: Int,
+      @JsonDeserialize(keyAs = classOf[java.lang.Long],
+        contentAs = classOf[java.lang.Integer])
+      buckets: Map[Long, Int],
       commitTs: Long = -1L, kind: String = "ingest",
       schema: StructType = payloadSchema,
+      @JsonDeserialize(keyAs = classOf[java.lang.Integer])
       writerCols: Map[Int, Seq[String]] = Map.empty,
+      @JsonDeserialize(keyAs = classOf[java.lang.Long])
       stats: Map[Long, Map[String, (String, String)]] = Map.empty,
-      removed: Set[Long] = Set.empty,
+      @JsonInclude(JsonInclude.Include.NON_EMPTY)
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
+      removed: SortedSet[Long] = SortedSet.empty,
+      @JsonDeserialize(keyAs = classOf[java.lang.Integer])
       writerDirs: Map[Int, String] = Map.empty,
+      @JsonDeserialize(keyAs = classOf[java.lang.Long])
       counts: Map[Long, BucketCounts] = Map.empty,
+      @JsonInclude(JsonInclude.Include.NON_EMPTY)
       clusteredBy: Seq[String] = Nil) {
     /** Snapshot read schema as of this generation. */
     def snapshotSchema: StructType = StructType(schema.fields ++ Seq(
@@ -378,104 +408,11 @@ object VersionedStore {
     val buf = new Array[Byte](len)
     val in = fs.open(p)
     try in.readFully(0, buf) finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(buf)
-    val buckets = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("buckets").fields()).asScala
-      .map(e => e.getKey.toLong -> e.getValue.asInt).toMap
-    val schema =
-      if (node.has("schema"))
-        DataType.fromJson(node.get("schema").toString)
-          .asInstanceOf[StructType]
-      else payloadSchema
-    val writerCols = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("writer_cols").fields()).asScala
-      .map { e =>
-        e.getKey.toInt -> scala.jdk.CollectionConverters
-          .IteratorHasAsScala(e.getValue.elements()).asScala
-          .map(_.asText).toSeq
-      }.toMap
-    val stats = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("stats").fields()).asScala
-      .map { e =>
-        e.getKey.toLong -> scala.jdk.CollectionConverters
-          .IteratorHasAsScala(e.getValue.fields()).asScala
-          .map(c => c.getKey ->
-            (c.getValue.get(0).asText, c.getValue.get(1).asText))
-          .toMap
-      }.toMap
-    val removed = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("removed").elements()).asScala
-      .map(_.asLong).toSet
-    val writerDirs = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("writer_dirs").fields()).asScala
-      .map(e => e.getKey.toInt -> e.getValue.asText).toMap
-    val counts = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("counts").fields()).asScala
-      .map { e =>
-        val nulls = scala.jdk.CollectionConverters
-          .IteratorHasAsScala(e.getValue.path("nulls").fields()).asScala
-          .map(c => c.getKey -> c.getValue.asLong).toMap
-        e.getKey.toLong ->
-          BucketCounts(e.getValue.path("rows").asLong, nulls)
-      }.toMap
-    val clusteredBy = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(node.path("clustered_by").elements()).asScala
-      .map(_.asText).toSeq
-    Manifest(node.path("gen").asInt, buckets,
-      node.path("commit_ts").asLong(-1L),
-      if (node.has("kind")) node.get("kind").asText else "ingest",
-      schema, writerCols, stats, removed, writerDirs, counts, clusteredBy)
+    Json.mapper.readValue(buf, classOf[Manifest])
   }
 
-  private def manifestBytes(m: Manifest): Array[Byte] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
-    root.put("gen", m.gen)
-    root.put("kind", m.kind)
-    root.put("commit_ts", m.commitTs)
-    root.set[com.fasterxml.jackson.databind.node.ObjectNode]("schema",
-      om.readTree(m.schema.json))
-    val wc = root.putObject("writer_cols")
-    m.writerCols.toSeq.sortBy(_._1).foreach { case (g, cols) =>
-      val arr = wc.putArray(g.toString)
-      cols.foreach(arr.add)
-    }
-    val bk = root.putObject("buckets")
-    m.buckets.toSeq.sortBy(_._1).foreach { case (b, g) =>
-      bk.put(b.toString, g): Unit
-    }
-    val st = root.putObject("stats")
-    m.stats.toSeq.sortBy(_._1).foreach { case (b, cols) =>
-      val cn = st.putObject(b.toString)
-      cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-        val arr = cn.putArray(c)
-        arr.add(lo); arr.add(hi): Unit
-      }
-    }
-    if (m.removed.nonEmpty) {
-      val rm = root.putArray("removed")
-      m.removed.toSeq.sorted.foreach(rm.add)
-    }
-    val wd = root.putObject("writer_dirs")
-    m.writerDirs.toSeq.sortBy(_._1).foreach { case (g, tok) =>
-      wd.put(g.toString, tok): Unit
-    }
-    val ct = root.putObject("counts")
-    m.counts.toSeq.sortBy(_._1).foreach { case (b, bc) =>
-      val bn = ct.putObject(b.toString)
-      bn.put("rows", bc.rows)
-      val nn = bn.putObject("nulls")
-      bc.nulls.toSeq.sortBy(_._1).foreach { case (c, n) =>
-        nn.put(c, n): Unit
-      }
-    }
-    if (m.clusteredBy.nonEmpty) {
-      val cb = root.putArray("clustered_by")
-      m.clusteredBy.foreach(cb.add)
-    }
-    (om.writeValueAsString(root) + "\n").getBytes("UTF-8")
-  }
+  private def manifestBytes(m: Manifest): Array[Byte] =
+    (Json.mapper.writeValueAsString(m) + "\n").getBytes("UTF-8")
 
   /** Write manifest `m` create-if-absent — THE commit point. Throws on
     * an already-committed generation (the caller treats it as a lost
@@ -1147,7 +1084,7 @@ object VersionedStore {
     val counts = (base.counts -- touched) ++ touchedCounts
     Manifest(g, buckets, resolveTs(base.commitTs, commitTs), kind,
       schema, writerCols, stats.filter { case (b, _) => buckets.contains(b) },
-      removed = removed,
+      removed = SortedSet.from(removed),
       // writer-dir tokens carry forward for every referenced generation
       // (vacuum-proof path resolution, like writerCols); generation g's
       // own token is injected by the claim itself

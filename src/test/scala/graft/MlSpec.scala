@@ -242,4 +242,22 @@ class MlSpec extends SparkSpec {
         s"frozen scorer agreement $agree/$n below 95%")
     } finally { score.unpersist(): Unit }
   }
+
+  test("session eviction unpersists the memoized Similarity and ML frames") {
+    SparkEntry.queries("q_embed_quantize")(spark, sf)
+    SparkEntry.queries("q_ann_incremental")(spark, sf)
+    val p = MlSuite.prepared(spark, sf)
+    val frames = Seq(
+      "dimStats" -> graft.engine.Similarity.dimStats(spark, sf),
+      "corpusCentroids" -> graft.engine.Similarity.corpusCentroids(spark, sf),
+      "prepared.train" -> p.train, "prepared.test" -> p.test)
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      spark.sharedState.cacheManager.lookupCachedData(
+        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
+    frames.foreach { case (n, df) => assert(cached(df), s"$n is not cached") }
+    graft.engine.SessionMemo.evictSession(spark)
+    frames.foreach { case (n, df) =>
+      assert(!cached(df), s"$n stays cached after eviction")
+    }
+  }
 }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.SortedSet
+
 import graft.streaming.{StreamingQueries, VersionedStore}
 
 /** Generation isolation, manifest carry-forward, immutability, and the
@@ -35,6 +37,89 @@ class VersionedStoreSpec extends SparkSpec {
       .select("user_id", "last_event_id", "gen")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .toSeq.sorted
+
+  /** Every manifest field populated: 13 writer generations and 16
+    * buckets (so "10" must sort after "9"), six removed buckets, a
+    * two-key cluster order, and stat strings that need JSON escapes or
+    * are non-ASCII.
+    */
+  private val goldenManifest: VersionedStore.Manifest = {
+    import org.apache.spark.sql.types._
+    val base = Seq(
+      StructField("user_id", LongType), StructField("last_ts", TimestampType),
+      StructField("last_event_id", LongType),
+      StructField("last_event_type", StringType),
+      StructField("last_value", DoubleType),
+      StructField("n_versions", LongType))
+    val note = StructField("note", StringType, nullable = true,
+      new MetadataBuilder().putString("comment", "café \"ok\" ✓").build())
+    val gens = 0 to 12
+    val buckets = (0L to 15L).map(b => b -> (b % 13).toInt).toMap
+    VersionedStore.Manifest(12, buckets, commitTs = 1760000000123L,
+      kind = "update", schema = StructType(base :+ note),
+      writerCols = gens.map(g => g ->
+        (if (g < 6) base else base :+ note).map(_.name)).toMap,
+      stats = buckets.keys.map(b => b -> Map(
+        "user_id" -> (s"${b * 10}", s"${b * 10 + 9}"),
+        "last_event_type" -> ("a\tb\u0001", "Zürich \"✓\" \\ end"),
+        "note" -> ("", "日本語"))).toMap,
+      removed = SortedSet(105L, 16L, 99L, 20L, 17L, 21L),
+      writerDirs = gens.map(g => g -> f"tok-$g%02d-${g * 7919}%x").toMap,
+      counts = buckets.keys.map(b => b -> VersionedStore.BucketCounts(
+        100L + b, Map("last_value" -> b, "note" -> 0L,
+          "last_event_type" -> 1L))).toMap,
+      clusteredBy = Seq("user_id", "last_ts"))
+  }
+
+  /** Put `bytes` at generation `gen`'s manifest path under a fresh root. */
+  private def manifestRoot(tag: String, gen: Int, bytes: Array[Byte]) = {
+    val root = freshRoot(tag)
+    val dir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "_manifest"))
+    java.nio.file.Files.write(dir.resolve(f"gen-$gen%05d.json"), bytes)
+    root
+  }
+
+  test("the manifest on-disk format is pinned by a golden file") {
+    val golden = {
+      val in = getClass.getResourceAsStream("/manifest/gen-00012.json")
+      try in.readAllBytes() finally in.close()
+    }
+    val m = VersionedStore.readManifest(
+      manifestRoot("golden-read", 12, golden), 12)
+    assert(m === goldenManifest)
+    // every number unboxes as its declared type: cooperative equality
+    // alone would let an erased Integer pass for a Long
+    assert(m.buckets.keys.sum + m.buckets.values.sum + m.removed.sum +
+      m.writerCols.keys.sum + m.writerDirs.keys.sum + m.stats.keys.sum +
+      m.counts.keys.sum + m.counts.values.map(_.nulls.values.sum).sum > 0)
+    val out = freshRoot("golden-write")
+    VersionedStore.writeManifest(out, m)
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
+      .get(out, "_manifest", "gen-00012.json")), "UTF-8") ===
+      new String(golden, "UTF-8"))
+    // a legacy manifest reads every absent field as its default
+    val legacy = """{"gen":0,"buckets":{"0":0}}""".getBytes("UTF-8")
+    assert(VersionedStore.readManifest(manifestRoot("golden-legacy", 0,
+      legacy), 0) === VersionedStore.Manifest(0, Map(0L -> 0)))
+    // ... and writes every map even when empty, but no empty removed or
+    // clustered_by
+    val minimal = freshRoot("golden-minimal")
+    VersionedStore.writeManifest(minimal, VersionedStore.Manifest(0,
+      Map(0L -> 0)))
+    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file
+      .Paths.get(minimal, "_manifest", "gen-00000.json")), "UTF-8")
+    assert(text.startsWith(
+      """{"gen":0,"kind":"ingest","commit_ts":-1,"schema":{"""), text)
+    assert(text.endsWith(""""writer_cols":{},"buckets":{"0":0},""" +
+      """"stats":{},"writer_dirs":{},"counts":{}}""" + "\n"), text)
+    // a field this reader does not know is ignored
+    val future = """{"gen":1,"kind":"compact","buckets":{"5":1},""" +
+      """"future_field":{"x":[1,2]}}"""
+    assert(VersionedStore.readManifest(manifestRoot("golden-unknown", 1,
+      future.getBytes("UTF-8")), 1) ===
+      VersionedStore.Manifest(1, Map(5L -> 1), kind = "compact"))
+  }
 
   test("snapshots are generation-isolated and manifests carry forward") {
     val root = freshRoot("iso")
@@ -1671,8 +1756,8 @@ class VersionedStoreSpec extends SparkSpec {
           "sun.security.action", "sun.util.calendar")
           .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
         val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
-          addOpens ++ Seq("-Xmx2g", "-Dspark.ui.enabled=false", "-cp",
-            cp, "graft.StoreContenderMain", root, "35", "21")
+          addOpens ++ Seq("-Xmx2g", "-cp", cp, "graft.StoreContenderMain",
+            root, "35", "21")
         val proc = new ProcessBuilder(cmd: _*)
           .redirectErrorStream(true).start()
         val sc = new java.util.Scanner(proc.getInputStream)
