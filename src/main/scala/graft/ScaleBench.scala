@@ -81,15 +81,14 @@ object ScaleBench {
     // operator's data term beyond it
     "q_stream_join", "q_stream_event_window", "q_stream_sessions",
     "q_stream_dedup",
-    // streaming RTBF: the upsert's microbatch MERGE floor plus one
-    // tombstone batch (deletion-set-sized) — expect q_stream_upsert's
-    // flat-floor line
+    // streaming RTBF: the upsert's replay (one store generation per
+    // microbatch) plus one tombstone generation (deletion-set-sized) —
+    // expect q_stream_upsert's flat-floor line
     "q_stream_forget",
-    // versioned (copy-on-write) store: per-generation cost is delta +
-    // touched-bucket sized like the destructive MERGE, minus its
-    // localCheckpoint barrier (a generation never overwrites what it
-    // reads); the snapshot read is manifest-resolved pruning over
-    // <=Buckets dirs — expect the q_stream_upsert microbatch floor
+    // versioned (copy-on-write) store read: per-generation cost is
+    // delta + touched-bucket sized, and the snapshot read is
+    // manifest-resolved pruning over <=Buckets dirs — expect the
+    // q_stream_upsert microbatch floor
     "q_time_travel",
     // the RTBF audit adds one tombstone generation and reads TWO
     // snapshots (pre/post) through the same manifest pruning — expect

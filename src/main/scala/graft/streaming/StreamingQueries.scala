@@ -218,126 +218,29 @@ object StreamingQueries {
     s2.table(table)
   }
 
-  /** Bucket count of the upsert target store. At fixture scale 16 keeps
-    * partitions non-trivial; a production deployment sizes this to its
-    * write parallelism (hundreds–thousands) — the touched-bucket collect
-    * below stays bounded by THIS constant, never by data volume.
-    */
-  val UpsertBuckets = 16
-
-  /** Files the upsert spool splits the fixture into — one microbatch per
-    * file (`maxFilesPerTrigger=1`), so the merge loop is exercised across
-    * a REAL multi-batch replay instead of one batch swallowing the table.
-    */
-  private val UpsertSpoolFiles = 4
-
-  private val upsertSpoolSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
-  private val upsertStoreSchema = StructType(Seq(
-    StructField("user_id", LongType),
-    StructField("last_ts", TimestampType),
-    StructField("last_event_id", LongType),
-    StructField("last_event_type", StringType),
-    StructField("last_value", DoubleType),
-    StructField("n_versions", LongType),
-    StructField("bucket", LongType)))
-
-  /** Streaming keyed upsert — the SINK half of a production ingest: each
-    * microbatch MERGEs into a bucket-partitioned parquet store through
-    * `foreachBatch` + dynamic partition overwrite, the plain-Spark
-    * expression of the Delta/Hudi "MERGE with partition pruning" shape.
-    * Per batch: bucket the arriving rows (`pmod(user_id, UpsertBuckets)`),
-    * collect the ≤[[UpsertBuckets]] touched bucket ids (bounded by the
-    * layout constant, not data), read ONLY those partitions back from the
-    * store (partition-pruned scan), merge latest-per-user under the total
-    * order (ts, event_id) while summing version counts, and overwrite
-    * JUST the touched partitions (`partitionOverwriteMode=dynamic`). The
-    * `localCheckpoint` materializes the merged result BEFORE the write so
-    * the job never overwrites files its own scan is still reading.
+  /** Streaming keyed upsert (`q_stream_upsert`) — the SINK half of a
+    * production ingest: the events replay as [[TimeTravelGens]]
+    * microbatches through `foreachBatch` into a [[VersionedStore]]
+    * ([[replayToStore]]), one copy-on-write generation per batch. Each
+    * batch reads only its touched buckets, merges latest-per-user under
+    * the total order (ts, event_id) while summing version counts, stages
+    * the merged buckets in a fresh generation dir and commits by
+    * manifest — the Delta/Hudi "MERGE with partition pruning" shape with
+    * an atomic commit point, so a crash mid-batch leaves the previous
+    * generation intact.
     *
     * Latest-per-key under a total order is associative and commutative,
-    * so the drained store is byte-identical to the batch argmax no matter
-    * how the replay chunks into microbatches — which makes the sink fully
+    * so the drained store equals the batch argmax no matter how the
+    * replay chunks into microbatches — which makes the sink fully
     * oracle-checkable, and `n_versions` additionally proves every event
     * was applied exactly once. Per-batch cost scales with batch size plus
-    * the touched buckets' store partitions — never with corpus size.
+    * the touched buckets — never with corpus size. Every call replays
+    * into its own fresh store: the query times a full streaming ingest.
     */
-  def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = sizedStreamSession(spark, dir)
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val spool = graft.engine.TempArtifacts.tempDir("graft-upsert-spool")
-    val target = graft.engine.TempArtifacts.tempDir("graft-upsert-store")
-    graft.engine.Tables.events(s2, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .repartition(UpsertSpoolFiles)
-      .write.mode("overwrite").parquet(spool)
-    driveUpsertStream(s2, spool, target)
-    spark.read.schema(upsertStoreSchema).parquet(target)
-      .select(col("user_id"), col("bucket"), col("last_ts"),
-        col("last_event_id"), col("last_event_type"),
-        round(col("last_value").cast("decimal(12,2)").cast("double"), 2)
-          .as("last_value"),
-        col("n_versions"))
-  }
-
-  /** The microbatch MERGE loop behind [[streamUpsert]] AND
-    * [[streamForget]] (they share one store discipline — RTBF rides the
-    * same associative merge as ingest): replays the spool one file per
-    * trigger through the bucket-partitioned latest-per-key merge into
-    * `target`.
-    */
-  private def driveUpsertStream(s2: SparkSession, spool: String,
-      target: String): Unit = {
-    val merge = (batch: DataFrame, _: Long) => {
-      val sp = batch.sparkSession
-      sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      val batchRows = batch.select(
-        col("user_id"),
-        col("ts").as("last_ts"),
-        col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"),
-        col("value").as("last_value"),
-        lit(1L).as("n_versions"),
-        // a null key must still route to a REAL bucket — a null
-        // partition value would break the touched-bucket collect and
-        // the partition layout alike
-        VersionedStore.bucketOf(col("user_id")).as("bucket"))
-      val touched = batchRows.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val existing = sp.read.schema(upsertStoreSchema).parquet(target)
-        .filter(col("bucket").isin(touched: _*))
-      val ord = struct(col("last_ts"), col("last_event_id"))
-      val merged = existing.unionByName(batchRows)
-        .groupBy("user_id", "bucket")
-        .agg(
-          max_by(struct(col("last_ts"), col("last_event_id"),
-            col("last_event_type"), col("last_value")), ord).as("m"),
-          sum(col("n_versions")).as("n_versions"))
-        .select(col("user_id"), col("m.last_ts").as("last_ts"),
-          col("m.last_event_id").as("last_event_id"),
-          col("m.last_event_type").as("last_event_type"),
-          col("m.last_value").as("last_value"),
-          col("n_versions"), col("bucket"))
-        // route each bucket to one task before the partitionBy write:
-        // without this every merge shuffle partition writes its own file
-        // into every touched bucket dir (tasks × buckets tiny files per
-        // microbatch), and the next batch's partition-pruned read-back
-        // pays the listing + open cost (guide §6)
-        .repartition(col("bucket"))
-        .localCheckpoint()
-      merged.write.mode("overwrite").partitionBy("bucket").parquet(target)
-    }
-    val q = s2.readStream.schema(upsertSpoolSchema)
-      .option("maxFilesPerTrigger", 1).parquet(spool)
-      .writeStream.foreachBatch(merge).start()
-    q.processAllAvailable()
-    q.stop(): Unit
-  }
+  def streamUpsert(spark: SparkSession, dir: String): DataFrame =
+    latestRows(spark, replayToStore(spark, dir,
+      graft.engine.TempArtifacts.tempDir("graft-upsert-store"),
+      withTombstones = false))
 
   /** Every user_id divisible by this is served a right-to-be-forgotten
     * tombstone in [[streamForget]] — deterministic, so the oracle
@@ -347,10 +250,10 @@ object StreamingQueries {
 
   /** Tombstone marker + timestamp: the ts sits ABOVE every possible
     * event timestamp, so a tombstone always wins the latest-per-key
-    * argmax — deletion dominates no matter which microbatch delivers it,
-    * which is exactly what makes the drained store TOMBSTONE-ORDER-
-    * INVARIANT (proved in MultimodalStreamingSpec by replaying with the
-    * tombstone file first vs last).
+    * argmax — deletion dominates no matter which generation delivers it,
+    * which is exactly what makes the store TOMBSTONE-ORDER-INVARIANT
+    * (proved in MultimodalStreamingSpec by committing the tombstones
+    * before the events).
     */
   val TombstoneType = "__forget"
   private val TombstoneTs =
@@ -358,75 +261,37 @@ object StreamingQueries {
 
   /** Streaming right-to-be-forgotten (`q_stream_forget`, VERDICT r14
     * #6 — the streaming half of `q_index_forget`, connecting governance
-    * to live ingest): deletion requests arrive ON THE STREAM as
-    * tombstone rows and ride [[streamUpsert]]'s bucket-partitioned
-    * foreachBatch MERGE unchanged — delete-on-match is expressed INSIDE
-    * the associative latest-per-key argmax by giving tombstones the
-    * maximal timestamp, so the merge erases the user's payload the
-    * moment the tombstone's batch lands (the store row collapses to the
-    * tombstone constants; the touched partition is physically
-    * rewritten). The read-back drops tombstone winners, leaving exactly
-    * the retained users' latest rows. Oracle = the batch latest-per-key
-    * over retained keys. Per-batch cost is batch size + touched
-    * partitions, and a deletion batch costs the same as any ingest
-    * batch — RTBF without a second store discipline.
+    * to live ingest): deletion requests arrive ON THE STREAM as one
+    * trailing tombstone batch and ride [[streamUpsert]]'s replay
+    * unchanged — delete-on-match is expressed INSIDE the associative
+    * latest-per-key argmax by giving tombstones the maximal timestamp,
+    * so the tombstone generation rewrites each touched bucket with the
+    * user's payload collapsed to the tombstone constants (older
+    * generations keep it until [[VersionedStore.vacuum]] drops them —
+    * the spec vacuums and proves the payload is physically gone). The
+    * read-back drops tombstone winners, leaving exactly the retained
+    * users' latest rows. Oracle = the batch latest-per-key over retained
+    * keys. A deletion batch costs the same as any ingest batch — RTBF
+    * without a second store discipline.
     */
   def streamForget(spark: SparkSession, dir: String): DataFrame =
-    streamForgetAt(spark, dir, tombstonesFirst = false)
-
-  private[graft] def streamForgetAt(spark: SparkSession, dir: String,
-      tombstonesFirst: Boolean,
-      targetOverride: Option[String] = None): DataFrame = {
-    val s2 = sizedStreamSession(spark, dir)
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val spool = graft.engine.TempArtifacts.tempDir("graft-forget-spool")
-    val target = targetOverride.getOrElse(
+    streamForgetInto(spark, dir,
       graft.engine.TempArtifacts.tempDir("graft-forget-store"))
-    def writeEvents(): Unit =
-      graft.engine.Tables.events(s2, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .repartition(UpsertSpoolFiles)
-        .write.mode("append").parquet(spool)
-    // tombstones: one per to-be-forgotten user (negative event_id keeps
-    // the id space disjoint), staged to a side dir and MOVED into the
-    // spool under a controlled name so the replay-order contrast in the
-    // spec is deterministic
-    def writeTombstones(): Unit = {
-      val stage = graft.engine.TempArtifacts.tempDir("graft-forget-stage")
-      graft.engine.Tables.events(s2, dir)
-        .select("user_id").distinct()
-        .filter(pmod(col("user_id"), lit(ForgetMod)) === 0)
-        .select((-col("user_id")).as("event_id"),
-          lit(TombstoneTs).as("ts"), col("user_id"),
-          lit(TombstoneType).as("event_type"),
-          lit(0.0).as("value"))
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val name = if (tombstonesFirst) "0-tombstones.parquet"
-        else "z-tombstones.parquet"
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(spool, name)): Unit
-      graft.engine.TempArtifacts.delete(stage)
-    }
-    if (tombstonesFirst) { writeTombstones(); writeEvents() }
-    else { writeEvents(); writeTombstones() }
-    driveUpsertStream(s2, spool, target)
-    spark.read.schema(upsertStoreSchema).parquet(target)
-      .filter(col("last_event_type") =!= TombstoneType)
-      .select(col("user_id"), col("bucket"), col("last_ts"),
-        col("last_event_id"), col("last_event_type"),
-        round(col("last_value").cast("decimal(12,2)").cast("double"), 2)
-          .as("last_value"),
-        col("n_versions"))
-  }
 
-  /** Raw store read-back for the spec's physical-erasure assertion (no
-    * tombstone filter — the spec must see what the store retains).
+  /** [[streamForget]] replayed into the store at `root`, which the spec
+    * then inspects (vacuum + raw file read).
     */
-  private[graft] def forgetStoreRaw(spark: SparkSession,
-      target: String): DataFrame =
-    spark.read.schema(upsertStoreSchema).parquet(target)
+  private[graft] def streamForgetInto(spark: SparkSession, dir: String,
+      root: String): DataFrame =
+    latestRows(spark, replayToStore(spark, dir, root, withTombstones = true))
+      .filter(col("last_event_type") =!= TombstoneType)
+
+  /** The latest snapshot of a replayed store in the streaming sinks'
+    * projection: [[snapCols]] without the `gen` metadata column.
+    */
+  private def latestRows(spark: SparkSession, root: String): DataFrame =
+    VersionedStore.readAsOf(spark, root, VersionedStore.latestGen(root).get)
+      .select(col("user_id") +: col("bucket") +: payloadCols: _*)
 
   // ---- versioned store: time travel + retention-then-erasure RTBF ----
 
@@ -464,11 +329,14 @@ object StreamingQueries {
     * which orders new files by mtime — replays batch 0, 1, ... in order;
     * optionally a trailing tombstone batch (`__batch` = nBatches) for
     * the RTBF lifecycle. Each file also CARRIES its batch id so the
-    * merge loop can verify delivery order instead of trusting it.
+    * merge loop can verify delivery order instead of trusting it. The
+    * spool and stage dirs are keyed by a per-call nonce, so concurrent
+    * replays never delete each other's dirs.
     */
   private def writeVersionedSpool(s2: SparkSession, dir: String,
       nBatches: Int, withTombstones: Boolean): String = {
-    val spool = graft.engine.TempArtifacts.tempDir("graft-vstore-spool")
+    val tag = runSeq.incrementAndGet()
+    val spool = graft.engine.TempArtifacts.tempDir(s"graft-vstore-spool-$tag")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("ts"), col("event_id"))
     val batched = graft.engine.Tables.events(s2, dir)
@@ -501,7 +369,7 @@ object StreamingQueries {
     // rows < nBatches cases); backfill missing ids with empty
     // schema-correct files via the per-batch write path
     def backfill(df: DataFrame, b: Int): Unit = {
-      val stage = graft.engine.TempArtifacts.tempDir("graft-vstore-stage")
+      val stage = graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
       df.limit(0).coalesce(1).write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -519,7 +387,7 @@ object StreamingQueries {
     // write emits exactly one file per batch value, which `place` moves
     // under the replay's mtime order; the one-file contract is
     // require()d, not assumed.
-    val stage = graft.engine.TempArtifacts.tempDir("graft-vstore-stage")
+    val stage = graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
     batched.withColumn("__bp", col("__batch"))
       .coalesce(1).write.mode("overwrite")
       .partitionBy("__bp").parquet(stage)
@@ -534,7 +402,8 @@ object StreamingQueries {
           lit(TombstoneTs).as("ts"), col("user_id"),
           lit(TombstoneType).as("event_type"), lit(0.0).as("value"),
           lit(nBatches).cast("int").as("__batch"))
-      val tstage = graft.engine.TempArtifacts.tempDir("graft-vstore-stage")
+      val tstage =
+        graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
       tombstones.withColumn("__bp", col("__batch"))
         .coalesce(1).write.mode("overwrite")
         .partitionBy("__bp").parquet(tstage)
@@ -544,8 +413,13 @@ object StreamingQueries {
     spool
   }
 
-  private val versionedSpoolSchema = StructType(
-    upsertSpoolSchema.fields :+ StructField("__batch", IntegerType))
+  private val versionedSpoolSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("__batch", IntegerType)))
 
   /** Replay a versioned spool through foreachBatch into the
     * copy-on-write store: one file per trigger, one GENERATION per
@@ -592,6 +466,22 @@ object StreamingQueries {
     q.stop(): Unit
   }
 
+  /** Replay the events table into the store at `root` as
+    * [[TimeTravelGens]] generations, plus one trailing tombstone
+    * generation when `withTombstones` ([[writeVersionedSpool]] →
+    * [[driveVersionedStream]]), and return `root`. The one streaming
+    * ingest behind [[streamUpsert]], [[streamForget]] and
+    * [[sharedForgetStore]]; the consumed spool is deleted.
+    */
+  private def replayToStore(spark: SparkSession, dir: String, root: String,
+      withTombstones: Boolean): String = {
+    val s2 = sizedStreamSession(spark, dir)
+    val spool = writeVersionedSpool(s2, dir, TimeTravelGens, withTombstones)
+    try driveVersionedStream(s2, spool, root)
+    finally graft.engine.TempArtifacts.delete(spool)
+    root
+  }
+
   /** ONE tombstone-bearing versioned store per (session, fixture dir),
     * shared by every read-only versioned-store consumer
     * (`q_time_travel`, `q_forget_audit`, `q_change_feed` — they consume
@@ -607,13 +497,9 @@ object StreamingQueries {
   private def sharedForgetStore(spark: SparkSession, dir: String): String =
     graft.engine.SessionMemo.getOrComputeCleanup(spark,
       s"graft:vstore:$dir") {
-      val s2 = sizedStreamSession(spark, dir)
-      val root = graft.engine.TempArtifacts.tempDir(
-        s"graft-vstore-shared-${dir.hashCode.toHexString}")
-      val spool = writeVersionedSpool(s2, dir, TimeTravelGens,
+      replayToStore(spark, dir, graft.engine.TempArtifacts.tempDir(
+        s"graft-vstore-shared-${dir.hashCode.toHexString}"),
         withTombstones = true)
-      driveVersionedStream(s2, spool, root)
-      root
     }(root => graft.engine.TempArtifacts.delete(root))
 
   /** Time-travel read (`q_time_travel`, VERDICT r15 #5): read the
@@ -633,13 +519,16 @@ object StreamingQueries {
   }
 
   /** Snapshot-read projection shared by the versioned-store consumers:
-    * payload + the manifest metadata columns (`gen`, `bucket`), value
-    * rounded through the exact-decimal discipline every money/value
-    * oracle in the repo uses.
+    * key + the manifest metadata columns (`bucket`, `gen`) + payload.
     */
-  private def snapCols: Seq[org.apache.spark.sql.Column] = Seq(
-    col("user_id"), col("bucket"), col("gen"), col("last_ts"),
-    col("last_event_id"), col("last_event_type"),
+  private def snapCols: Seq[org.apache.spark.sql.Column] =
+    Seq(col("user_id"), col("bucket"), col("gen")) ++ payloadCols
+
+  /** The payload columns of a snapshot read, value rounded through the
+    * exact-decimal discipline every money/value oracle in the repo uses.
+    */
+  private def payloadCols: Seq[org.apache.spark.sql.Column] = Seq(
+    col("last_ts"), col("last_event_id"), col("last_event_type"),
     round(col("last_value").cast("decimal(12,2)").cast("double"), 2)
       .as("last_value"),
     col("n_versions"))
@@ -971,9 +860,9 @@ object StreamingQueries {
 
   /** Zone-map key band `q_store_skipping` reads: [1, 5] is narrow
     * enough that most buckets' recorded `user_id` ranges exclude it
-    * (bucket b holds keys ≡ b mod [[UpsertBuckets]], so its min is ≥ b
-    * or ≥ 16) — real pruning at every fixture scale — while still
-    * matching rows at sf0.001's 15-user corpus.
+    * (bucket b holds keys ≡ b mod [[VersionedStore.Buckets]], so its
+    * min is ≥ b or ≥ 16) — real pruning at every fixture scale — while
+    * still matching rows at sf0.001's 15-user corpus.
     */
   val SkipKeyLo = 1L
   val SkipKeyHi = 5L
@@ -1438,8 +1327,8 @@ object StreamingQueries {
     * double-mod). The modulus interpolates the shared layout constant.
     */
   private def bucketSql(expr: String): String =
-    s"CAST(((coalesce($expr, -1) % $UpsertBuckets) + $UpsertBuckets) " +
-      s"% $UpsertBuckets AS BIGINT)"
+    s"CAST(((coalesce($expr, -1) % ${VersionedStore.Buckets}) + " +
+      s"${VersionedStore.Buckets}) % ${VersionedStore.Buckets} AS BIGINT)"
 
   /** The versioned snapshot AS OF generation `readGen` in DuckDB terms:
     * the latest-per-key argmax over exactly the ntile-prefix of events

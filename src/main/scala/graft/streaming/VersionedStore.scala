@@ -13,15 +13,15 @@ import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 
 import graft.Json
 
-/** Generational (time-travel) keyed store — the versioned sibling of
-  * [[StreamingQueries.streamUpsert]]'s bucket-partitioned MERGE store
-  * (VERDICT r15 #5): where the destructive store overwrites touched
-  * bucket partitions in place, this one is COPY-ON-WRITE — each
-  * microbatch writes its merged touched buckets into an immutable new
-  * generation directory and commits a full-snapshot manifest, the
-  * plain-parquet expression of the Delta/Iceberg snapshot-isolation
-  * shape (versioned data files + a metadata log that names which files
-  * constitute each version).
+/** Generational (time-travel) keyed store — the one store every store
+  * and streaming-sink query commits through (VERDICT r15 #5). It is
+  * COPY-ON-WRITE: each batch writes its merged touched buckets into an
+  * immutable new generation directory and commits a full-snapshot
+  * manifest, the plain-parquet expression of the Delta/Iceberg
+  * snapshot-isolation shape (versioned data files + a metadata log that
+  * names which files constitute each version). The streaming sinks
+  * (`q_stream_upsert`, `q_stream_forget`) replay one generation per
+  * microbatch through [[mergeGeneration]].
   *
   * Layout under a store root:
   * {{{
@@ -111,13 +111,14 @@ import graft.Json
   *
   * Scale design (100 TB): manifests are bucket-count-sized JSON written
   * driver-side — bounded by the layout constant like the touched-bucket
-  * collect in the destructive store, and at production bucket counts
-  * (thousands) still trivially driver-sized. Data writes per generation
-  * are delta + touched-partition sized. Because a generation never
-  * overwrites what it reads (existing buckets are read from OLDER
-  * generation dirs), the merge needs no `localCheckpoint` barrier — the
-  * read-own-overwrite hazard the destructive MERGE defends against
-  * cannot occur by construction. All metadata I/O goes through the
+  * collect, and at production bucket counts (thousands) still trivially
+  * driver-sized. Data writes per generation are delta +
+  * touched-partition sized. Because a generation never overwrites what
+  * it reads (existing buckets are read from OLDER generation dirs), the
+  * merge needs no materialization barrier before its write — an
+  * in-place partition overwrite would have to guard against deleting
+  * files its own scan is still reading; here that hazard cannot occur
+  * by construction. All metadata I/O goes through the
   * Hadoop [[FileSystem]] API (VERDICT r16 #7), so the store runs on
   * any Spark-visible filesystem (HDFS, S3A, local) — at 100 TB the
   * store lives on object storage and `java.io.File` would not resolve.
@@ -149,12 +150,15 @@ import graft.Json
   *     pruning inside Catalyst.
   */
 object VersionedStore {
-  /** Bucket count, shared with the destructive store so the two stores
-    * agree on routing (and the oracles on the same modulus).
+  /** Bucket count of every store's layout, and the modulus the oracles
+    * route under ([[StreamingQueries.bucketSql]]). At fixture scale 16
+    * keeps partitions non-trivial; a production deployment sizes this
+    * to its write parallelism (hundreds–thousands) — the touched-bucket
+    * collect stays bounded by THIS constant, never by data volume.
     */
-  val Buckets: Int = StreamingQueries.UpsertBuckets
+  val Buckets: Int = 16
 
-  /** The bucket routing both stores write under; a NULL key routes to
+  /** The bucket routing every store writes under; a NULL key routes to
     * a real bucket. SQL twin: [[StreamingQueries.bucketSql]].
     */
   def bucketOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -1552,7 +1556,7 @@ object VersionedStore {
       col("last_event_type").as("to_type"),
       col("n_versions").as("to_nv"))
     // null-safe (<=>) key equality: the store REPRESENTS a null-key row
-    // (the upsert discipline routes it to a real bucket), and a plain
+    // (bucketOf routes it to a real bucket), and a plain
     // equi-join would silently orphan both sides' null-key rows — the
     // from side vanishing, the to side misreading as an insert (the
     // NULL-key class the AdaptiveAgg join-back fix closed in r15/r16)
@@ -1688,7 +1692,7 @@ object VersionedStore {
     * writer dir, and scan exactly that dir with the key predicate
     * pushed into the parquet reader. A missing key (or a bucket the
     * store has never written) returns empty, never errors; a NULL key
-    * resolves to its real routing bucket like the upsert discipline.
+    * resolves to its real routing bucket, as [[bucketOf]] writes it.
     * At 100 TB this is the difference between a serving path (one
     * bucket dir, one pushed filter) and a batch job (a snapshot scan) —
     * spec-pinned to read exactly one root path.

@@ -417,7 +417,7 @@ class MultimodalStreamingSpec extends SparkSpec {
         .filter(col("rn") === 1)
         .select(col("user_id"),
           pmod(col("user_id"),
-            lit(graft.streaming.StreamingQueries.UpsertBuckets.toLong))
+            lit(graft.streaming.VersionedStore.Buckets.toLong))
             .as("bucket"),
           col("ts").as("last_ts"), col("event_id").as("last_event_id"),
           col("event_type").as("last_event_type"),
@@ -485,8 +485,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // same UTC-instant micros — not fail mid-stream with a type error.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nanos-events").toString
+    val dir = suiteTempDir("graft-nanos-events")
     val microsOfFixture = graft.engine.Tables.events(spark, sf)
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -494,8 +493,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // (what TIMESTAMP(NANOS) parquet looks like under nanosAsLong). The
     // fixture layout is a single FILE named events.parquet (the stream
     // glob matches leaf file names), so relocate the one part file
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft-nanos-stage").toString
+    val stage = suiteTempDir("graft-nanos-stage")
     microsOfFixture
       .select(col("event_id"), (col("us") * 1000L).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -612,26 +610,55 @@ class MultimodalStreamingSpec extends SparkSpec {
 
   test("stream forget: tombstone-order-invariant, physically erased, " +
       "equals the batch latest-per-key over retained keys") {
-    import graft.streaming.StreamingQueries
+    import graft.streaming.{StreamingQueries, VersionedStore}
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getTimestamp(2), r.getLong(3), r.getString(4), r.getDouble(5),
         r.getLong(6))).sortBy(_._1).toSeq
-    // tombstones delivered LAST vs FIRST must drain to the same store:
-    // deletion wins the argmax by timestamp, not by arrival order
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("forget-store-spec").toString
-    val last = canon(StreamingQueries.streamForgetAt(spark, sf,
-      tombstonesFirst = false, Some(storeDir)))
-    val first = canon(StreamingQueries.streamForgetAt(spark, sf,
-      tombstonesFirst = true))
-    assert(first === last, "tombstone order changed the drained store")
-    // physical erasure: the raw store (no read-back filter) retains NO
-    // payload row for a forgotten user — only tombstone receipts whose
-    // columns are the tombstone constants
-    val raw = StreamingQueries.forgetStoreRaw(spark, storeDir)
-      .filter(pmod(col("user_id"), lit(StreamingQueries.ForgetMod)) === 0)
-      .collect()
+    def latest(root: String) =
+      VersionedStore.readAsOf(spark, root,
+          VersionedStore.latestGen(root).get)
+        .select(col("user_id"), col("bucket"), col("last_ts"),
+          col("last_event_id"), col("last_event_type"),
+          round(col("last_value").cast("decimal(12,2)").cast("double"), 2)
+            .as("last_value"),
+          col("n_versions"))
+    val retained = col("last_event_type") =!= StreamingQueries.TombstoneType
+    val forgotten = pmod(col("user_id"), lit(StreamingQueries.ForgetMod)) === 0
+    val storeDir = suiteTempDir("forget-store-spec")
+    val last = canon(StreamingQueries.streamForgetInto(spark, sf, storeDir))
+    // tombstones committed FIRST, then every event, into a fresh store
+    // must leave the same retained rows: deletion wins the argmax by
+    // timestamp, not by arrival order
+    def storeRows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"),
+        col("event_type").as("last_event_type"),
+        col("value").as("last_value"), lit(1L).as("n_versions"),
+        VersionedStore.bucketOf(col("user_id")).as("bucket"))
+    val events = Tables.events(spark, sf)
+    val firstDir = suiteTempDir("forget-store-spec-first")
+    VersionedStore.commitBatch(storeRows(events.select("user_id")
+      .distinct().filter(forgotten)
+      .select((-col("user_id")).as("event_id"),
+        lit(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")).as("ts"),
+        col("user_id"), lit(StreamingQueries.TombstoneType).as("event_type"),
+        lit(0.0).as("value"))), firstDir)
+    VersionedStore.commitBatch(storeRows(events), firstDir)
+    assert(canon(latest(firstDir).filter(retained)) === last,
+      "tombstone order changed the retained rows")
+    // ... and the same tombstone receipts, version counts included
+    assert(canon(latest(firstDir)) === canon(latest(storeDir)))
+    // retention, then erasure: before vacuum an older generation still
+    // holds a forgotten user's payload; vacuum to the tombstone
+    // generation and NO file under data/ (read without any manifest)
+    // retains one — only tombstone receipts with the tombstone constants
+    def rawForgotten() = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$storeDir/data").filter(forgotten).collect()
+    assert(rawForgotten().exists(_.getAs[String]("last_event_type") !=
+      StreamingQueries.TombstoneType), "no payload was retained to erase")
+    VersionedStore.vacuum(storeDir, VersionedStore.latestGen(storeDir).get)
+    val raw = rawForgotten()
     assert(raw.nonEmpty, "fixture must contain forgotten users")
     raw.foreach { r =>
       assert(r.getAs[String]("last_event_type") ===

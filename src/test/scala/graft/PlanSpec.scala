@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.engine._
@@ -128,7 +126,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val tmp = Files.createTempDirectory("buckets").toString
+    val tmp = suiteTempDir("buckets")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -829,7 +827,7 @@ class PlanSpec extends SparkSpec {
     // the read-back must skip non-selected language directories entirely:
     // the lang predicate belongs in the scan's PartitionFilters (pruning),
     // not in a per-row Filter above the scan
-    val tmp = Files.createTempDirectory("part-export").toString
+    val tmp = suiteTempDir("part-export")
     graft.sources.JsonCsvSources.writeParquetPartitioned(
       Tables.documents(spark, sf)
         .select("doc_id", "lang", "source", "n_chars"), tmp, "lang")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -15,7 +13,7 @@ class RobustnessSpec extends SparkSpec {
 
   /** An empty mirror of the fixture dir: same schemas, zero rows. */
   lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft-empty").toString
+    val dir = suiteTempDir("graft-empty")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       Tables.load(spark, sf, t).limit(0)
@@ -52,7 +50,7 @@ class RobustnessSpec extends SparkSpec {
     * shingles, dropped rows), never throw.
     */
   lazy val dirtyDir: String = {
-    val dir = Files.createTempDirectory("graft-dirty").toString
+    val dir = suiteTempDir("graft-dirty")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem").foreach { t =>
       Tables.load(spark, sf, t).limit(20)
@@ -113,8 +111,7 @@ class RobustnessSpec extends SparkSpec {
     // a value domain beyond 2^52 cents makes double rounding inexact —
     // the guard must abort the job with its message instead of letting
     // the engine and the oracle round differently and hash-diverge
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bigvals").toString
+    val dir = suiteTempDir("graft-bigvals")
     def writeEvents(v: Double): Unit =
       Tables.events(spark, sf).limit(5)
         .withColumn("value", lit(v))

@@ -37,7 +37,7 @@ class ScaleGateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("commit/read round-trip merges per ladder and per query") {
-    val dir = java.nio.file.Files.createTempDirectory("scale_gate").toString
+    val dir = suiteTempDir("scale_gate")
     val p = s"$dir/SCALE_GATE.json"
     ScaleGate.writeCommitted(p, Seq(1, 2, 5, 10),
       Map("a" -> 0.31, "b" -> 0.97), Map("a" -> 1.2, "b" -> 4.1))

@@ -11,11 +11,8 @@ import graft.sources.JsonCsvSources
   */
 class SourcesExtensionsSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("JSONL round-trip preserves the customer table") {
-    val out = tmpDir("jsonl")
+    val out = suiteTempDir("jsonl")
     val src = Tables.customer(spark, sf)
     JsonCsvSources.writeJsonl(src, out)
     val back = JsonCsvSources.readJsonl(spark, out)
@@ -26,7 +23,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("XML round-trip preserves the customer table (Spark 4 native XML)") {
-    val out = tmpDir("xml-rt")
+    val out = suiteTempDir("xml-rt")
     val src = Tables.customer(spark, sf)
       .select("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment")
     JsonCsvSources.writeXml(src, out)
@@ -47,7 +44,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("multiline JSON array file loads with inferred schema (S1)") {
-    val dir = tmpDir("mljson")
+    val dir = suiteTempDir("mljson")
     val rows = Tables.nation(spark, sf).collect().map(r =>
       s"""{"n_nationkey": ${r.getInt(0)}, "n_name": "${r.getString(1)}", "n_regionkey": ${r.getInt(2)}}""")
     Files.writeString(java.nio.file.Paths.get(s"$dir/nation.json"),
@@ -59,7 +56,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("multiline JSON ARRAY writer round-trips through the S1 reader") {
-    val out = tmpDir("mljson-rt")
+    val out = suiteTempDir("mljson-rt")
     val src = Tables.nation(spark, sf)
     JsonCsvSources.writeMultilineJson(src, out)
     // the sink emits ONE file holding one JSON array (plus _SUCCESS)
@@ -73,7 +70,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("CSV round-trip with header and inferred schema") {
-    val out = tmpDir("csv")
+    val out = suiteTempDir("csv")
     val src = Tables.region(spark, sf)
     JsonCsvSources.writeCsv(src, out)
     val back = JsonCsvSources.readCsv(spark, out)
@@ -82,7 +79,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows, schema, and exact values") {
-    val out = tmpDir("orc")
+    val out = suiteTempDir("orc")
     val src = Tables.nation(spark, sf)
     JsonCsvSources.writeOrc(src, out)
     val back = JsonCsvSources.readOrc(spark, out)
@@ -92,7 +89,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("Avro round-trip preserves rows, schema, and exact values") {
-    val out = tmpDir("avro")
+    val out = suiteTempDir("avro")
     val src = Tables.nation(spark, sf)
     JsonCsvSources.writeAvro(src, out)
     val back = JsonCsvSources.readAvro(spark, out)
@@ -131,7 +128,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("partitioned parquet sink lays out partition directories") {
-    val out = tmpDir("part")
+    val out = suiteTempDir("part")
     JsonCsvSources.writeParquetPartitioned(
       Tables.customer(spark, sf), out, "c_mktsegment")
     val segDirs = new java.io.File(out).listFiles()
@@ -146,7 +143,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("schema evolution: mergeSchema unions columns across parquet parts") {
-    val dir = tmpDir("evolve")
+    val dir = suiteTempDir("evolve")
     Tables.region(spark, sf).write.parquet(s"$dir/p=1")
     Tables.region(spark, sf)
       .withColumn("r_comment", concat(lit("c"), col("r_regionkey")))
@@ -161,7 +158,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("corrupt JSONL records quarantine in PERMISSIVE, raise in FAILFAST") {
-    val dir = tmpDir("corrupt")
+    val dir = suiteTempDir("corrupt")
     Files.writeString(java.nio.file.Paths.get(s"$dir/data.json"),
       "{\"a\": 1, \"b\": \"x\"}\n{not json at all\n{\"a\": 2, \"b\": \"y\"}")
     // cache required: Spark disallows queries touching only the corrupt
@@ -213,7 +210,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("text-lines sink round-trips documents row for row") {
-    val out = tmpDir("textlines")
+    val out = suiteTempDir("textlines")
     val src = Tables.documents(spark, sf)
       .select("doc_id", "lang", "source", "text")
     src.select(concat_ws("\t", col("doc_id"), col("lang"), col("source"),
@@ -229,8 +226,8 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("compaction collapses the file count and preserves every value") {
-    val frag = tmpDir("frag")
-    val compacted = tmpDir("compact")
+    val frag = suiteTempDir("frag")
+    val compacted = suiteTempDir("compact")
     val got = SourceQueries.compactInto(spark, sf, frag, compacted)
     def parquetFiles(d: String): Int = Option(new java.io.File(d).listFiles)
       .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
@@ -402,9 +399,9 @@ class SourcesExtensionsSpec extends SparkSpec {
       }
       spans.sum / spans.length
     }
-    val zDir = tmpDir("zorder-files")
+    val zDir = suiteTempDir("zorder-files")
     SourceQueries.writeZOrdered(spark, sf, zDir)
-    val ctlDir = tmpDir("zorder-ctl")
+    val ctlDir = suiteTempDir("zorder-ctl")
     SourceQueries.zValues(spark, sf).repartition(SourceQueries.ZFiles)
       .write.mode("overwrite").parquet(ctlDir)
     val (zArea, ctlArea) = (avgArea(zDir), avgArea(ctlDir))
