@@ -1173,8 +1173,9 @@ object Curation {
        |FROM flagged GROUP BY source""".stripMargin
 
   private val urlCanonicalSql: String = {
-    val values = UrlPlantedRows.map { case (id, u) => s"($id, '$u')" }
-      .mkString(", ")
+    val values = UrlPlantedRows.map { case (id, u) =>
+      s"($id, ${TextOps.sqlLit(u)})"
+    }.mkString(", ")
     val re = "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]*)(:[0-9]+)?([^?#]*)(\\?[^#]*)?"
     s"""WITH u AS (SELECT doc_id,
        |    (CASE WHEN doc_id % 4 = 0 THEN 'HTTPS' ELSE 'https' END)
@@ -1306,8 +1307,9 @@ object Curation {
          |  true AS suppressed
          |FROM g WHERE n < $KAnonK""".stripMargin,
     "q_domain_filter" -> {
-      val values = DomainPlantedRows.map { case (id, u) => s"($id, '$u')" }
-        .mkString(", ")
+      val values = DomainPlantedRows.map { case (id, u) =>
+        s"($id, ${TextOps.sqlLit(u)})"
+      }.mkString(", ")
       val rules = DomainBlocklist.map(r => s"'$r'").mkString(", ")
       // NOTE: urlCanonicalSql contains `||` concat operators, so it must
       // be spliced in AFTER stripMargin (stripMargin would eat one pipe)
@@ -1381,11 +1383,8 @@ object Curation {
     "q_text_scrub" ->
       """SELECT doc_id, CAST(len(regexp_extract_all(raw, '[a-z0-9]+@[a-z0-9.]+')) AS BIGINT) AS n_emails, CAST(len(regexp_extract_all(raw, 'https?://[^ ]+')) AS BIGINT) AS n_urls, regexp_replace(regexp_replace(raw, 'https?://[^ ]+', '<URL>', 'g'), '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>', 'g') AS scrubbed FROM (SELECT doc_id, text || ' contact user' || doc_id || '@example.com via http://site' || doc_id || '.com' AS raw FROM documents)""",
     "q_pii_audit" -> {
-      def sqlLit(t: String): String =
-        if (t == null) "CAST(NULL AS VARCHAR)"
-        else s"'${t.replace("'", "''")}'"
       val values = PiiPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
+        s"($id, ${TextOps.sqlLit(t)})"
       }.mkString(", ")
       val countCols = PiiPatterns.map { case (name, re, _) =>
         s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS n_$name"
@@ -1483,11 +1482,8 @@ object Curation {
          |FROM base, top, dp, dd""".stripMargin
     },
     "q_deletion_audit" -> {
-      def sqlLit(t: String): String =
-        if (t == null) "CAST(NULL AS VARCHAR)"
-        else s"'${t.replace("'", "''")}'"
       val values = PiiPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
+        s"($id, ${TextOps.sqlLit(t)})"
       }.mkString(", ")
       val total = PiiPatterns.map { case (_, re, _) =>
         s"len(regexp_extract_all(text, '$re'))"

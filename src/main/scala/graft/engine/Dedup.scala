@@ -2703,8 +2703,9 @@ object Dedup {
          |    AS BIGINT) AS n_dup
          |FROM r GROUP BY doc_id""".stripMargin,
     "q_cdc_dedup" -> {
-      val values = CdcPlantedRows.map { case (id, t) => s"($id, '$t')" }
-        .mkString(", ")
+      val values = CdcPlantedRows.map { case (id, t) =>
+        s"($id, ${TextOps.sqlLit(t)})"
+      }.mkString(", ")
       s"""WITH docs AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
          |t AS (SELECT doc_id, string_split(text, ' ') AS w FROM docs),

@@ -114,6 +114,15 @@ object TextOps {
   def segmentSql(e: String): String =
     s"regexp_extract_all($e, '$SegPattern')"
 
+  /** A string as a DuckDB literal, the one escaper every oracle's
+    * planted rows go through: null → `CAST(NULL AS VARCHAR)`, `'` →
+    * `''`, newline → `' || chr(10) || '`. Quotes are escaped FIRST, so
+    * the escaper never doubles the quotes the newline splice inserts.
+    */
+  private[graft] def sqlLit(t: String): String =
+    if (t == null) "CAST(NULL AS VARCHAR)"
+    else s"'${t.replace("'", "''").replace("\n", "' || chr(10) || '")}'"
+
   /** Quality scoring: token counts, per-token length, stopword ratio,
     * lexical diversity, and a composite [0,1] score — the heuristics used
     * to filter web corpora before LLM training. All ratios are small-int
@@ -1711,9 +1720,6 @@ object TextOps {
          |FROM pr JOIN cms ON pr.i = cms.i AND pr.bucket = cms.bucket
          |GROUP BY pr.term, pr.n_exact""".stripMargin,
     "q_quality_rules" -> {
-      def sqlLit(t: String): String =
-        if (t == null) "CAST(NULL AS VARCHAR)"
-        else s"'${t.replace("'", "''")}'"
       val values = QualityPlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")
@@ -1820,9 +1826,6 @@ object TextOps {
          |    AS vocab_new
          |FROM ex GROUP BY decile""".stripMargin,
     "q_boilerplate_lines" -> {
-      def sqlLit(t: String): String =
-        if (t == null) "CAST(NULL AS VARCHAR)"
-        else s"'${t.replace("'", "''").replace("\n", "' || chr(10) || '")}'"
       val values = BoilerplatePlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")
@@ -1852,9 +1855,6 @@ object TextOps {
          |FROM src s LEFT JOIN r ON s.doc_id = r.doc_id""".stripMargin
     },
     "q_html_extract" -> {
-      def sqlLit(t: String): String =
-        if (t == null) "CAST(NULL AS VARCHAR)"
-        else s"'${t.replace("'", "''")}'"
       val values = HtmlPlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")
@@ -1946,7 +1946,6 @@ object TextOps {
          |    AS rule_keep_ppm
          |FROM b""".stripMargin,
     "q_segment_cjk" -> {
-      def sqlLit(t: String): String = s"'${t.replace("'", "''")}'"
       val values = SegPlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")
@@ -1968,7 +1967,6 @@ object TextOps {
          |FROM src""".stripMargin
     },
     "q_tokenizer_fertility" -> {
-      def sqlLit(t: String): String = s"'${t.replace("'", "''")}'"
       val values = SegPlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)}, 'xx_planted')"
       }.mkString(", ")
@@ -1997,7 +1995,6 @@ object TextOps {
          |FROM per GROUP BY lang""".stripMargin
     },
     "q_content_flags" -> {
-      def sqlLit(t: String): String = s"'${t.replace("'", "''")}'"
       val values = ContentPlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")
@@ -2024,11 +2021,6 @@ object TextOps {
          |FROM h""".stripMargin
     },
     "q_line_collapse" -> {
-      // escape quotes FIRST, then newline -> chr(10) splice (the
-      // boilerplate oracle's idiom) so the escaper cannot double the
-      // quotes the splice inserts
-      def sqlLit(t: String): String =
-        s"'${t.replace("'", "''").replace("\n", "' || chr(10) || '")}'"
       val values = LineCollapsePlantedRows.map { case (id, t) =>
         s"($id, ${sqlLit(t)})"
       }.mkString(", ")

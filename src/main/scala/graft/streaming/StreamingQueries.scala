@@ -51,7 +51,7 @@ object StreamingQueries {
     * concurrently running batch queries; the SparkContext is shared,
     * the SQLConf not.
     */
-  private def sizedStreamSession(spark: SparkSession,
+  private[streaming] def sizedStreamSession(spark: SparkSession,
       dir: String): SparkSession = {
     val s2 = spark.newSession()
     // Tables.events handles the fixture's TIMESTAMP(NANOS) layout; a bare
@@ -70,13 +70,24 @@ object StreamingQueries {
     s2
   }
 
-  def streamEventWindow(spark: SparkSession, dir: String): DataFrame = {
-    // unique sink name: queries can run concurrently in one session
-    val table = s"graft_stream_win_${runSeq.incrementAndGet()}"
-    val s2 = sizedStreamSession(spark, dir)
-    val q = EventStream.runToMemory(s2, dir, table)
+  /** Run a streaming frame to completion into a uniquely named memory
+    * sink (`graft_stream_<name>_<n>`: queries can run concurrently in
+    * one session) under output `mode`, and return the drained table.
+    */
+  private def drain(stream: DataFrame, name: String,
+      mode: String): DataFrame = {
+    val table = s"graft_stream_${name}_${runSeq.incrementAndGet()}"
+    val q = stream.writeStream.format("memory").queryName(table)
+      .outputMode(mode).start()
+    q.processAllAvailable()
     q.stop()
-    s2.table(table)
+    stream.sparkSession.table(table)
+  }
+
+  def streamEventWindow(spark: SparkSession, dir: String): DataFrame = {
+    val s2 = sizedStreamSession(spark, dir)
+    drain(EventStream.windowedCounts(EventStream.readEvents(s2, dir)), "win",
+      "complete")
       .select(col("window_start"), col("event_type"), col("n"),
         round(col("sum_value").cast("double"), 2).as("sum_value"),
         round(col("sum_value").cast("double") / col("n"), 6)
@@ -121,16 +132,10 @@ object StreamingQueries {
     * exact variant is the right contract here.
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"graft_stream_dedup_${runSeq.incrementAndGet()}"
     val s2 = sizedStreamSession(spark, dir)
-    val q = EventStream.readEvents(s2, dir)
+    drain(EventStream.readEvents(s2, dir)
       .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream.format("memory").queryName(table)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    s2.table(table)
+      .dropDuplicates("user_id", "event_type"), "dedup", "append")
   }
 
   /** Stream-static broadcast enrichment — the enrich-on-ingest join a
@@ -145,12 +150,11 @@ object StreamingQueries {
     * pre-bucketed join, not this plan.
     */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"graft_stream_enrich_${runSeq.incrementAndGet()}"
     val s2 = sizedStreamSession(spark, dir)
     val dim = broadcast(graft.engine.Tables.load(s2, dir, "customer")
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment")))
-    val q = EventStream.readEvents(s2, dir)
+    drain(EventStream.readEvents(s2, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .join(dim, Seq("user_id"), "left")
@@ -158,12 +162,7 @@ object StreamingQueries {
         coalesce(col("segment"), lit("UNKNOWN")).as("segment"),
         col("event_type"),
         round(col("value").cast("decimal(12,2)").cast("double"), 2)
-          .as("value"))
-      .writeStream.format("memory").queryName(table)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    s2.table(table)
+          .as("value")), "enrich", "append")
   }
 
   /** Stream-stream interval join — click→purchase attribution ON the
@@ -180,7 +179,6 @@ object StreamingQueries {
     * bound and the identical plan caps state accordingly.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"graft_stream_join_${runSeq.incrementAndGet()}"
     val s2 = sizedStreamSession(spark, dir)
     // r21: skip the trailing NO-DATA microbatch (watermark-advance
     // housekeeping). An INNER stream-stream join emits every match in
@@ -202,7 +200,7 @@ object StreamingQueries {
       .select(col("event_id").as("purchase_id"),
         col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", "14 days")
-    val q = clicks.join(purchases,
+    drain(clicks.join(purchases,
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") +
@@ -210,24 +208,19 @@ object StreamingQueries {
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-          .as("gap_us"))
-      .writeStream.format("memory").queryName(table)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    s2.table(table)
+          .as("gap_us")), "join", "append")
   }
 
   /** Streaming keyed upsert (`q_stream_upsert`) — the SINK half of a
     * production ingest: the events replay as [[TimeTravelGens]]
     * microbatches through `foreachBatch` into a [[VersionedStore]]
-    * ([[replayToStore]]), one copy-on-write generation per batch. Each
-    * batch reads only its touched buckets, merges latest-per-user under
-    * the total order (ts, event_id) while summing version counts, stages
-    * the merged buckets in a fresh generation dir and commits by
-    * manifest — the Delta/Hudi "MERGE with partition pruning" shape with
-    * an atomic commit point, so a crash mid-batch leaves the previous
-    * generation intact.
+    * ([[StoreFixture.replayToStore]]), one copy-on-write generation per
+    * batch. Each batch reads only its touched buckets, merges
+    * latest-per-user under the total order (ts, event_id) while summing
+    * version counts, stages the merged buckets in a fresh generation
+    * dir and commits by manifest — the Delta/Hudi "MERGE with partition
+    * pruning" shape with an atomic commit point, so a crash mid-batch
+    * leaves the previous generation intact.
     *
     * Latest-per-key under a total order is associative and commutative,
     * so the drained store equals the batch argmax no matter how the
@@ -238,7 +231,7 @@ object StreamingQueries {
     * into its own fresh store: the query times a full streaming ingest.
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame =
-    latestRows(spark, replayToStore(spark, dir,
+    latestRows(spark, StoreFixture.replayToStore(spark, dir,
       graft.engine.TempArtifacts.tempDir("graft-upsert-store"),
       withTombstones = false))
 
@@ -248,16 +241,14 @@ object StreamingQueries {
     */
   val ForgetMod = 10L
 
-  /** Tombstone marker + timestamp: the ts sits ABOVE every possible
-    * event timestamp, so a tombstone always wins the latest-per-key
-    * argmax — deletion dominates no matter which generation delivers it,
-    * which is exactly what makes the store TOMBSTONE-ORDER-INVARIANT
-    * (proved in MultimodalStreamingSpec by committing the tombstones
-    * before the events).
+  /** Tombstone marker. A tombstone's ts sits ABOVE every possible
+    * event timestamp ([[StoreFixture]] synthesizes them), so it always
+    * wins the latest-per-key argmax — deletion dominates no matter which
+    * generation delivers it, which is exactly what makes the store
+    * TOMBSTONE-ORDER-INVARIANT (proved in MultimodalStreamingSpec by
+    * committing the tombstones before the events).
     */
   val TombstoneType = "__forget"
-  private val TombstoneTs =
-    java.sql.Timestamp.valueOf("2100-01-01 00:00:00")
 
   /** Streaming right-to-be-forgotten (`q_stream_forget`, VERDICT r14
     * #6 — the streaming half of `q_index_forget`, connecting governance
@@ -283,7 +274,8 @@ object StreamingQueries {
     */
   private[graft] def streamForgetInto(spark: SparkSession, dir: String,
       root: String): DataFrame =
-    latestRows(spark, replayToStore(spark, dir, root, withTombstones = true))
+    latestRows(spark,
+      StoreFixture.replayToStore(spark, dir, root, withTombstones = true))
       .filter(col("last_event_type") =!= TombstoneType)
 
   /** The latest snapshot of a replayed store in the streaming sinks'
@@ -295,19 +287,20 @@ object StreamingQueries {
 
   // ---- versioned store: time travel + retention-then-erasure RTBF ----
 
-  /** Generations the time-travel replay splits the events table into,
+  /** Generations the fixture store splits the events table into,
     * and the snapshot generation `q_time_travel` reads back. The split
     * is ntile over the (ts, event_id) total order — DETERMINISTIC and
     * DuckDB-expressible, so the oracle reconstructs exactly the events
-    * any generation has absorbed. (The global-order window is spool
-    * SYNTHESIS — harness work standing in for an already-batched
-    * production stream; the store itself never sorts anything.)
+    * any generation has absorbed. (The global-order window is fixture
+    * SYNTHESIS — [[StoreFixture]]; the store itself never sorts
+    * anything.)
     */
   val TimeTravelGens = 4
   val TimeTravelReadGen = 1
 
-  /** Fixed fixture commit clock for versioned-store replays: generation
-    * g commits at [[StoreCommitBase]] + g × [[StoreCommitStepMs]]
+  /** Fixed fixture commit clock for the fixture stores
+    * ([[StoreFixture.commitTs]]): generation g commits at
+    * [[StoreCommitBase]] + g × [[StoreCommitStepMs]]
     * (2023-11-14T22:13:20Z + g minutes). Deterministic so
     * `q_time_travel_ts`'s AS-OF instant is a literal whose
     * ts→generation resolution the oracle can pin; production commits
@@ -323,187 +316,18 @@ object StreamingQueries {
     */
   val TimeTravelTsGen = 2
 
-  /** Spool the events table as one parquet file per deterministic batch
-    * (`__batch` = ntile(nBatches) over (ts, event_id), 0-based), with
-    * STRICTLY INCREASING modification times so the file stream source —
-    * which orders new files by mtime — replays batch 0, 1, ... in order;
-    * optionally a trailing tombstone batch (`__batch` = nBatches) for
-    * the RTBF lifecycle. Each file also CARRIES its batch id so the
-    * merge loop can verify delivery order instead of trusting it. The
-    * spool and stage dirs are keyed by a per-call nonce, so concurrent
-    * replays never delete each other's dirs.
+  /** The tombstone-bearing shared store every read-only store query
+    * reads: [[TimeTravelGens]] ntile generations plus the tombstone
+    * generation, built once per (session, fixture) by direct merges
+    * ([[StoreFixture.sharedStore]]). No consumer mutates it; the
+    * mutation queries fork a prefix.
     */
-  private def writeVersionedSpool(s2: SparkSession, dir: String,
-      nBatches: Int, withTombstones: Boolean): String = {
-    val tag = runSeq.incrementAndGet()
-    val spool = graft.engine.TempArtifacts.tempDir(s"graft-vstore-spool-$tag")
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("ts"), col("event_id"))
-    val batched = graft.engine.Tables.events(s2, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .withColumn("__batch", (ntile(nBatches).over(w) - 1).cast("int"))
-    val totalFiles = nBatches + (if (withTombstones) 1 else 0)
-    val baseMs = System.currentTimeMillis() - (totalFiles + 1) * 60000L
-    def place(stage: String, dirName: Int => String): Set[Int] = {
-      val stageDirs = Option(new java.io.File(stage).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith("__bp="))
-      val placed = stageDirs.map { d =>
-        val b = d.getName.stripPrefix("__bp=").toInt
-        val part = d.listFiles().filter(_.getName.endsWith(".parquet"))
-        require(part.length == 1,
-          s"spool stage wrote ${part.length} files for batch $b — one " +
-            "spool file per batch is the replay contract")
-        val dest = java.nio.file.Paths.get(spool, dirName(b))
-        java.nio.file.Files.move(part.head.toPath, dest)
-        dest.toFile.setLastModified(baseMs + b * 60000L): Unit
-        b
-      }.toSet
-      graft.engine.TempArtifacts.delete(stage)
-      placed
-    }
-    // an EMPTY batch gets no partition dir from the one-job write, but
-    // the replay contract needs a file per batch id (an empty file must
-    // still advance the generation chain — the empty-fixture and
-    // rows < nBatches cases); backfill missing ids with empty
-    // schema-correct files via the per-batch write path
-    def backfill(df: DataFrame, b: Int): Unit = {
-      val stage = graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
-      df.limit(0).coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = java.nio.file.Paths.get(spool, f"b$b%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dest)
-      dest.toFile.setLastModified(baseMs + b * 60000L): Unit
-      graft.engine.TempArtifacts.delete(stage)
-    }
-    // r21 (guide §2.4): ONE partitionBy job writes every batch file —
-    // before, each batch paid its own filter + coalesce(1) + write job
-    // over the cached ntile frame (n jobs + a cache for a table written
-    // once). The routing column is a DUPLICATE (`__bp`) so the carried
-    // `__batch` data column stays inside the files (partitionBy strips
-    // its own column). The window output is a single partition, so the
-    // write emits exactly one file per batch value, which `place` moves
-    // under the replay's mtime order; the one-file contract is
-    // require()d, not assumed.
-    val stage = graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
-    batched.withColumn("__bp", col("__batch"))
-      .coalesce(1).write.mode("overwrite")
-      .partitionBy("__bp").parquet(stage)
-    val present = place(stage, b => f"b$b%03d.parquet")
-    (0 until nBatches).filterNot(present).foreach(b =>
-      backfill(batched, b))
-    if (withTombstones) {
-      val tombstones = graft.engine.Tables.events(s2, dir)
-        .select("user_id").distinct()
-        .filter(pmod(col("user_id"), lit(ForgetMod)) === 0)
-        .select((-col("user_id")).as("event_id"),
-          lit(TombstoneTs).as("ts"), col("user_id"),
-          lit(TombstoneType).as("event_type"), lit(0.0).as("value"),
-          lit(nBatches).cast("int").as("__batch"))
-      val tstage =
-        graft.engine.TempArtifacts.tempDir(s"graft-vstore-stage-$tag")
-      tombstones.withColumn("__bp", col("__batch"))
-        .coalesce(1).write.mode("overwrite")
-        .partitionBy("__bp").parquet(tstage)
-      val tPresent = place(tstage, b => f"b$b%03d.parquet")
-      if (!tPresent(nBatches)) backfill(tombstones, nBatches)
-    }
-    spool
-  }
-
-  private val versionedSpoolSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("__batch", IntegerType)))
-
-  /** Replay a versioned spool through foreachBatch into the
-    * copy-on-write store: one file per trigger, one GENERATION per
-    * microbatch. The generation id is `startGen + batchId`, and each
-    * batch's carried `__batch` column must agree — a coalesced,
-    * reordered, or replayed delivery fails loudly instead of silently
-    * corrupting the manifest chain. `startGen` lets a NEW stream
-    * continue a store an earlier stream built (the store outlives any
-    * one query — VersionedStoreSpec proves the continuation leaves
-    * committed generations byte-identical).
-    */
-  private[graft] def driveVersionedStream(s2: SparkSession, spool: String,
-      root: String, startGen: Int = 0): Unit = {
-    val merge = (batch: DataFrame, batchId: Long) => {
-      val gen = startGen + batchId.toInt
-      // ONE aggregate job reads both the order-contract check and the
-      // touched-bucket set (r21 — before, the carried check and
-      // mergeGeneration's own touched-distinct each paid a collect)
-      val sets = batch.agg(
-        collect_set(col("__batch")).as("carried"),
-        collect_set(VersionedStore.bucketOf(col("user_id"))).as("touched"))
-        .collect()(0)
-      val carried = sets.getSeq[Int](0).sorted
-      // an EMPTY batch (empty fixture replay) carries no ids but must
-      // still advance the generation chain so every snapshot exists
-      require(carried.isEmpty || carried == Seq(gen - startGen),
-        s"microbatch $batchId delivered batch ids $carried — the " +
-          "one-file-per-trigger order contract is broken")
-      VersionedStore.mergeGeneration(
-        batch.select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"),
-          col("event_type").as("last_event_type"),
-          col("value").as("last_value"), lit(1L).as("n_versions"),
-          VersionedStore.bucketOf(col("user_id")).as("bucket")),
-        gen, root,
-        // deterministic fixture commit clock — see [[StoreCommitBase]]
-        commitTs = StoreCommitBase + gen * StoreCommitStepMs,
-        touchedHint = Some(sets.getSeq[Long](1)))
-    }
-    val q = s2.readStream.schema(versionedSpoolSchema)
-      .option("maxFilesPerTrigger", 1).parquet(spool)
-      .writeStream.foreachBatch(merge).start()
-    q.processAllAvailable()
-    q.stop(): Unit
-  }
-
-  /** Replay the events table into the store at `root` as
-    * [[TimeTravelGens]] generations, plus one trailing tombstone
-    * generation when `withTombstones` ([[writeVersionedSpool]] →
-    * [[driveVersionedStream]]), and return `root`. The one streaming
-    * ingest behind [[streamUpsert]], [[streamForget]] and
-    * [[sharedForgetStore]]; the consumed spool is deleted.
-    */
-  private def replayToStore(spark: SparkSession, dir: String, root: String,
-      withTombstones: Boolean): String = {
-    val s2 = sizedStreamSession(spark, dir)
-    val spool = writeVersionedSpool(s2, dir, TimeTravelGens, withTombstones)
-    try driveVersionedStream(s2, spool, root)
-    finally graft.engine.TempArtifacts.delete(spool)
-    root
-  }
-
-  /** ONE tombstone-bearing versioned store per (session, fixture dir),
-    * shared by every read-only versioned-store consumer
-    * (`q_time_travel`, `q_forget_audit`, `q_change_feed` — they consume
-    * the SAME replay; the generations BEFORE the tombstone batch are
-    * byte-identical to a tombstone-less ingest, so the time-travel read
-    * serves from it too). The production shape this mirrors: ingest
-    * runs once, many consumers read snapshots. `q_store_vacuum` builds
-    * its OWN store — vacuum destroys history, and a shared store must
-    * never lose generations a sibling query is about to read. The
-    * memo's eviction cleanup deletes the store dir (ScaleBench evicts
-    * between scales, so each scale re-ingests cold, then reads warm).
-    */
-  private def sharedForgetStore(spark: SparkSession, dir: String): String =
-    graft.engine.SessionMemo.getOrComputeCleanup(spark,
-      s"graft:vstore:$dir") {
-      replayToStore(spark, dir, graft.engine.TempArtifacts.tempDir(
-        s"graft-vstore-shared-${dir.hashCode.toHexString}"),
-        withTombstones = true)
-    }(root => graft.engine.TempArtifacts.delete(root))
+  private def forgetStore(spark: SparkSession, dir: String): String =
+    StoreFixture.sharedStore(spark, dir, TimeTravelGens, TimeTravelGens,
+      withTombstones = true)
 
   /** Time-travel read (`q_time_travel`, VERDICT r15 #5): read the
-    * [[sharedForgetStore]] AS OF generation [[TimeTravelReadGen]] — the
+    * [[forgetStore]] AS OF generation [[TimeTravelReadGen]] — the
     * snapshot after generations 0..[[TimeTravelReadGen]] only, later
     * generations (including the tombstone batch) invisible. The
     * oracle recomputes the snapshot as the batch latest-per-key argmax
@@ -513,7 +337,7 @@ object StreamingQueries {
     * metadata layer itself, not just the data.
     */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     VersionedStore.readAsOf(spark, root, TimeTravelReadGen)
       .select(snapCols: _*)
   }
@@ -544,18 +368,18 @@ object StreamingQueries {
     * ON a commit) is spec-pinned in VersionedStoreSpec.
     */
   def timeTravelTs(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     VersionedStore.readAsOfTimestamp(spark, root,
-      StoreCommitBase + TimeTravelTsGen * StoreCommitStepMs +
-        StoreCommitStepMs / 2)
+      StoreFixture.commitTs(TimeTravelTsGen) + StoreCommitStepMs / 2)
       .select(snapCols: _*)
   }
 
   /** Store lifecycle (`q_store_vacuum`): the OPTIMIZE + VACUUM half of
-    * the versioned store — replay the [[TimeTravelGens]] generations,
-    * COMPACT (rewrite every live bucket into one new generation, a
-    * logical no-op), then VACUUM with the compaction as horizon (drop
-    * all earlier manifests and every data dir they alone referenced).
+    * the versioned store — fork the [[TimeTravelGens]] ingest
+    * generations of the [[forgetStore]], COMPACT (rewrite every live
+    * bucket into one new generation, a logical no-op), then VACUUM with
+    * the compaction as horizon (drop all earlier manifests and every
+    * data dir they alone referenced).
     * The result is the post-vacuum latest snapshot INCLUDING the `gen`
     * column: the oracle is the batch argmax over ALL events with
     * `gen` pinned to the compaction generation — hash equality proves
@@ -567,13 +391,10 @@ object StreamingQueries {
     */
   def storeVacuum(spark: SparkSession, dir: String): DataFrame = {
     val s2 = sizedStreamSession(spark, dir)
-    // r21: the pre-compaction store (generations 0..TimeTravelGens-1,
-    // no tombstones) is exactly the shared forget store's pre-tombstone
-    // prefix — the scaladoc's byte-identity argument, now consumed: a
-    // private fork of that prefix replaces this query's own spool write
-    // + streaming replay, and vacuum still destroys only its fork's
-    // history
-    val root = forkStorePrefix(sharedForgetStore(spark, dir),
+    // the pre-compaction store (generations 0..TimeTravelGens-1, no
+    // tombstones) is the shared store's pre-tombstone prefix: vacuum
+    // destroys only this private fork's history
+    val root = StoreFixture.forkStorePrefix(forgetStore(spark, dir),
       TimeTravelGens - 1, "graft-vstore-vac")
     // OPTIMIZE ... ZORDER-shaped: cluster each bucket by the lookup key
     // during the rewrite, so post-compaction row groups are range-tight
@@ -594,8 +415,8 @@ object StreamingQueries {
     * `update` (latest event moved OR the version count grew — an
     * out-of-order arrival can grow `n_versions` without moving the
     * argmax, and CDC must surface it). An insert-then-delete inside the
-    * window nets to NO row. The replay is the forget-audit spool
-    * (events as [[TimeTravelGens]] generations + one tombstone
+    * window nets to NO row. The store is the [[forgetStore]] (events
+    * as [[TimeTravelGens]] ntile generations + one tombstone
     * generation), from = generation [[TimeTravelReadGen]], to = the
     * tombstone generation — so all three change types are exercised and
     * the oracle re-derives them from the deterministic ntile prefixes.
@@ -607,7 +428,7 @@ object StreamingQueries {
     * generation-count-sized.
     */
   def changeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     // manifest-pruned (round 18): only buckets whose writer generation
     // moved between the two manifests are read — identical feed rows
     // (copy-on-write: an untouched bucket cannot change), so the hash
@@ -619,7 +440,7 @@ object StreamingQueries {
   /** Interior change feed (`q_change_feed_pair`, VERDICT r16 #8): diff
     * two PRE-tombstone generations (0 → [[TimeTravelTsGen]]) of the
     * same shared store, so pure insert/update coverage stands on its
-    * own instead of riding the RTBF spool's trailing tombstone batch —
+    * own instead of riding the trailing tombstone generation —
     * deletes are impossible in this window and the hash gate proves
     * none appear. `changesBetween` is already generation-agnostic; this
     * pins an arbitrary interior pair through the driver gate. Feed
@@ -629,7 +450,7 @@ object StreamingQueries {
     * the α ≤ 0 steady-read class of its three siblings.
     */
   def changeFeedPair(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     VersionedStore.changesBetweenGens(spark, root, 0, TimeTravelTsGen,
       TombstoneType)
   }
@@ -646,7 +467,7 @@ object StreamingQueries {
     * scans plus one 1-row min/max aggregate.
     */
   def storeLookup(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     val mm = graft.engine.Tables.events(spark, dir)
       .agg(min("user_id"), max("user_id")).collect()(0)
     if (mm.isNullAt(0)) // empty fixture: no keys exist to look up
@@ -659,117 +480,6 @@ object StreamingQueries {
           .select(snapCols: _*))
         .reduce(_ unionByName _)
   }
-
-  /** Deterministic three-way ntile split of the events table in the
-    * store's merge shape — the batch synthesis for the OCC and
-    * schema-evolution stores. The global-order window is batch
-    * SYNTHESIS (harness work standing in for an already-batched
-    * production feed, the writeVersionedSpool caveat); the store itself
-    * never sorts anything.
-    */
-  private def ntileBatch(spark: SparkSession, dir: String, parts: Int,
-      b: Int): DataFrame =
-    ntileBatchAll(spark, dir, parts).filter(col("__b") === b).drop("__b")
-
-  /** Deep-copy the committed prefix (manifests 0..`upToGen` plus the
-    * `data/gen=g` dirs they reference) of a store into a fresh private
-    * root — r21 fixture-synthesis sharing for the MUTATION queries
-    * (DELETE / UPDATE / RESTORE / OCC / schema evolution / vacuum):
-    * each used to replay its own 2–3 ingest generations from the SAME
-    * deterministic ntile batches under the SAME fixture commit clock,
-    * so their pre-mutation stores were logically identical by
-    * construction. One shared base replay + a per-query prefix copy
-    * (a few MB of fixture-scale files, milliseconds) replaces 9 merge
-    * commits per run with 4, while every query still MUTATES ONLY ITS
-    * PRIVATE FORK — shared siblings' history is untouched, exactly the
-    * isolation the private replays bought. Copy-on-write guarantees
-    * the prefix is immutable once committed, so the fork is
-    * read-indistinguishable from a private replay of the same batches
-    * (hash gates unchanged — re-verified against the oracle). This is
-    * bench-fixture synthesis, not a production path: a real deployment
-    * mutates its one store in place.
-    */
-  private[graft] def forkStorePrefix(src: String, upToGen: Int,
-      tag: String): String = {
-    import java.nio.file.{Files, Path, Paths}
-    val dest = graft.engine.TempArtifacts.tempDir(tag)
-    def copyTree(from: Path, to: Path): Unit = {
-      Files.createDirectories(to.getParent)
-      // the walk holds open directory handles until closed
-      scala.util.Using.resource(Files.walk(from)) { paths =>
-        paths.forEach { p =>
-          val t = to.resolve(from.relativize(p).toString)
-          if (Files.isDirectory(p)) Files.createDirectories(t): Unit
-          else Files.copy(p, t): Unit
-        }
-      }
-    }
-    (0 to upToGen).foreach { g =>
-      val m = Paths.get(src, "_manifest", f"gen-$g%05d.json")
-      require(Files.isRegularFile(m),
-        s"forkStorePrefix: $src has no committed generation $g")
-      Files.createDirectories(Paths.get(dest, "_manifest"))
-      Files.copy(m, Paths.get(dest, "_manifest", f"gen-$g%05d.json")): Unit
-      val d = Paths.get(src, "data", s"gen=$g")
-      if (Files.isDirectory(d))
-        copyTree(d, Paths.get(dest, "data", s"gen=$g"))
-    }
-    dest
-  }
-
-  /** Shared pre-mutation base store: generations 0..`gens`-1 of the
-    * `parts`-way ntile split under the fixture commit clock — memoized
-    * per (session, dir, parts, gens) and consumed exclusively through
-    * [[forkStorePrefix]] by the mutation queries. See the fork's
-    * scaladoc for the sharing argument.
-    */
-  private def sharedNtileStore(spark: SparkSession, dir: String,
-      parts: Int, gens: Int): String =
-    graft.engine.SessionMemo.getOrComputeCleanup(spark,
-      s"graft:vstore-base:$parts:$gens:$dir") {
-      // the tempDir prefix must be unique per LIVE store: tempDir
-      // deletes the previous dir registered under the same prefix, and
-      // this store outlives the call under the session memo — a second
-      // session/fixture building the same (parts, gens) base must not
-      // sweep the first's files while its memo still points there
-      // (caught by the cross-suite test run; the runSeq nonce keeps
-      // every live base distinct, JVM-exit cleanup still collects all)
-      val root = graft.engine.TempArtifacts.tempDir(
-        s"graft-vstore-base$parts-$gens-${dir.hashCode.toHexString}" +
-          s"-${runSeq.incrementAndGet()}")
-      (0 until gens).foreach { g =>
-        VersionedStore.mergeGeneration(ntileBatch(spark, dir, parts, g),
-          g, root, commitTs = StoreCommitBase + g * StoreCommitStepMs)
-      }
-      root
-    }(root => graft.engine.TempArtifacts.delete(root))
-
-  /** The full ntile'd merge-shaped frame behind [[ntileBatch]], cached
-    * and memoized per (session, dir, parts): every store query that
-    * replays the events table as k ntile batches filters THIS frame
-    * instead of re-running the global-order window sort once per batch
-    * AND once more per merge's touched-bucket collect (the double
-    * computation inside mergeGeneration/commitBatch) — 4–6 full sort
-    * passes collapse to one. Content is untouched (the window is a
-    * deterministic total order), so every hash gate is unchanged;
-    * memo eviction unpersists the cache.
-    */
-  private def ntileBatchAll(spark: SparkSession, dir: String,
-      parts: Int): DataFrame =
-    graft.engine.SessionMemo.getOrComputeCleanup(spark,
-      s"graft:ntile:$dir:$parts") {
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))
-      graft.engine.Tables.events(spark, dir)
-        .withColumn("__b", ntile(parts).over(w) - 1)
-        .select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"),
-          col("event_type").as("last_event_type"),
-          col("value").as("last_value"), lit(1L).as("n_versions"),
-          VersionedStore.bucketOf(col("user_id")).as("bucket"),
-          col("__b").cast("int").as("__b"))
-        .cache()
-    }(df => df.unpersist(): Unit)
 
   /** Optimistic-concurrency race (`q_concurrent_commit`, VERDICT r16
     * #1): the canonical two-job production collision — OPTIMIZE
@@ -788,18 +498,19 @@ object StreamingQueries {
     * schedule equals the serial one, manifest layer included.
     */
   def concurrentCommit(spark: SparkSession, dir: String): DataFrame = {
-    // r21: private fork of the shared 3-way-split base's generations
-    // 0–1 (see forkStorePrefix) — the raced commits land on the fork
-    val root = forkStorePrefix(sharedNtileStore(spark, dir, 3, 2), 1,
-      "graft-vstore-occ")
+    // a private fork of the shared 3-way-split base's generations 0–1:
+    // the raced commits land on the fork
+    val root = StoreFixture.forkStorePrefix(StoreFixture.sharedStore(spark,
+      dir, 3, 2, withTombstones = false), 1, "graft-vstore-occ")
     var raced = false
-    val g = VersionedStore.commitBatch(ntileBatch(spark, dir, 3, 2), root,
-      commitTs = StoreCommitBase + 3 * StoreCommitStepMs,
+    val g = VersionedStore.commitBatch(
+      StoreFixture.ntileBatch(spark, dir, 3, 2), root,
+      commitTs = StoreFixture.commitTs(3),
       beforeClaim = _ =>
         if (!raced) {
           raced = true
           VersionedStore.compact(spark, root,
-            commitTs = StoreCommitBase + 2 * StoreCommitStepMs): Unit
+            commitTs = StoreFixture.commitTs(2)): Unit
         })
     require(g == 3,
       s"the raced ingest must rebase to generation 3, committed $g")
@@ -820,16 +531,15 @@ object StreamingQueries {
     * and the erased window staying erased through the continuation.
     */
   def storeRestore(spark: SparkSession, dir: String): DataFrame = {
-    // r21: private fork of the shared 3-way-split base's generations
-    // 0–1 (see forkStorePrefix) — the timeline surgery below mutates
-    // only the fork
-    val root = forkStorePrefix(sharedNtileStore(spark, dir, 3, 2), 1,
-      "graft-vstore-restore")
+    // a private fork of the shared 3-way-split base's generations 0–1:
+    // the timeline surgery below mutates only the fork
+    val root = StoreFixture.forkStorePrefix(StoreFixture.sharedStore(spark,
+      dir, 3, 2, withTombstones = false), 1, "graft-vstore-restore")
     val rg = VersionedStore.restore(root, 0,
-      commitTs = StoreCommitBase + 2 * StoreCommitStepMs)
+      commitTs = StoreFixture.commitTs(2))
     require(rg == 2, s"restore must commit as generation 2, got $rg")
-    VersionedStore.mergeGeneration(ntileBatch(spark, dir, 3, 2), 3, root,
-      commitTs = StoreCommitBase + 3 * StoreCommitStepMs)
+    VersionedStore.mergeGeneration(StoreFixture.ntileBatch(spark, dir, 3, 2),
+      3, root, commitTs = StoreFixture.commitTs(3))
     VersionedStore.readAsOf(spark, root, 3).select(snapCols: _*)
   }
 
@@ -846,14 +556,14 @@ object StreamingQueries {
     * null-padding landed on exactly the pre-evolution rows.
     */
   def storeSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    // r21: generation 0 is the shared base's generation 0 verbatim —
-    // fork the 1-generation prefix, then evolve the schema privately
-    val root = forkStorePrefix(sharedNtileStore(spark, dir, 2, 2), 0,
-      "graft-vstore-evo")
+    // generation 0 is the shared base's generation 0 verbatim — fork
+    // the 1-generation prefix, then evolve the schema privately
+    val root = StoreFixture.forkStorePrefix(StoreFixture.sharedStore(spark,
+      dir, 2, 2, withTombstones = false), 0, "graft-vstore-evo")
     VersionedStore.mergeGeneration(
-      ntileBatch(spark, dir, 2, 1)
+      StoreFixture.ntileBatch(spark, dir, 2, 1)
         .withColumn("last_event_upper", upper(col("last_event_type"))),
-      1, root, commitTs = StoreCommitBase + StoreCommitStepMs)
+      1, root, commitTs = StoreFixture.commitTs(1))
     VersionedStore.readAsOf(spark, root, 1)
       .select(snapCols :+ col("last_event_upper"): _*)
   }
@@ -890,7 +600,7 @@ object StreamingQueries {
     * like `q_store_lookup`'s. Rides the shared memoized store.
     */
   def storeSkipping(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     import VersionedStore.StorePredicate.{All, AtLeast, AtMost}
     VersionedStore.readWhere(spark, root, TimeTravelReadGen,
       All(Seq(AtLeast("user_id", SkipKeyLo), AtMost("user_id", SkipKeyHi))))
@@ -910,7 +620,7 @@ object StreamingQueries {
     * spec-pinned in VersionedStoreSpec.
     */
   def storeDsv2(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     spark.read.format("graftstore").option("path", root)
       .option("versionAsOf", TimeTravelReadGen).load()
       .filter(col("user_id") >= SkipKeyLo && col("user_id") <= SkipKeyHi)
@@ -932,14 +642,14 @@ object StreamingQueries {
     * fixture store's history.
     */
   def storeDelete(spark: SparkSession, dir: String): DataFrame = {
-    // r21: private fork of the shared 2-generation base (see
-    // forkStorePrefix) — the DML below mutates only the fork
-    val root = forkStorePrefix(sharedNtileStore(spark, dir, 2, 2), 1,
-      "graft-vstore-del")
+    // a private fork of the shared 2-generation base: the DML below
+    // mutates only the fork
+    val root = StoreFixture.forkStorePrefix(StoreFixture.sharedStore(spark,
+      dir, 2, 2, withTombstones = false), 1, "graft-vstore-del")
     val g = VersionedStore.deleteWhere(spark, root,
       VersionedStore.StorePredicate.EqTo("last_event_type",
         DeleteEventType),
-      commitTs = StoreCommitBase + 2 * StoreCommitStepMs)
+      commitTs = StoreFixture.commitTs(2))
     VersionedStore.readAsOf(spark, root, g).select(snapCols: _*)
   }
 
@@ -960,16 +670,16 @@ object StreamingQueries {
     * the shared fixture store's history.
     */
   def storeUpdate(spark: SparkSession, dir: String): DataFrame = {
-    // r21: private fork of the shared 2-generation base (see
-    // forkStorePrefix) — the DML below mutates only the fork
-    val root = forkStorePrefix(sharedNtileStore(spark, dir, 2, 2), 1,
-      "graft-vstore-upd")
+    // a private fork of the shared 2-generation base: the DML below
+    // mutates only the fork
+    val root = StoreFixture.forkStorePrefix(StoreFixture.sharedStore(spark,
+      dir, 2, 2, withTombstones = false), 1, "graft-vstore-upd")
     val g = VersionedStore.updateWhere(spark, root,
       VersionedStore.StorePredicate.EqTo("last_event_type",
         DeleteEventType),
       Seq("last_value" -> lit(UpdateRedactedValue),
         "last_event_type" -> lit(UpdateRedactedType)),
-      commitTs = StoreCommitBase + 2 * StoreCommitStepMs)
+      commitTs = StoreFixture.commitTs(2))
     VersionedStore.readAsOf(spark, root, g).select(snapCols: _*)
   }
 
@@ -1011,7 +721,7 @@ object StreamingQueries {
     * 100 TB the consumer price is the changed keys, not the table.
     */
   def storeMv(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     val init = VersionedStore.readAsOf(spark, root, 0)
       .filter(col("last_event_type") =!= TombstoneType)
       .select(col("user_id"), col("bucket"), col("last_event_id"),
@@ -1058,7 +768,7 @@ object StreamingQueries {
     * hash-gated against the same direct-snapshot oracle as q_store_mv.
     */
   def storeMvPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     val stateDir = graft.engine.TempArtifacts.tempDir("graft-mv-state")
     def statePath(g: Int) = s"$stateDir/state-g$g"
     VersionedStore.readAsOf(spark, root, 0)
@@ -1082,7 +792,7 @@ object StreamingQueries {
     * plan, adding zero overhead.
     */
   def storeSqlAsOf(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     VersionedStore.registerSnapshotView(spark, root,
       "graft_vstore_asof", TimeTravelReadGen)
     spark.sql("""
@@ -1094,12 +804,13 @@ object StreamingQueries {
   }
 
   /** Retention-then-erasure audit (`q_forget_audit`, VERDICT r15 #5 —
-    * the governance query the versioned store exists for): tombstones
-    * for every `user_id % ForgetMod == 0` arrive as the LAST generation,
-    * and ONE result fingerprints both sides of the RTBF lifecycle — the
-    * pre-deletion snapshot (generation [[TimeTravelGens]]-1) still
-    * contains every to-be-forgotten user (auditable retention: "prove
-    * you HAD the data when the request arrived"), while the
+    * the governance query the versioned store exists for): in the
+    * [[forgetStore]], tombstones for every `user_id % ForgetMod == 0`
+    * are the LAST generation, and ONE result fingerprints both sides of
+    * the RTBF lifecycle — the pre-deletion snapshot (generation
+    * [[TimeTravelGens]]-1) still contains every to-be-forgotten user
+    * (auditable retention: "prove you HAD the data when the request
+    * arrived"), while the
     * post-deletion snapshot (generation [[TimeTravelGens]]) provably
     * excludes them (erasure: the tombstone wins the argmax and the
     * read contract drops tombstone winners). Both phases aggregate to
@@ -1108,7 +819,7 @@ object StreamingQueries {
     * presence AND absence, not just cardinalities.
     */
   def forgetAudit(spark: SparkSession, dir: String): DataFrame = {
-    val root = sharedForgetStore(spark, dir)
+    val root = forgetStore(spark, dir)
     def phase(name: String, gen: Int): DataFrame =
       VersionedStore.readAsOf(spark, root, gen)
         .filter(col("last_event_type") =!= TombstoneType)
@@ -1152,7 +863,6 @@ object StreamingQueries {
 
   def streamQuality(spark: SparkSession, dir: String): DataFrame = {
     import graft.engine.{Curation, TextOps}
-    val table = s"graft_stream_qual_${runSeq.incrementAndGet()}"
     val s2 = spark.newSession() // stateless: no state sizing needed
     val docs = s2.readStream.schema(docSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -1174,11 +884,7 @@ object StreamingQueries {
           col("n_tok").between(Curation.MinTokens, Curation.MaxTokens) &&
           col("score_en") >= 1)
       .select("doc_id", "source", "n_tok", "q_micro")
-    val q = gated.writeStream.format("memory").queryName(table)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    s2.table(table)
+    drain(gated, "qual", "append")
   }
 
   /** Read schema for the content-gate's synthesized ingest file
@@ -1208,7 +914,6 @@ object StreamingQueries {
   def streamContentGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.engine.TextOps
-    val table = s"graft_stream_cgate_${runSeq.incrementAndGet()}"
     val in = graft.engine.TempArtifacts.tempDir("graft_cgate_in")
     graft.engine.Tables.documents(spark, dir).select("doc_id", "text")
       .unionByName(TextOps.ContentPlantedRows.toDF("doc_id", "text"))
@@ -1228,11 +933,7 @@ object StreamingQueries {
         flagged.as("flagged"))
       .filter(!col("flagged"))
       .select("doc_id", "n_total")
-    val q = gated.writeStream.format("memory").queryName(table)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    s2.table(table)
+    drain(gated, "cgate", "append")
   }
 
   /** Streaming bounded-state distinct count: per-hour distinct users via
@@ -1255,12 +956,11 @@ object StreamingQueries {
     * the exact distinct exchange the sketch exists to avoid.
     */
   def streamDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"graft_stream_kmv_${runSeq.incrementAndGet()}"
     val s2 = sizedStreamSession(spark, dir)
     val k = graft.engine.Ext.KmvK
     val kmv = udaf(new graft.functions.KmvSketchSql(k),
       org.apache.spark.sql.Encoders.LONG)
-    val q = EventStream.readEvents(s2, dir)
+    val sketches = drain(EventStream.readEvents(s2, dir)
       .withWatermark("ts", "2 hours")
       .select(col("ts"),
         graft.functions.StringFunctions.utf8_poly_id(
@@ -1269,16 +969,12 @@ object StreamingQueries {
       .groupBy(window(col("ts"), "1 hour"))
       .agg(kmv(col("hv")).as("sketch"), count(lit(1)).as("n_events"))
       .select(col("window.start").as("window_start"),
-        col("sketch"), col("n_events"))
-      .writeStream.format("memory").queryName(table)
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
+        col("sketch"), col("n_events")), "kmv", "complete")
     val exact = graft.engine.Tables.events(s2, dir)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
       .select(col("window.start").as("window_start"), col("n_exact"))
-    s2.table(table).join(exact, Seq("window_start"))
+    sketches.join(exact, Seq("window_start"))
       .select(col("window_start"), col("n_events"), col("n_exact"),
         size(col("sketch")).cast("long").as("n_sketch"),
         when(size(col("sketch")) < k,
@@ -1414,7 +1110,7 @@ object StreamingQueries {
     "q_stream_content_gate" -> {
       import graft.engine.TextOps
       val values = TextOps.ContentPlantedRows.map { case (id, t) =>
-        s"($id, '$t')"
+        s"($id, ${TextOps.sqlLit(t)})"
       }.mkString(", ")
       val hitSum = TextOps.ContentTaxonomy.map { case (_, words) =>
         val ws = words.map(w => s"'$w'").mkString(", ")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.SortedSet
 
-import graft.streaming.{StreamingQueries, VersionedStore}
+import graft.streaming.{StoreFixture, StreamingQueries, VersionedStore}
 
 /** Generation isolation, manifest carry-forward, immutability, and the
   * RTBF retention-then-erasure lifecycle of the copy-on-write
@@ -150,7 +150,7 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.mergeGeneration(batch((1L, 30L, "d", 4.0)), 2, src)
     // fork at gen 1: both snapshots byte-for-byte the source's, gen 2
     // absent (the prefix is a TRUNCATION, not a view)
-    val fork = StreamingQueries.forkStorePrefix(src, 1, "graft-fork-spec")
+    val fork = StoreFixture.forkStorePrefix(src, 1, "graft-fork-spec")
     assert(snapshot(fork, 0) === snapshot(src, 0))
     assert(snapshot(fork, 1) === snapshot(src, 1))
     assert(VersionedStore.latestGen(fork) === Some(1))
@@ -260,7 +260,7 @@ class VersionedStoreSpec extends SparkSpec {
     val base = System.currentTimeMillis() - 600000L
     val spoolA = graft.engine.TempArtifacts.tempDir("graft-vspec-spool-a")
     spoolFile(spoolA, 0, base, (1L, 10L, "a", 1.0), (2L, 11L, "b", 2.0))
-    StreamingQueries.driveVersionedStream(spark, spoolA, root)
+    StoreFixture.driveVersionedStream(spark, spoolA, root)
     val gen0Before = fileDigest(
       new java.io.File(s"$root/data/gen=0"))
     assert(gen0Before.nonEmpty)
@@ -269,7 +269,7 @@ class VersionedStoreSpec extends SparkSpec {
     val spoolB = graft.engine.TempArtifacts.tempDir("graft-vspec-spool-b")
     spoolFile(spoolB, 0, base + 60000L, (1L, 20L, "c", 3.0))
     spoolFile(spoolB, 1, base + 120000L, (3L, 30L, "d", 4.0))
-    StreamingQueries.driveVersionedStream(spark, spoolB, root,
+    StoreFixture.driveVersionedStream(spark, spoolB, root,
       startGen = 1)
     assert(VersionedStore.latestGen(root) === Some(2))
     // copy-on-write: generation 0's files are untouched by the appends
@@ -415,8 +415,9 @@ class VersionedStoreSpec extends SparkSpec {
       // building the second consumer's FRAME must launch no jobs at all
       // (the memoized root resolves without touching Spark); executing
       // it then costs only its own read-side jobs, not a re-ingest —
-      // pinned by the job count staying far under the ~40 jobs a
-      // 5-microbatch replay (spool write + per-batch merges) launches.
+      // pinned by the job count staying far under the jobs the five
+      // direct merge commits (ntile cache + per-generation touched
+      // collect, staged write and stats) launch.
       // the listener bus is async — drain before each read
       val df = graft.streaming.StreamingQueries.forgetAudit(spark, sf)
       Thread.sleep(1000)
@@ -428,6 +429,39 @@ class VersionedStoreSpec extends SparkSpec {
       assert(jobs.get() < 15,
         s"second consumer ran ${jobs.get()} jobs — re-ingested?")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the stream replay and the direct build commit the same store: " +
+      "rows, writer generations and commit timestamps") {
+    val replayed = StoreFixture.replayToStore(spark, sf,
+      freshRoot("replay-eq"), withTombstones = true)
+    val direct = StoreFixture.sharedStore(spark, sf,
+      StreamingQueries.TimeTravelGens, StreamingQueries.TimeTravelGens,
+      withTombstones = true)
+    val last = StreamingQueries.TimeTravelGens
+    def rows(root: String, g: Int) =
+      VersionedStore.readAsOf(spark, root, g)
+        .select("user_id", "bucket", "gen", "last_ts", "last_event_id",
+          "last_event_type", "last_value", "n_versions")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getTimestamp(3), r.getLong(4), r.getString(5), r.getDouble(6),
+          r.getLong(7))).toSeq.sortBy(t => (t._1, t._2))
+    assert(VersionedStore.latestGen(replayed) === Some(last))
+    assert(VersionedStore.latestGen(direct) === Some(last))
+    (0 to last).foreach { g =>
+      val r = rows(replayed, g)
+      assert(r.nonEmpty, s"generation $g is empty")
+      assert(r === rows(direct, g), s"snapshot $g differs")
+      val (mr, md) = (VersionedStore.readManifest(replayed, g),
+        VersionedStore.readManifest(direct, g))
+      assert(mr.buckets === md.buckets, s"bucket map $g differs")
+      assert(mr.commitTs === md.commitTs, s"commit ts $g differs")
+      assert(mr.commitTs === StreamingQueries.StoreCommitBase +
+        g * StreamingQueries.StoreCommitStepMs)
+    }
+    // not vacuous: the last generation holds the tombstone winners
+    assert(rows(direct, last)
+      .exists(_._6 == StreamingQueries.TombstoneType))
   }
 
   test("OCC: a compaction landing between merge and commit makes the " +

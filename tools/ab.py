@@ -2,7 +2,7 @@
 """Interleaved A/B of the repo benchmark between two git revisions.
 
     python3 tools/ab.py PARENT CHANGE [--workload notebook store] \
-        [--pairs 6] [--seed 7] [--trace 0|1] [--tmp DIR]
+        [--pairs 10] [--seed 7] [--trace 0|1] [--tmp DIR]
 
 Exports the committed files of each revision into its own directory under a
 temporary dir (`git archive`, so an interrupted run leaves nothing behind in
@@ -16,7 +16,9 @@ result; the tool stops at the first run that fails, reports
 `correct: false` or has `failed > 0`. It writes, per workload and
 metric, the median change/parent ratio, the parent's interquartile range,
 how many pairs the change won, and both raw series to
-`plans/ab-<parent>-<change>[-trace].json`, and prints a summary. The
+`plans/ab-<parent>-<change>[-trace].json`, and prints a summary. Each
+end-to-end metric also gets a `verdict` against its BENCHMARK.json `bound`
+(see `verdict`). The
 temporary dir is removed on exit, failures included. Nothing under
 `perfbench/` and no `BENCHMARK.json` is modified.
 """
@@ -83,7 +85,34 @@ def iqr(xs):
     return q[2] - q[0]
 
 
-def summarize(parent_runs, change_runs, better):
+def verdict(p, c, higher, bound):
+    """One end-to-end metric's reading over paired runs `p` (parent) and
+    `c` (change), `bound` the relative worsening BENCHMARK.json allows:
+
+    - `gain`: the change wins at least 9 of 10 pairs (ties count for
+      neither side) and its median is better by more than the parent's
+      interquartile range;
+    - `regression`: the change's median is worse than the parent's by more
+      than `bound`;
+    - `unresolved`: the parent's IQR/median is wider than `bound`, unless
+      every change run beats every parent run;
+    - `within_bound`: everything else.
+    """
+    def beats(y, x):
+        return y > x if higher else y < x
+    pm, cm = statistics.median(p), statistics.median(c)
+    wins = sum(beats(y, x) for x, y in zip(p, c))
+    if 10 * wins >= 9 * len(p) and beats(cm, pm) and abs(cm - pm) > iqr(p):
+        return "gain"
+    if pm and (pm - cm if higher else cm - pm) / abs(pm) > bound:
+        return "regression"
+    if (pm and iqr(p) / abs(pm) > bound
+            and not all(beats(y, x) for x in p for y in c)):
+        return "unresolved"
+    return "within_bound"
+
+
+def summarize(parent_runs, change_runs, better, bounds):
     out = {}
     for m in sorted(parent_runs[0]):
         p = [r[m] for r in parent_runs]
@@ -95,6 +124,8 @@ def summarize(parent_runs, change_runs, better):
                   "parent_median": pm, "change_median": cm,
                   "parent_iqr": iqr(p), "change_wins": wins,
                   "parent": p, "change": c}
+        if m in bounds:
+            out[m]["verdict"] = verdict(p, c, higher, bounds[m])
     return out
 
 
@@ -103,7 +134,7 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("change")
     ap.add_argument("--workload", nargs="+", default=["notebook", "store"])
-    ap.add_argument("--pairs", type=int, default=6)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--tmp", default=None,
@@ -115,6 +146,7 @@ def main():
     seconds = spec["run_seconds"]
     better = {m["name"]: m["better"]
               for m in spec["end_to_end"] + spec["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     # SIGTERM unwinds through the `finally` below like Ctrl-C does
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     work = tempfile.mkdtemp(prefix="ab-", dir=a.tmp)
@@ -136,7 +168,7 @@ def main():
                     print(f"{w} pair {i + 1}/{a.pairs} "
                           f"{('parent', 'change')[side]} "
                           f"{time.time() - t0:.0f} s", file=sys.stderr)
-            result["workloads"][w] = summarize(*runs, better)
+            result["workloads"][w] = summarize(*runs, better, bounds)
         os.makedirs(os.path.join(ROOT, "plans"), exist_ok=True)
         path = os.path.join(ROOT, "plans", f"ab-{revs[0]}-{revs[1]}"
                             + ("-trace" if a.trace else "") + ".json")
@@ -149,7 +181,8 @@ def main():
                 print(f"{w:9} {m:45} ratio {ratio:>6}  parent "
                       f"{s['parent_median']:.4g} (IQR {s['parent_iqr']:.3g})"
                       f"  change {s['change_median']:.4g}  wins "
-                      f"{s['change_wins']}/{len(s['parent'])}")
+                      f"{s['change_wins']}/{len(s['parent'])}"
+                      f"  {s.get('verdict', '')}")
         print(f"wrote {os.path.relpath(path, ROOT)}")
     finally:
         shutil.rmtree(work, ignore_errors=True)
