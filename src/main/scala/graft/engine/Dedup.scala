@@ -168,6 +168,14 @@ object Dedup {
       .select(col("doc_id"), portableIdUtf8(col("text")).as("utf8_fp"))
   }
 
+  /** Shared unsegmented prefix of the planted CJK near-dup pair: 52
+    * codepoints, no whitespace. With the differing 2-codepoint suffix the
+    * v2 codepoint-3-gram Jaccard is ≈0.9 — inside the planted-near-dup
+    * band the minhash parameters are tuned for.
+    */
+  private[graft] val CjkNearDupBase: String =
+    "機械学習の大規模データ処理は分散計算基盤の上で実行されるが巨大な文書集合の重複検出には帯域分割された署名索引が不可欠であり"
+
   /** Non-ASCII rows planted into the dedup family's document source
     * ([[dedupDocs]]): a multilingual NEAR-DUP pair (910001/910002 — same
     * 28-token accented/CJK/emoji/Cyrillic prefix, different last token →
@@ -178,14 +186,6 @@ object Dedup {
     * gated on multilingual text in every dedup query, not just the
     * dedicated fingerprint query.
     */
-  /** Shared unsegmented prefix of the planted CJK near-dup pair: 52
-    * codepoints, no whitespace. With the differing 2-codepoint suffix the
-    * v2 codepoint-3-gram Jaccard is ≈0.9 — inside the planted-near-dup
-    * band the minhash parameters are tuned for.
-    */
-  private[graft] val CjkNearDupBase: String =
-    "機械学習の大規模データ処理は分散計算基盤の上で実行されるが巨大な文書集合の重複検出には帯域分割された署名索引が不可欠であり"
-
   private[graft] val MultilingualDedupRows: Seq[(Long, String)] = {
     val base = "zürich café naïve résumé touché crème brûlée déjà vu piñata " +
       "日本語 テキスト 解析 変換 処理 データ 🚀 ロケット 発射 準備 " +
@@ -1040,29 +1040,40 @@ object Dedup {
           .as("containment_b"))
   }
 
-  /** 16-bit SimHash over distinct unigram tokens: per bit j, sum +-1 votes
-    * (vote = parity of hash_j(token id)); bit set iff the vote sum is
-    * positive. One aggregation pass computes all 16 bit-sums; token ids via
-    * [[portableIdUtf8]] — map-side, no dictionary.
+  /** (doc_id, sig) SimHash table over [[dedupDocs]]' distinct unigram
+    * tokens, `bits` wide: per bit j, sum ±1 votes (vote = parity of
+    * hash_j(token id)); bit j is set iff its vote sum is positive. One
+    * aggregation pass computes all `bits` sums; token ids via
+    * [[portableIdUtf8]] — map-side, no dictionary. The one SimHash
+    * signature builder: [[dedupSimhash]] reads it at 16 bits,
+    * [[simhashPairs]] at [[SimPairsBits]].
     */
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
+  private def simhashSigs(spark: SparkSession, dir: String,
+      bits: Int): DataFrame = {
     val toks = dedupDocs(spark, dir).select(
       col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
     val dt = toks.select(col("doc_id"), portableIdUtf8(col("tok")).as("tid"))
-    val bitSums = (0 until 16).map { j =>
+    val bitSums = (0 until bits).map { j =>
       val bit = ((col("tid") * HashA(j % HashA.size) + HashB(j % HashB.size)
         + j) % P) % 2
       sum(bit * 2 - 1).as(s"s$j")
     }
-    val sig = (0 until 16).map(j =>
+    val sig = (0 until bits).map(j =>
       when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
     dt.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), sig.as("simhash16"))
+      .select(col("doc_id"), sig.as("sig"))
+  }
+
+  /** 16-bit SimHash ([[simhashSigs]]) per document plus the number of
+    * documents sharing its signature.
+    */
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
+    simhashSigs(spark, dir, 16)
+      .select(col("doc_id"), col("sig").as("simhash16"))
       .withColumn("n_same_sig",
         count(lit(1)).over(Window.partitionBy("simhash16")))
-  }
 
   /** Signature width for [[simhashPairs]] — 60 bits (the sign bit and
     * bits 60–63 stay clear, keeping every shift/xor in non-negative
@@ -1080,34 +1091,18 @@ object Dedup {
   val SimPairsMaxHamming = 3
 
   /** SimHash near-dup PAIRS: the second production near-dup path beside
-    * minhash ([[dedupMinhash]]) — 60-bit signatures, 15-bit-band
-    * blocking, exact hamming (`bit_count(xor)`) verification. Where
-    * [[dedupSimhash]] reports signatures and same-sig counts, this
-    * completes the pipeline to verified pairs.
-    *
-    * Scale shape mirrors the minhash guard: the pairwise join runs only
-    * inside sub-cap band buckets (bounded cap²/2 work per bucket), and
-    * identical-FULL-signature groups star-link to their min doc instead
-    * (O(k) pairs, hamming 0 by construction) — so an exact-dup block of
-    * 10⁶ copies costs linear candidates, never 10¹². 2^15 buckets per
-    * band keep expected bucket size |corpus|/32768; production widens
-    * to 64-bit signatures/16-bit bands with the same plan. All
-    * arithmetic is the portable integer hash family — both engines
-    * derive identical signatures bit-for-bit.
+    * minhash ([[dedupMinhash]]) — [[SimPairsBits]]-bit [[simhashSigs]]
+    * signatures fed to [[bandedPairs]], which owns the plan (15-bit-band
+    * blocking under the [[LshBucketCap]] guard, identical-signature
+    * star, exact `bit_count(xor)` verify). Where [[dedupSimhash]]
+    * reports signatures and same-sig counts, this completes the
+    * pipeline to verified pairs. 2^15 buckets per band keep expected
+    * bucket size |corpus|/32768; production widens to 64-bit
+    * signatures/16-bit bands with the same plan. All arithmetic is the
+    * portable integer hash family — both engines derive identical
+    * signatures bit-for-bit.
     */
-  def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val toks = dedupDocs(spark, dir).select(
-      col("doc_id"),
-      explode(array_distinct(split(col("text"), " "))).as("tok"))
-    val dt = toks.select(col("doc_id"), portableIdUtf8(col("tok")).as("tid"))
-    val bitSums = (0 until SimPairsBits).map { j =>
-      val bit = ((col("tid") * HashA(j % HashA.size) + HashB(j % HashB.size)
-        + j) % P) % 2
-      sum(bit * 2 - 1).as(s"s$j")
-    }
-    val sigExpr = (0 until SimPairsBits).map(j =>
-      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
+  def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     // Deliberately NOT cached (r20 measured): the signature table feeds
     // five plan branches and a cache would collapse the 5 scan+agg
     // subtrees to one — but the warm A/B read 2.2 s uncached vs 2.7 s
@@ -1117,16 +1112,50 @@ object Dedup {
     // constant ×5 on the LINEAR signature pass, not a scale hazard
     // (committed ladder α < 1); a cluster reader whose scan dominates
     // would flip this trade and persist the signature table instead.
-    val sigs = dt.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), sigExpr.as("sig"))
-    val bands = sigs.select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(SimPairsBands - 1))).as("band"))
+    bandedPairs(simhashSigs(spark, dir, SimPairsBits),
+      SimPairsBands, SimPairsBandBits, SimPairsMaxHamming)
+
+  /** Near-dup CLUSTERING: the step after pair generation — group the pair
+    * graph into connected components and elect one keeper (min doc_id) per
+    * component.
+    */
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterPairs(dedupMinhash(spark, dir).select("doc_a", "doc_b"))._1
+
+  /** One band per row: `df`'s (doc_id, sig) exploded over `bands`
+    * bands, with `bkey` the band's `bandBits`-bit slice of the
+    * signature — the band-key expression of [[bandedPairs]] and
+    * [[bandedCrossProbe]].
+    */
+  private def bandKeys(df: DataFrame, bands: Int, bandBits: Int): DataFrame =
+    df.select(col("doc_id"), col("sig"),
+        explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bkey", expr(
-        s"shiftright(sig, CAST(band * $SimPairsBandBits AS INT))" +
-          s" % ${1 << SimPairsBandBits}"))
+        s"shiftright(sig, CAST(band * $bandBits AS INT)) % ${1 << bandBits}"))
+
+  /** The banded-hamming candidate plan, owned here for every near-dup
+    * signature: text SimHash ([[simhashPairs]]), image dHash and the
+    * audio/video energy hashes (through [[bandedHammingClusters]]).
+    * `sigs` is (doc_id, sig) with sig a non-negative BIGINT of
+    * `bands × bandBits` meaningful bits (keep bands×bandBits ≤ 60 so
+    * shifts/xors never touch the sign bit on either engine). Plan:
+    * [[bandKeys]] → per-(band, bkey) size window → pairwise self-join
+    * inside buckets of at most [[LshBucketCap]] docs (bounded cap²/2
+    * work per bucket) ∪ an identical-FULL-signature star to each
+    * group's min doc (O(k) pairs, hamming 0 by construction — an
+    * exact-dup block of 10⁶ copies costs linear candidates, never
+    * 10¹²) → distinct → exact `bit_count(xor)` verify ≤ `maxHamming`.
+    * With `maxHamming` = bands − 1 the pigeonhole principle gives
+    * perfect recall below the cap: a pair within that many flips agrees
+    * on at least one whole band. Returns (doc_a, doc_b, hamming) with
+    * doc_a < doc_b.
+    */
+  private[graft] def bandedPairs(sigs: DataFrame, bands: Int,
+      bandBits: Int, maxHamming: Int): DataFrame = {
+    val gb = bandKeys(sigs, bands, bandBits)
       .withColumn("bsize",
         count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-    val gb = bands.filter(col("bsize") <= LshBucketCap)
+      .filter(col("bsize") <= LshBucketCap)
     val pairwise = gb.as("x").join(gb.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
           && col("x.doc_id") < col("y.doc_id"))
@@ -1141,46 +1170,19 @@ object Dedup {
       .join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
       .withColumn("hamming",
         expr("CAST(bit_count(sig_a ^ sig_b) AS INT)"))
-      .filter(col("hamming") <= SimPairsMaxHamming)
+      .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Near-dup CLUSTERING: the step after pair generation — group the pair
-    * graph into connected components and elect one keeper (min doc_id) per
-    * component.
-    */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterPairs(dedupMinhash(spark, dir).select("doc_a", "doc_b"))._1
-
-  /** Connected components over an undirected pair graph by min-label
-    * propagation WITH POINTER HALVING: each round every node takes the
-    * smallest root among itself and its neighbors, then follows one extra
-    * hop to that root's own root. The halving hop makes the round count
-    * O(log n) on deep graphs, not O(diameter): on a path graph the
-    * distance-to-root offset recurrence is o(k) = 2*o(k-1) + 2 (neighbor
-    * hop compounds with the halving hop), so a 1000-node path converges in
-    * ~9 rounds where plain propagation needs ~500 — the same guarantee
-    * large-star/small-star buys, with one fewer join per round
-    * (ClusteringSpec measures exactly this).
-    *
-    * Returns (labels, rounds): one row per node with its component root
-    * (= component min) and a keeper flag, plus the converged round count.
-    */
-  /** Shared hash-signature clustering: banded candidate generation with
-    * the [[LshBucketCap]] oversize guard + identical-signature star →
-    * exact `bit_count(xor)` hamming verify ≤ `maxHamming` → connected
-    * components + keeper election via [[clusterPairs]]. `sigs` is
-    * (doc_id, sig) with sig a non-negative BIGINT of `bands × bandBits`
-    * meaningful bits (keep bands×bandBits ≤ 60 so shifts/xors never
-    * touch the sign bit on either engine). This is the
-    * [[simhashPairs]] candidate plan generalized to any perceptual/
-    * content signature — text simhash, image dHash
-    * ([[Multimodal.imageDedup]]), audio energy-contour hash
-    * ([[Multimodal.audioDedup]]) all reuse it, so the scale contract is
+  /** Near-dup CLUSTERING over any hash signature: [[bandedPairs]] owns
+    * the candidate plan and the verify; this adds connected components
+    * and keeper election via [[clusterPairs]]. The modality dedups
+    * ([[Multimodal.imageDedup]], [[Multimodal.audioDedup]],
+    * [[Multimodal.videoDedup]]) all run it, so the scale contract is
     * proven once: candidates are band-bucketed (never all-pairs), the
     * pair graph is dup-sized, the component loop is O(log n). The
-    * MEASURED scale evidence for this plan is `q_simhash_pairs`' row in
-    * BASELINE.md's ScaleBench table (α ≈ 0.29 at sf0.1×10 — the
+    * MEASURED scale evidence for the shared plan is `q_simhash_pairs`'
+    * row in BASELINE.md's ScaleBench table (α ≈ 0.29 at sf0.1×10 — the
     * corpus-signature workload); the modality dedups themselves are
     * absent from ScaleBench because their corpus rows are magic-filtered
     * out before decode, leaving a planted-sized input BY CONSTRUCTION —
@@ -1191,66 +1193,42 @@ object Dedup {
     */
   private[graft] def bandedHammingClusters(sigs: DataFrame, bands: Int,
       bandBits: Int, maxHamming: Int): DataFrame = {
-    val banded = sigs.select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .withColumn("bkey", expr(
-        s"shiftright(sig, CAST(band * $bandBits AS INT)) % ${1 << bandBits}"))
-      .withColumn("bsize",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-    val gb = banded.filter(col("bsize") <= LshBucketCap)
-    val pairwise = gb.as("x").join(gb.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val star = sigs
-      .withColumn("hub", min(col("doc_id")).over(Window.partitionBy("sig")))
-      .filter(col("hub") < col("doc_id"))
-      .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"))
-    val sa = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val sb = sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    val pairs = pairwise.union(star).distinct()
-      .join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
-      .filter(expr("CAST(bit_count(sig_a ^ sig_b) AS INT)") <= maxHamming)
-      .select("doc_a", "doc_b")
-    val labels = clusterPairs(pairs)._1
+    val labels = clusterPairs(
+      bandedPairs(sigs, bands, bandBits, maxHamming)
+        .select("doc_a", "doc_b"))._1
     sigs.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), col("sig"),
         coalesce(col("component_root"), col("doc_id")).as("cluster_root"),
         coalesce(col("keep"), lit(true)).as("is_keeper"))
   }
 
-  /** Shared cross-side probe: corpus signatures tested against a
-    * BENCHMARK signature set (the decontamination shape — the benchmark
-    * is eval-suite-sized, never corpus-sized, so its bands broadcast).
-    * UNLIKE the self-join cluster path there is NO [[LshBucketCap]]
-    * corpus-side guard here: candidates are bounded by corpus rows ×
-    * bench rows sharing a band key (linear in the corpus with an
-    * eval-suite-sized constant, never quadratic), and a cap would
-    * silently DROP real leaks whenever a band bucket oversizes —
-    * decontamination must keep the pigeonhole recall guarantee intact.
-    * Dropping the cap also drops the per-(band,bkey) size window, so
-    * the corpus side is exchange-free: explode → broadcast-join →
-    * exact `bit_count(xor)` verify ≤ `maxHamming` → dedup of the
-    * (already leak-sized) hit pairs. Both inputs are (doc_id, sig);
-    * returns one row per (leaked corpus doc, benchmark hit):
-    * (doc_id, bench_id, hamming).
+  /** The cross-side probe, owned here for every modality's
+    * decontamination ([[Multimodal.imageDecontaminate]] and its audio
+    * and video siblings): corpus signatures tested against a BENCHMARK
+    * signature set (the benchmark is eval-suite-sized, never
+    * corpus-sized, so its bands broadcast). UNLIKE [[bandedPairs]]
+    * there is NO [[LshBucketCap]] corpus-side guard here: candidates
+    * are bounded by corpus rows × bench rows sharing a band key (linear
+    * in the corpus with an eval-suite-sized constant, never quadratic),
+    * and a cap would silently DROP real leaks whenever a band bucket
+    * oversizes — decontamination must keep the pigeonhole recall
+    * guarantee intact. Dropping the cap also drops the per-(band,bkey)
+    * size window, so the corpus side is exchange-free: [[bandKeys]] →
+    * broadcast-join → exact `bit_count(xor)` verify ≤ `maxHamming` →
+    * dedup of the (already leak-sized) hit pairs. Both inputs are
+    * (doc_id, sig); returns one row per (leaked corpus doc, benchmark
+    * hit): (doc_id, bench_id, hamming).
     */
   private[graft] def bandedCrossProbe(corpus: DataFrame, bench: DataFrame,
-      bands: Int, bandBits: Int, maxHamming: Int): DataFrame = {
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("sig"),
-          explode(sequence(lit(0), lit(bands - 1))).as("band"))
-        .withColumn("bkey", expr(
-          s"shiftright(sig, CAST(band * $bandBits AS INT)) % ${1 << bandBits}"))
-    banded(corpus).as("c")
-      .join(broadcast(banded(bench).as("b")),
+      bands: Int, bandBits: Int, maxHamming: Int): DataFrame =
+    bandKeys(corpus, bands, bandBits).as("c")
+      .join(broadcast(bandKeys(bench, bands, bandBits).as("b")),
         col("c.band") === col("b.band") && col("c.bkey") === col("b.bkey"))
       .select(col("c.doc_id").as("doc_id"),
         col("b.doc_id").as("bench_id"),
         expr("CAST(bit_count(c.sig ^ b.sig) AS INT)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
 
   /** DuckDB twin of [[bandedCrossProbe]]'s final select over a
     * preceding `sigs(doc_id, sig)` CTE: brute-force benchmark×corpus at
@@ -1268,14 +1246,12 @@ object Dedup {
        |WHERE bit_count(xor(c.sig, b.sig)) <= $maxHamming""".stripMargin
   }
 
-  /** DuckDB twin of [[bandedHammingClusters]]' tail: the CTE text from
-    * banding through the recursive component closure and the final
-    * per-doc select, over a preceding CTE named `sigs(doc_id, sig)`.
-    * `sigCol` names the output signature column (dhash / ahash / …).
-    * Callers must open their statement with `WITH RECURSIVE`.
+  /** DuckDB twin of [[bandedPairs]]: the CTE text from banding through
+    * the verified `pairs(doc_a, doc_b, hamming)`, over a preceding CTE
+    * named `sigs(doc_id, sig)`.
     */
-  private[graft] def bandedClusterSqlTail(bands: Int, bandBits: Int,
-      maxHamming: Int, sigCol: String): String =
+  private def bandedPairsSqlCtes(bands: Int, bandBits: Int,
+      maxHamming: Int): String =
     s"""bnd AS (SELECT doc_id, sig, band,
        |    (sig >> (band * $bandBits)) % ${1 << bandBits} AS bkey
        |  FROM sigs, (SELECT unnest(range(0, $bands)) AS band)),
@@ -1291,10 +1267,22 @@ object Dedup {
        |  FROM gb x JOIN gb y ON x.band = y.band AND x.bkey = y.bkey
        |    AND x.doc_id < y.doc_id
        |  UNION ALL SELECT doc_a, doc_b FROM star)),
-       |pairs AS (SELECT doc_a, doc_b FROM cand
+       |pairs AS (SELECT doc_a, doc_b,
+       |    CAST(bit_count(xor(sa.sig, sb.sig)) AS INTEGER) AS hamming
+       |  FROM cand
        |  JOIN sigs sa ON sa.doc_id = doc_a
        |  JOIN sigs sb ON sb.doc_id = doc_b
-       |  WHERE bit_count(xor(sa.sig, sb.sig)) <= $maxHamming),
+       |  WHERE bit_count(xor(sa.sig, sb.sig)) <= $maxHamming)""".stripMargin
+
+  /** DuckDB twin of [[bandedHammingClusters]]: [[bandedPairsSqlCtes]],
+    * then the recursive component closure and the final per-doc select,
+    * over a preceding CTE named `sigs(doc_id, sig)`. `sigCol` names the
+    * output signature column (dhash / ahash / …). Callers must open
+    * their statement with `WITH RECURSIVE`.
+    */
+  private[graft] def bandedClusterSqlTail(bands: Int, bandBits: Int,
+      maxHamming: Int, sigCol: String): String =
+    s"""${bandedPairsSqlCtes(bands, bandBits, maxHamming)},
        |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs),
        |reach(a, b) AS (SELECT a, b FROM edges
@@ -1353,6 +1341,20 @@ object Dedup {
     labels.toDF("doc_id", "component_root", "keep")
   }
 
+  /** Connected components over an undirected pair graph by min-label
+    * propagation WITH POINTER HALVING: each round every node takes the
+    * smallest root among itself and its neighbors, then follows one extra
+    * hop to that root's own root. The halving hop makes the round count
+    * O(log n) on deep graphs, not O(diameter): on a path graph the
+    * distance-to-root offset recurrence is o(k) = 2*o(k-1) + 2 (neighbor
+    * hop compounds with the halving hop), so a 1000-node path converges in
+    * ~9 rounds where plain propagation needs ~500 — the same guarantee
+    * large-star/small-star buys, with one fewer join per round
+    * (ClusteringSpec measures exactly this).
+    *
+    * Returns (labels, rounds): one row per node with its component root
+    * (= component min) and a keeper flag, plus the converged round count.
+    */
   private[graft] def clusterPairs(pairs: DataFrame,
       smallGraphMaxEdges: Long = SmallGraphMaxEdges): (DataFrame, Int) = {
     // localCheckpoint (not cache): iterative algorithms must TRUNCATE the
@@ -1528,14 +1530,6 @@ object Dedup {
       (993002L, s"pzb1 pzb2 pzb3 pzb4 pzb5 pzb6 pzb7 $quote wzb1"))
   }
 
-  /** Core of [[substringDedup]] over any (doc_id, text) frame — split
-    * out so PropertySpec can re-run it on the REDACTED corpus for the
-    * idempotence law.
-    */
-  /** (doc_id, pos, sid) window-position stream under the shared
-    * segmentation — the front half of [[substringSpans]] and the
-    * incremental probe.
-    */
   /** Format version of the persisted substring SID grid (the
     * [[ShingleGridVersion]] policy applied to [[substrSidIndex]], advice
     * r14): the grid is keyed by [[substrWindows]]'s segmentation +
@@ -1545,6 +1539,10 @@ object Dedup {
     */
   val SubstrGridVersion = 1
 
+  /** (doc_id, pos, sid) window-position stream under the shared
+    * segmentation — the front half of [[substringSpans]] and the
+    * incremental probe.
+    */
   private def substrWindows(docs: DataFrame): DataFrame =
     substrWindowsOf(docs.select(col("doc_id"),
       TextOps.segmentTokens(col("text")).as("t")))
@@ -1632,6 +1630,10 @@ object Dedup {
       .filter(col("span_tokens") >= SubstrMinSpan)
   }
 
+  /** Core of [[substringDedup]] over any (doc_id, text) frame — split
+    * out so PropertySpec can re-run it on the REDACTED corpus for the
+    * idempotence law.
+    */
   private[graft] def substringSpans(docs: DataFrame): DataFrame =
     substringSpansFromWindows(substrWindows(docs))
 
@@ -1665,11 +1667,6 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }(df => scala.util.Try(df.unpersist()): Unit)
 
-  /** DuckDB CTE chain from a preceding `src(doc_id, text)` CTE to the
-    * maximal-duplicated-interval table `sp(doc_id, island, span_start,
-    * span_end, n_windows)` — the twin of [[substringSpans]], shared by
-    * the span-listing and corpus-report oracles.
-    */
   /** tok+sh window CTEs from a preceding `src(doc_id, text)` CTE. */
   private def substrWindowSqlCtes: String = {
     val w = SubstrW
@@ -1700,6 +1697,11 @@ object Dedup {
        |  FROM isl GROUP BY doc_id, island)""".stripMargin
   }
 
+  /** DuckDB CTE chain from a preceding `src(doc_id, text)` CTE to the
+    * maximal-duplicated-interval table `sp(doc_id, island, span_start,
+    * span_end, n_windows)` — the twin of [[substringSpans]], shared by
+    * the span-listing and corpus-report oracles.
+    */
   private def substrSpanSqlCtes: String =
     s"""$substrWindowSqlCtes,
        |mk AS (SELECT doc_id, pos FROM (SELECT doc_id, pos,
@@ -2607,68 +2609,43 @@ object Dedup {
        |  FROM rds x JOIN rds y ON x.sid = y.sid AND x.doc_id < y.doc_id)
        |${verifySql(JaccardThreshold)}""".stripMargin
 
-  private val simhashSql: String = {
-    val bitSums = (0 until 16).map { j =>
+  /** DuckDB twin of [[simhashSigs]]: CTE text from a preceding `docs`
+    * CTE to `sigs(doc_id, <sigCol>)`, the `bits`-wide SimHash generated
+    * from the same constants.
+    */
+  private def simhashSigSqlCtes(bits: Int, sigCol: String): String = {
+    val bitSums = (0 until bits).map { j =>
       val a = HashA(j % HashA.size)
       val b = HashB(j % HashB.size)
       s"sum(((tid * $a + $b + $j) % $P) % 2 * 2 - 1) AS s$j"
     }.mkString(", ")
-    val sig = (0 until 16)
+    val sig = (0 until bits)
       .map(j => s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END")
       .mkString(" + ")
-    s"""WITH $docsCte,
-       |toks AS (SELECT doc_id,
+    s"""toks AS (SELECT doc_id,
        |    unnest(list_distinct(string_split(text, ' '))) AS tok
        |  FROM docs),
        |dt AS (SELECT doc_id, ${idUtf8Sql("tok")} AS tid FROM toks),
        |sums AS (SELECT doc_id, $bitSums FROM dt GROUP BY doc_id),
-       |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash16 FROM sums)
-       |SELECT doc_id, simhash16,
-       |  count(*) OVER (PARTITION BY simhash16) AS n_same_sig FROM sigs""".stripMargin
+       |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS $sigCol FROM sums)"""
+      .stripMargin
   }
 
-  /** DuckDB twin of [[simhashPairs]] (generated from the same
-    * constants): 60 bit-sums → signature → 15-bit-band blocking with the
-    * cap guard and same-signature star → xor/bit_count verification.
-    */
-  private val simhashPairsSql: String = {
-    val bitSums = (0 until SimPairsBits).map { j =>
-      val a = HashA(j % HashA.size)
-      val b = HashB(j % HashB.size)
-      s"sum(((tid * $a + $b + $j) % $P) % 2 * 2 - 1) AS s$j"
-    }.mkString(", ")
-    val sig = (0 until SimPairsBits)
-      .map(j => s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END")
-      .mkString(" + ")
+  private val simhashSql: String =
     s"""WITH $docsCte,
-       |toks AS (SELECT doc_id,
-       |    unnest(list_distinct(string_split(text, ' '))) AS tok
-       |  FROM docs),
-       |dt AS (SELECT doc_id, ${idUtf8Sql("tok")} AS tid FROM toks),
-       |sums AS (SELECT doc_id, $bitSums FROM dt GROUP BY doc_id),
-       |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS sig FROM sums),
-       |b AS (SELECT doc_id, sig, band,
-       |    (sig >> (band * $SimPairsBandBits)) % ${1 << SimPairsBandBits}
-       |      AS bkey
-       |  FROM sigs, (SELECT unnest(range(0, $SimPairsBands)) AS band)),
-       |sized AS (SELECT doc_id, band, bkey,
-       |    count(*) OVER (PARTITION BY band, bkey) AS bsize FROM b),
-       |gb AS (SELECT doc_id, band, bkey FROM sized
-       |  WHERE bsize <= $LshBucketCap),
-       |star AS (SELECT hub AS doc_a, doc_id AS doc_b FROM (
-       |  SELECT min(doc_id) OVER (PARTITION BY sig) AS hub, doc_id
-       |  FROM sigs) WHERE hub < doc_id),
-       |cand AS (SELECT DISTINCT doc_a, doc_b FROM (
-       |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM gb x JOIN gb y ON x.band = y.band AND x.bkey = y.bkey
-       |    AND x.doc_id < y.doc_id
-       |  UNION ALL SELECT doc_a, doc_b FROM star))
-       |SELECT doc_a, doc_b,
-       |  CAST(bit_count(xor(sa.sig, sb.sig)) AS INTEGER) AS hamming
-       |FROM cand JOIN sigs sa ON sa.doc_id = doc_a
-       |JOIN sigs sb ON sb.doc_id = doc_b
-       |WHERE bit_count(xor(sa.sig, sb.sig)) <= $SimPairsMaxHamming""".stripMargin
-  }
+       |${simhashSigSqlCtes(16, "simhash16")}
+       |SELECT doc_id, simhash16,
+       |  count(*) OVER (PARTITION BY simhash16) AS n_same_sig FROM sigs""".stripMargin
+
+  /** DuckDB twin of [[simhashPairs]]: [[simhashSigSqlCtes]] at
+    * [[SimPairsBits]] → [[bandedPairsSqlCtes]].
+    */
+  private val simhashPairsSql: String =
+    s"""WITH $docsCte,
+       |${simhashSigSqlCtes(SimPairsBits, "sig")},
+       |${bandedPairsSqlCtes(SimPairsBands, SimPairsBandBits,
+            SimPairsMaxHamming)}
+       |SELECT doc_a, doc_b, hamming FROM pairs""".stripMargin
 
   private val decontaminateSql: String =
     s"""WITH $shingleSql,

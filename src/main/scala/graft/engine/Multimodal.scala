@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -138,12 +140,6 @@ object Multimodal {
   case class PpmImage(width: Int, height: Int,
     sumR: Long, sumG: Long, sumB: Long)
 
-  /** REAL P6 decoder (not a stub): parses the PPM header — magic,
-    * whitespace/`#`-comment tokens, width, height, maxval ≤ 255, the
-    * single whitespace byte before the raster — and folds the RGB raster
-    * into per-channel sums. Throws on malformed/truncated input; callers
-    * quarantine those rows rather than NPE a cluster job.
-    */
   /** Parse a P6 header (magic, whitespace/`#`-comment tokens, width,
     * height, maxval ≤ 255, the single terminating whitespace byte);
     * returns (width, height, raster start offset). Throws on malformed
@@ -176,6 +172,12 @@ object Multimodal {
     (w, h, pos)
   }
 
+  /** REAL P6 decoder (not a stub): parses the PPM header — magic,
+    * whitespace/`#`-comment tokens, width, height, maxval ≤ 255, the
+    * single whitespace byte before the raster — and folds the RGB raster
+    * into per-channel sums. Throws on malformed/truncated input; callers
+    * quarantine those rows rather than NPE a cluster job.
+    */
   private[graft] def decodePpm(bytes: Array[Byte]): PpmImage = {
     val (w, h, pos) = parsePpmHeader(bytes)
     var (sr, sg, sb) = (0L, 0L, 0L)
@@ -554,15 +556,17 @@ object Multimodal {
     * hash collides. Pipeline: magic-filtered decode (P6 + PNG; lossy
     * JPEG stays out for the same oracle reason as [[multimodalResize]])
     * → 60-bit dHash per image (map-side kernel over the already-real
-    * decoders) → [[DHashBands]]×[[DHashBandBits]]-bit banded candidate
-    * join with the [[Dedup.LshBucketCap]] oversize guard and an
-    * identical-signature star (the [[Dedup.simhashPairs]] plan, reused
-    * bit for bit) → exact `bit_count(xor)` hamming verify ≤
-    * [[DHashMaxHamming]] → connected components + keeper election via
-    * [[Dedup.clusterPairs]] (pointer-halving, O(log n) rounds). Output:
-    * one row per decoded image with its hash, cluster root, and keeper
-    * flag. Scale shape: decode is partition-wise, candidates are
-    * band-bucketed (never all-pairs), the pair graph is dup-sized.
+    * decoders) → [[Dedup.bandedHammingClusters]], which owns the plan:
+    * [[DHashBands]]×[[DHashBandBits]]-bit banded candidates from
+    * [[Dedup.bandedPairs]] (the [[Dedup.LshBucketCap]] oversize guard,
+    * the identical-signature star, exact `bit_count(xor)` hamming
+    * verify ≤ [[DHashMaxHamming]]) → connected components + keeper
+    * election via [[Dedup.clusterPairs]] (pointer-halving, O(log n)
+    * rounds). [[hashDedup]] is the pipeline all three modalities
+    * share. Output: one row per decoded image with its hash, cluster
+    * root, and keeper flag. Scale shape: decode is partition-wise,
+    * candidates are band-bucketed (never all-pairs), the pair graph is
+    * dup-sized.
     * Measured scale evidence: this is [[Dedup.bandedHammingClusters]],
     * whose exponent `q_simhash_pairs` prices in BASELINE.md's
     * ScaleBench table (α ≈ 0.29) — the modality queries themselves are
@@ -570,47 +574,8 @@ object Multimodal {
     * decode), so the shared plan's row IS their 100 TB story; the same
     * cross-reference covers [[audioDedup]] and [[videoDedup]].
     */
-  /** (doc_id, sig) dHash table over the image-decodable slice of the
-    * media table plus `extra` planted (id, payload) rows: magic-filtered
-    * P6/PNG decode, malformed payloads quarantined — the shared front
-    * half of [[imageDedup]] and [[imageDecontaminate]].
-    */
-  private def imageSigTable(spark: SparkSession, dir: String,
-      extra: Seq[(Long, Array[Byte])]): DataFrame = {
-    import spark.implicits._
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    val planted = extra.map { case (id, p) => (id, "image", p) }
-      .toDF("doc_id", "media_type", "payload")
-    mediaTableFull(spark, dir).unionByName(planted)
-      .filter(col("payload").isNotNull &&
-        (substring(col("payload"), 1, 2) === lit("P6".getBytes(ascii)) ||
-         substring(col("payload"), 1, 4) ===
-           lit(Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte))))
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // malformed magic-prefixed payloads quarantine to zero rows
-        it.flatMap { case (id, bytes) =>
-          scala.util.Try(
-            if (bytes(0) == 'P') dhashPpm(bytes) else dhashImage(bytes)
-          ).toOption.map(sig => (id, sig))
-        }
-      }
-      .toDF("doc_id", "sig")
-  }
-
-  private def imageDedupPayloads: Seq[(Long, Array[Byte])] =
-    ImageDedupPlanted.map { case (id, w, h, ma, ab, mm, png) =>
-      (id,
-        if (png) pngPayloadF(w, h, ma, ab, mm)
-        else ppmPayloadF(w, h, ma, ab, mm))
-    }
-
   def imageDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.bandedHammingClusters(
-        imageSigTable(spark, dir, imageDedupPayloads),
-        DHashBands, DHashBandBits, DHashMaxHamming)
-      .withColumnRenamed("sig", "dhash")
+    hashDedup(spark, dir, ImageHash)
 
   /** Planted LEAKED images for [[imageDecontaminate]]: 926001 is a PNG
     * re-encode of benchmark image 920002 (identical pixels — the exact
@@ -623,35 +588,23 @@ object Multimodal {
       (926001L, 8, 5, 7, 13, 251, true),
       (926002L, 16, 16, 7, 19, 251, false))
 
-  private def imageLeakPayloads: Seq[(Long, Array[Byte])] =
-    ImageLeakPlanted.map { case (id, w, h, ma, ab, mm, png) =>
-      (id,
-        if (png) pngPayloadF(w, h, ma, ab, mm)
-        else ppmPayloadF(w, h, ma, ab, mm))
-    }
-
   /** IMAGE decontamination — the modality analog of `q_decontaminate`:
     * training images whose perceptual hash sits within
     * [[DHashMaxHamming]] of any held-out BENCHMARK image (here the
     * [[PpmPlanted]] trio plays the eval suite) must be flagged before
     * training, and byte-level checks cannot do it (a re-encoded or
     * brightness-shifted copy of an eval image has entirely different
-    * bytes). Plan: one dHash pass over benchmark ∪ corpus, benchmark
-    * bands BROADCAST (the eval suite is thousands of images, never
-    * corpus-sized) against band-bucketed corpus candidates under the
-    * [[Dedup.LshBucketCap]] guard, exact hamming verify — pigeonhole
-    * recall is perfect at the threshold, and the corpus never
-    * self-joins. Output: one row per (leaked image, benchmark hit).
+    * bytes). Plan: one dHash pass over benchmark ∪ corpus, then
+    * [[Dedup.bandedCrossProbe]], which owns the plan: benchmark bands
+    * BROADCAST (the eval suite is thousands of images, never
+    * corpus-sized) against the corpus's band keys with no bucket cap,
+    * exact hamming verify — pigeonhole recall is perfect at the
+    * threshold, and the corpus never self-joins. [[hashDecontaminate]]
+    * is the pipeline all three modalities share. Output: one row per
+    * (leaked image, benchmark hit).
     */
-  def imageDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val benchIds = PpmPlanted.map(_._1)
-    val sigs = imageSigTable(spark, dir,
-      imageDedupPayloads ++ imageLeakPayloads)
-    Dedup.bandedCrossProbe(
-      sigs.filter(!col("doc_id").isInCollection(benchIds)),
-      sigs.filter(col("doc_id").isInCollection(benchIds)),
-      DHashBands, DHashBandBits, DHashMaxHamming)
-  }
+  def imageDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    hashDecontaminate(spark, dir, ImageHash)
 
   // ===== perceptual audio dedup (energy-contour hash) =================
 
@@ -718,49 +671,16 @@ object Multimodal {
 
   /** CONTENT-level audio dedup — [[imageDedup]]'s plan applied to the
     * second modality: RIFF-magic-filtered decode through the real WAV
-    * chunk walker → amplitude-invariant energy-contour hash → the shared
-    * [[Dedup.bandedHammingClusters]] (banded candidates, oversize guard,
-    * identical-signature star, exact hamming verify, pointer-halving
-    * components). Catches what byte-level dedup cannot: the same
-    * recording re-encoded at a different volume has different bytes,
-    * different stats, but the identical energy contour.
+    * chunk walker → amplitude-invariant energy-contour hash →
+    * [[Dedup.bandedHammingClusters]], which owns the plan (banded
+    * candidates, oversize guard, identical-signature star, exact hamming
+    * verify, pointer-halving components), through the shared
+    * [[hashDedup]] pipeline. Catches what byte-level dedup cannot: the
+    * same recording re-encoded at a different volume has different
+    * bytes, different stats, but the identical energy contour.
     */
-  /** (doc_id, sig) energy-hash table over the RIFF-decodable slice of
-    * the media table plus `extra` planted (id, payload) rows — the
-    * shared front half of [[audioDedup]] and [[audioDecontaminate]].
-    */
-  private def audioSigTable(spark: SparkSession, dir: String,
-      extra: Seq[(Long, Array[Byte])]): DataFrame = {
-    import spark.implicits._
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    val planted = ((WavPlanted.map { case (id, ch, rate, n, lst) =>
-        (id, wavPayload(ch, rate, n, lst)) }
-      ++ extra :+ ((MalformedWavId, malformedWavPayload)))
-      .map { case (id, p) => (id, "audio", p) })
-      .toDF("doc_id", "media_type", "payload")
-    mediaTable(spark, dir).unionByName(planted)
-      .filter(col("payload").isNotNull &&
-        substring(col("payload"), 1, 4) === lit("RIFF".getBytes(ascii)))
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          scala.util.Try(dhashWav(bytes)).toOption.map(sig => (id, sig))
-        }
-      }
-      .toDF("doc_id", "sig")
-  }
-
-  private def audioDedupPayloads: Seq[(Long, Array[Byte])] =
-    AudioDedupPlanted.map { case (id, n, sc, ma, ab) =>
-      (id, wavPayloadF(1, 8000, n, withList = false, sc, ma, ab))
-    }
-
   def audioDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.bandedHammingClusters(
-        audioSigTable(spark, dir, audioDedupPayloads),
-        AHashBands, AHashBandBits, AHashMaxHamming)
-      .withColumnRenamed("sig", "ahash")
+    hashDedup(spark, dir, AudioHash)
 
   /** Planted LEAKED recordings for [[audioDecontaminate]]: 966001 is
     * benchmark WAV 960001's content at gain 3 (identical energy
@@ -775,23 +695,14 @@ object Multimodal {
 
   /** AUDIO decontamination: training recordings within
     * [[AHashMaxHamming]] of any held-out benchmark recording (the
-    * [[WavPlanted]] trio plays the eval suite) — same
-    * [[Dedup.bandedCrossProbe]] plan as the image variant; a
+    * [[WavPlanted]] trio plays the eval suite) — the plan is
+    * [[Dedup.bandedCrossProbe]]'s, through the shared
+    * [[hashDecontaminate]] pipeline; a
     * volume-changed re-master of an eval recording has different bytes
     * and different stats but the identical contour.
     */
-  def audioDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val benchIds = WavPlanted.map(_._1)
-    val sigs = audioSigTable(spark, dir,
-      audioDedupPayloads ++ AudioLeakPlanted.map {
-        case (id, n, sc, ma, ab) =>
-          (id, wavPayloadF(1, 8000, n, withList = false, sc, ma, ab))
-      })
-    Dedup.bandedCrossProbe(
-      sigs.filter(!col("doc_id").isInCollection(benchIds)),
-      sigs.filter(col("doc_id").isInCollection(benchIds)),
-      AHashBands, AHashBandBits, AHashMaxHamming)
-  }
+  def audioDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    hashDecontaminate(spark, dir, AudioHash)
 
   // ===== perceptual video dedup (luma-stream energy hash) =============
 
@@ -880,51 +791,15 @@ object Multimodal {
   }
 
   /** CONTENT-level video dedup — the third modality on the shared
-    * [[Dedup.bandedHammingClusters]] plan: Y4M-magic-filtered decode →
-    * contrast-invariant luma energy hash → banded candidates, exact
-    * hamming verify, components. A re-encoded copy at different
-    * contrast/brightness processing has different bytes but the
-    * identical luma contour; a one-frame edit lands within the
-    * threshold as a near-dup.
+    * [[hashDedup]] pipeline, whose plan [[Dedup.bandedHammingClusters]]
+    * owns: Y4M-magic-filtered decode → contrast-invariant luma energy
+    * hash → banded candidates, exact hamming verify, components. A
+    * re-encoded copy at different contrast/brightness processing has
+    * different bytes but the identical luma contour; a one-frame edit
+    * lands within the threshold as a near-dup.
     */
-  /** (doc_id, sig) luma-hash table over the Y4M-decodable slice of the
-    * media table plus `extra` planted (id, payload) rows — the shared
-    * front half of [[videoDedup]] and [[videoDecontaminate]].
-    */
-  private def videoSigTable(spark: SparkSession, dir: String,
-      extra: Seq[(Long, Array[Byte])]): DataFrame = {
-    import spark.implicits._
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    val planted = ((VideoPlanted.map { case (id, w, h, n, fn, fd, x) =>
-        (id, y4mPayload(w, h, n, fn, fd, x)) }
-      ++ extra :+ ((MalformedY4mId, malformedY4mPayload)))
-      .map { case (id, p) => (id, "video", p) })
-      .toDF("doc_id", "media_type", "payload")
-    mediaTable(spark, dir).unionByName(planted)
-      .filter(col("payload").isNotNull &&
-        substring(col("payload"), 1, 9) === lit("YUV4MPEG2".getBytes(ascii)))
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          scala.util.Try(dhashY4m(bytes)).toOption.map(sig => (id, sig))
-        }
-      }
-      .toDF("doc_id", "sig")
-  }
-
-  private def videoDedupPayloads: Seq[(Long, Array[Byte])] =
-    VideoDedupPlanted.map {
-      case (id, w, h, n, sc, ma, fa, ab, mm, altF, altA) =>
-        (id, y4mPayloadF(w, h, n, 25, 1, extras = false, sc, ma, fa, ab, mm,
-          altF, altA))
-    }
-
   def videoDedup(spark: SparkSession, dir: String): DataFrame =
-    Dedup.bandedHammingClusters(
-        videoSigTable(spark, dir, videoDedupPayloads),
-        AHashBands, AHashBandBits, AHashMaxHamming)
-      .withColumnRenamed("sig", "vhash")
+    hashDedup(spark, dir, VideoHash)
 
   /** Planted LEAKED streams for [[videoDecontaminate]]: 986001
     * re-serializes benchmark stream 980001 with extra container
@@ -940,19 +815,14 @@ object Multimodal {
 
   /** VIDEO decontamination: training streams within [[AHashMaxHamming]]
     * of any held-out benchmark stream (the [[VideoPlanted]] trio plays
-    * the eval suite) — the third modality on [[Dedup.bandedCrossProbe]];
-    * a re-muxed copy of an eval stream has different container bytes
-    * but the identical luma contour.
+    * the eval suite) — the third modality on the shared
+    * [[hashDecontaminate]] pipeline, whose plan
+    * [[Dedup.bandedCrossProbe]] owns; a re-muxed copy of an eval
+    * stream has different container bytes but the identical luma
+    * contour.
     */
-  def videoDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val benchIds = VideoPlanted.map(_._1)
-    val sigs = videoSigTable(spark, dir,
-      videoDedupPayloads ++ videoLeakPayloads)
-    Dedup.bandedCrossProbe(
-      sigs.filter(!col("doc_id").isInCollection(benchIds)),
-      sigs.filter(col("doc_id").isInCollection(benchIds)),
-      AHashBands, AHashBandBits, AHashMaxHamming)
-  }
+  def videoDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    hashDecontaminate(spark, dir, VideoHash)
 
   /** Frame/stride sampling registered as a driver query: one row per
     * 64-byte frame offset with its 4-char magic window.
@@ -1039,13 +909,6 @@ object Multimodal {
     n_samples: Long, duration_ms: Long, sum_amp: Long, sum_sq_amp: Long,
     peak_amp: Int)
 
-  /** REAL RIFF/WAVE parser (not a stub; pure JVM): validates the RIFF /
-    * WAVE container, walks chunks (honoring the even-byte RIFF padding
-    * rule, skipping unknown chunks like LIST), requires PCM 16-bit, and
-    * folds the interleaved data chunk into per-channel integer stats.
-    * Throws on malformed/truncated input; callers quarantine (same
-    * contract as [[decodePpm]]/[[decodeImage]]).
-    */
   /** Parsed RIFF/WAVE layout: the validated container walk shared by the
     * stats decoder and the audio content hash — (buffer, channels, rate,
     * data chunk offset, data chunk byte length).
@@ -1089,6 +952,13 @@ object Multimodal {
     (bb, channels, rate, dataOff, dataLen)
   }
 
+  /** REAL RIFF/WAVE parser (not a stub; pure JVM): validates the RIFF /
+    * WAVE container, walks chunks (honoring the even-byte RIFF padding
+    * rule, skipping unknown chunks like LIST), requires PCM 16-bit, and
+    * folds the interleaved data chunk into per-channel integer stats.
+    * Throws on malformed/truncated input; callers quarantine (same
+    * contract as [[decodePpm]]/[[decodeImage]]).
+    */
   private[graft] def decodeWav(docId: Long,
       bytes: Array[Byte]): Seq[AudioStats] = {
     val (bb, channels, rate, dataOff, dataLen) = wavLayout(bytes)
@@ -1312,6 +1182,124 @@ object Multimodal {
       .toDF()
   }
 
+  // ===== one pipeline for the three hash-signature modalities =======
+
+  /** What one hash-signature modality supplies to the shared pipeline
+    * ([[sigTable]] → [[hashDedup]] / [[hashDecontaminate]]); everything
+    * else — decode fan-out, quarantine, banding, verify, components —
+    * is common. `base` is the media source the planted rows join;
+    * `planted` wraps a query's planted (id, payload) rows with the
+    * modality's fixed rows; payloads whose prefix matches one of
+    * `magics` reach `hash`, which throws on malformed input.
+    */
+  private final case class HashModality(
+      mediaType: String,
+      base: (SparkSession, String) => DataFrame,
+      planted: Seq[(Long, Array[Byte])] => Seq[(Long, Array[Byte])],
+      magics: Seq[Array[Byte]],
+      hash: Array[Byte] => Long,
+      bands: Int, bandBits: Int, maxHamming: Int,
+      hashCol: String,
+      benchIds: Seq[Long],
+      dedupPayloads: () => Seq[(Long, Array[Byte])],
+      leakPayloads: () => Seq[(Long, Array[Byte])])
+
+  private def imagePayload(
+      r: (Long, Int, Int, Int, Int, Int, Boolean)): (Long, Array[Byte]) = {
+    val (id, w, h, ma, ab, mm, png) = r
+    (id, if (png) pngPayloadF(w, h, ma, ab, mm)
+      else ppmPayloadF(w, h, ma, ab, mm))
+  }
+
+  private def audioPayload(
+      r: (Long, Int, Int, Int, Int)): (Long, Array[Byte]) = {
+    val (id, n, sc, ma, ab) = r
+    (id, wavPayloadF(1, 8000, n, withList = false, sc, ma, ab))
+  }
+
+  /** P6 + PNG dHash over [[mediaTableFull]]; lossy JPEG stays out. */
+  private val ImageHash = HashModality("image", mediaTableFull, identity,
+    Seq("P6".getBytes(US_ASCII),
+      Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte)),
+    bytes => if (bytes(0) == 'P') dhashPpm(bytes) else dhashImage(bytes),
+    DHashBands, DHashBandBits, DHashMaxHamming, "dhash", PpmPlanted.map(_._1),
+    () => ImageDedupPlanted.map(imagePayload),
+    () => ImageLeakPlanted.map(imagePayload))
+
+  /** RIFF energy hash over [[mediaTable]] + the [[WavPlanted]] trio and
+    * the malformed WAV.
+    */
+  private val AudioHash = HashModality("audio", mediaTable,
+    extra => (WavPlanted.map { case (id, ch, rate, n, lst) =>
+        (id, wavPayload(ch, rate, n, lst)) } ++ extra)
+      :+ ((MalformedWavId, malformedWavPayload)),
+    Seq("RIFF".getBytes(US_ASCII)), dhashWav,
+    AHashBands, AHashBandBits, AHashMaxHamming, "ahash", WavPlanted.map(_._1),
+    () => AudioDedupPlanted.map(audioPayload),
+    () => AudioLeakPlanted.map(audioPayload))
+
+  /** Y4M luma hash over [[mediaTable]] + the [[VideoPlanted]] trio and
+    * the malformed stream.
+    */
+  private val VideoHash = HashModality("video", mediaTable,
+    extra => (VideoPlanted.map { case (id, w, h, n, fn, fd, x) =>
+        (id, y4mPayload(w, h, n, fn, fd, x)) } ++ extra)
+      :+ ((MalformedY4mId, malformedY4mPayload)),
+    Seq("YUV4MPEG2".getBytes(US_ASCII)), dhashY4m,
+    AHashBands, AHashBandBits, AHashMaxHamming, "vhash", VideoPlanted.map(_._1),
+    () => VideoDedupPlanted.map {
+      case (id, w, h, n, sc, ma, fa, ab, mm, altF, altA) =>
+        (id, y4mPayloadF(w, h, n, 25, 1, extras = false, sc, ma, fa, ab, mm,
+          altF, altA))
+    },
+    () => videoLeakPayloads)
+
+  /** (doc_id, sig) hash table over `m`'s decodable slice of its base
+    * source plus `extra` planted (id, payload) rows: magic-filtered,
+    * partition-wise hash, malformed payloads quarantined — the front
+    * half of [[hashDedup]] and [[hashDecontaminate]].
+    */
+  private def sigTable(spark: SparkSession, dir: String, m: HashModality,
+      extra: Seq[(Long, Array[Byte])]): DataFrame = {
+    import spark.implicits._
+    val planted = m.planted(extra).map { case (id, p) => (id, m.mediaType, p) }
+      .toDF("doc_id", "media_type", "payload")
+    val hash = m.hash // the closure below must capture only the kernel
+    m.base(spark, dir).unionByName(planted)
+      .filter(col("payload").isNotNull && m.magics.map(g =>
+        substring(col("payload"), 1, g.length) === lit(g)).reduce(_ || _))
+      .select(col("doc_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        // malformed magic-prefixed payloads quarantine to zero rows
+        it.flatMap { case (id, bytes) =>
+          scala.util.Try(hash(bytes)).toOption.map(sig => (id, sig))
+        }
+      }
+      .toDF("doc_id", "sig")
+  }
+
+  /** The modality dedup: [[sigTable]] over the dedup plants →
+    * [[Dedup.bandedHammingClusters]].
+    */
+  private def hashDedup(spark: SparkSession, dir: String,
+      m: HashModality): DataFrame =
+    Dedup.bandedHammingClusters(sigTable(spark, dir, m, m.dedupPayloads()),
+        m.bands, m.bandBits, m.maxHamming)
+      .withColumnRenamed("sig", m.hashCol)
+
+  /** The modality decontamination: [[sigTable]] over the dedup and leak
+    * plants, split at `m.benchIds` → [[Dedup.bandedCrossProbe]].
+    */
+  private def hashDecontaminate(spark: SparkSession, dir: String,
+      m: HashModality): DataFrame = {
+    val sigs = sigTable(spark, dir, m, m.dedupPayloads() ++ m.leakPayloads())
+    Dedup.bandedCrossProbe(
+      sigs.filter(!col("doc_id").isInCollection(m.benchIds)),
+      sigs.filter(col("doc_id").isInCollection(m.benchIds)),
+      m.bands, m.bandBits, m.maxHamming)
+  }
+
   val queries: Map[String, Q] = Map(
     "q_multimodal_meta" -> multimodalMeta _,
     "q_multimodal_decode" -> multimodalDecode _,
@@ -1326,12 +1314,6 @@ object Multimodal {
     "q_video_decontaminate" -> videoDecontaminate _,
     "q_frame_sample" -> multimodalFrameSample _)
 
-  /** DuckDB twin of [[videoDedup]]: one VALUES row per planted stream
-    * derives the concatenated-Y-plane byte formula (frame f, pixel i,
-    * one-frame phase override), block energies, gradient bits, and the
-    * shared banding/closure tail — independent of the engine's Y4M
-    * walker.
-    */
   /** The formula-derived luma-hash CTE chain for Y4M rows, shared by
     * the video-family oracles. `values` rows are (doc_id, w, h, frames,
     * sc, ma, fa, ab, mm, altf, alta).
@@ -1366,6 +1348,12 @@ object Multimodal {
           s"($id, $w, $h, $n, $sc, $ma, $fa, $ab, $mm, $altf, $alta)" })
       .mkString(", ")
 
+  /** DuckDB twin of [[videoDedup]]: one VALUES row per planted stream
+    * derives the concatenated-Y-plane byte formula (frame f, pixel i,
+    * one-frame phase override), block energies, gradient bits, and the
+    * shared banding/closure tail — independent of the engine's Y4M
+    * walker.
+    */
   private val videoDedupSql: String =
     s"""WITH RECURSIVE ${videoSigSqlCtes(videoSigValues(VideoDedupPlanted))},
        |${Dedup.bandedClusterSqlTail(AHashBands, AHashBandBits,
@@ -1388,12 +1376,6 @@ object Multimodal {
        |${Dedup.crossProbeSqlTail(VideoPlanted.map(_._1), AHashMaxHamming)}"""
       .stripMargin
 
-  /** DuckDB twin of [[audioDedup]]: one VALUES row (doc_id, n, sc, ma,
-    * ab) per planted WAV derives block absolute energies, the 60
-    * gradient bits, and the shared banding/closure tail — independent of
-    * the engine's RIFF walker, so the hash gate proves the real parser's
-    * samples equal the formula.
-    */
   /** The formula-derived energy-hash CTE chain for WAV rows, shared by
     * the audio-family oracles. `values` rows are (doc_id, n, sc, ma,
     * ab).
@@ -1420,6 +1402,12 @@ object Multimodal {
       extra.map { case (id, n, sc, ma, ab) =>
         s"($id, $n, $sc, $ma, $ab)" }).mkString(", ")
 
+  /** DuckDB twin of [[audioDedup]]: one VALUES row (doc_id, n, sc, ma,
+    * ab) per planted WAV derives block absolute energies, the 60
+    * gradient bits, and the shared banding/closure tail — independent of
+    * the engine's RIFF walker, so the hash gate proves the real parser's
+    * samples equal the formula.
+    */
   private val audioDedupSql: String =
     s"""WITH RECURSIVE ${audioSigSqlCtes(audioSigValues(AudioDedupPlanted))},
        |${Dedup.bandedClusterSqlTail(AHashBands, AHashBandBits,
@@ -1434,15 +1422,6 @@ object Multimodal {
        |${Dedup.crossProbeSqlTail(WavPlanted.map(_._1), AHashMaxHamming)}"""
       .stripMargin
 
-  /** DuckDB twin of [[imageDedup]]: every P6/PNG image in the query is a
-    * planted arithmetic raster, so one VALUES row (doc_id, w, h, ma, ab,
-    * mm) per image derives the exact luma grid, the 60-bit dHash, the
-    * banded candidate generation + star, the hamming verify, and the
-    * component closure (the recursive-CTE pattern of `clustersSql`) —
-    * fully independently of the engine's ImageIO/P6 decoders, which is
-    * the point: the hash gate proves REAL decoded pixels equal the
-    * formula.
-    */
   /** The (id, w, h, ma, ab, mm) VALUES rows shared by the image-family
     * oracles: every P6/PNG image reaching a given query.
     */
@@ -1477,27 +1456,30 @@ object Multimodal {
        |  FROM imgs i LEFT JOIN bit ON i.doc_id = bit.doc_id
        |  GROUP BY i.doc_id)""".stripMargin
 
+  /** DuckDB twin of [[imageDedup]]: every P6/PNG image in the query is a
+    * planted arithmetic raster, so one VALUES row (doc_id, w, h, ma, ab,
+    * mm) per image derives the exact luma grid, the 60-bit dHash, the
+    * banded candidate generation + star, the hamming verify, and the
+    * component closure (the recursive-CTE pattern of `clustersSql`) —
+    * fully independently of the engine's ImageIO/P6 decoders, which is
+    * the point: the hash gate proves REAL decoded pixels equal the
+    * formula.
+    */
   private val imageDedupSql: String =
     s"""WITH RECURSIVE ${imageSigSqlCtes(imageSigValues(ImageDedupPlanted))},
        |${Dedup.bandedClusterSqlTail(DHashBands, DHashBandBits,
             DHashMaxHamming, "dhash")}""".stripMargin
 
   /** DuckDB twin of [[imageDecontaminate]]: formula-derived dHashes for
-    * benchmark ∪ corpus, then a brute-force benchmark×corpus hamming
-    * test — equivalent to the engine's banded path at the threshold by
-    * the pigeonhole guarantee (and the cap never binds at planted
-    * scale).
+    * benchmark ∪ corpus, then [[Dedup.crossProbeSqlTail]]'s brute-force
+    * benchmark×corpus hamming test — equivalent to the engine's uncapped
+    * banded path at the threshold by the pigeonhole guarantee.
     */
-  private val imageDecontaminateSql: String = {
-    val benchList = PpmPlanted.map(_._1).mkString(", ")
+  private val imageDecontaminateSql: String =
     s"""WITH ${imageSigSqlCtes(
            imageSigValues(ImageDedupPlanted ++ ImageLeakPlanted))}
-       |SELECT c.doc_id, b.doc_id AS bench_id,
-       |  CAST(bit_count(xor(c.sig, b.sig)) AS INTEGER) AS hamming
-       |FROM sigs c JOIN sigs b ON b.doc_id IN ($benchList)
-       |  AND c.doc_id NOT IN ($benchList)
-       |WHERE bit_count(xor(c.sig, b.sig)) <= $DHashMaxHamming""".stripMargin
-  }
+       |${Dedup.crossProbeSqlTail(PpmPlanted.map(_._1), DHashMaxHamming)}"""
+      .stripMargin
 
   /** DuckDB twin of [[multimodalAudio]]: per planted (doc_id, channels,
     * rate, frames), channel `c` reads interleaved indices `f*ch + c` of

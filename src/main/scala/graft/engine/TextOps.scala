@@ -900,6 +900,41 @@ object TextOps {
     (996003L, "<a href=\"https://t2.example.org/a\">beta ref</a>" +
       "<a href=\"https://t2.example.org/b\">alpha ref</a>"))
 
+  /** (dst_host, atext, n): link counts per target host and normalized
+    * anchor text over the corpus plus [[AnchorPlantedRows]] — the input
+    * of both [[anchorText]] branches, CACHED and memoized per (session,
+    * dir); session eviction unpersists it.
+    */
+  private[graft] def anchorCounts(spark: SparkSession,
+      dir: String): DataFrame =
+    SessionMemo.getOrComputeCleanup(spark, s"textops.anchorCounts:$dir") {
+      import spark.implicits._
+      val synth = Tables.documents(spark, dir).select(col("doc_id"),
+        concat(
+          lit("<a href=\"https://src"), (col("doc_id") + 1) % 20,
+          lit(".example.com/\">guide "), col("doc_id") % 4,
+          lit("</a><a href=\"https://src"), (col("doc_id") * 3) % 20,
+          lit(".example.com/p\">REF "), col("doc_id") % 3,
+          lit("</a>")).as("page"))
+      val all = synth.unionByName(AnchorPlantedRows.toDF("doc_id", "page"))
+      val matches = regexp_extract_all(col("page"),
+        lit("<a href=\"[^\"]*\"[^>]*>[^<]*</a>"), lit(0))
+      val href = regexp_extract(col("m"), "href=\"([^\"]*)\"", 1)
+      val host = regexp_replace(
+        lower(regexp_extract(href, "://([^/?#:]*)", 1)), "^www\\.", "")
+      val anchor = lower(trim(regexp_extract(col("m"), ">([^<]*)</a>", 1)))
+      // r20 CACHED: the counts feed the majority-anchor window AND the
+      // per-host rollup — uncached, each branch re-ran the anchor-regex
+      // explode over the whole corpus (the expensive map pass; the
+      // aggregate itself is label-cardinality-sized, cheap to hold)
+      all
+        .select(explode(matches).as("m"))
+        .select(host.as("dst_host"), anchor.as("atext"))
+        .groupBy("dst_host", "atext")
+        .agg(count(lit(1)).as("n"))
+        .cache()
+    }(df => scala.util.Try(df.unpersist()): Unit)
+
   /** Anchor-text aggregation — the web-graph RELEVANCE signal next to
     * [[linkGraph]]'s authority signal: what the web CALLS a page is a
     * label its own content can't fake, which is why anchor harvesting
@@ -915,33 +950,8 @@ object TextOps {
     * rows, not link instances) — never corpus rows.
     */
   def anchorText(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val synth = Tables.documents(spark, dir).select(col("doc_id"),
-      concat(
-        lit("<a href=\"https://src"), (col("doc_id") + 1) % 20,
-        lit(".example.com/\">guide "), col("doc_id") % 4,
-        lit("</a><a href=\"https://src"), (col("doc_id") * 3) % 20,
-        lit(".example.com/p\">REF "), col("doc_id") % 3,
-        lit("</a>")).as("page"))
-    val all = synth.unionByName(AnchorPlantedRows.toDF("doc_id", "page"))
-    val matches = regexp_extract_all(col("page"),
-      lit("<a href=\"[^\"]*\"[^>]*>[^<]*</a>"), lit(0))
-    val href = regexp_extract(col("m"), "href=\"([^\"]*)\"", 1)
-    val host = regexp_replace(
-      lower(regexp_extract(href, "://([^/?#:]*)", 1)), "^www\\.", "")
-    val anchor = lower(trim(regexp_extract(col("m"), ">([^<]*)</a>", 1)))
-    val labeled = all
-      .select(explode(matches).as("m"))
-      .select(host.as("dst_host"), anchor.as("atext"))
-    // r20 CACHED: perText feeds the majority-anchor window AND the
-    // per-host rollup — uncached, each branch re-ran the anchor-regex
-    // explode over the whole corpus (the expensive map pass; the
-    // aggregate itself is label-cardinality-sized, cheap to hold)
-    val perText = labeled
-      .groupBy("dst_host", "atext")
-      .agg(count(lit(1)).as("n"))
-      .cache()
+    val perText = anchorCounts(spark, dir)
     val wTop = Window.partitionBy(col("dst_host"))
       .orderBy(col("n").desc, col("atext"))
     val top = perText.filter(col("atext") =!= "")
@@ -1141,6 +1151,20 @@ object TextOps {
   val CollocMinCount = 3
   val CollocTopK = 20
 
+  /** (term, c): unigram counts over [[tokenizedDocs]] — the three
+    * unigram consumers of [[collocations]] (both join sides and the
+    * corpus total), CACHED and memoized per (session, dir); session
+    * eviction unpersists it.
+    */
+  private[graft] def collocUnigrams(spark: SparkSession,
+      dir: String): DataFrame =
+    SessionMemo.getOrComputeCleanup(spark, s"textops.collocUnigrams:$dir") {
+      tokenizedDocs(spark, dir).select(col("ws"))
+        .select(explode(col("ws")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("c"))
+        .cache()
+    }(df => scala.util.Try(df.unpersist()): Unit)
+
   /** Collocation mining — the statistical phrase detector that feeds a
     * tokenizer's multi-word merge list and a curation pipeline's
     * boilerplate-phrase audit: bigrams whose observed co-occurrence
@@ -1169,9 +1193,7 @@ object TextOps {
     val bigrams = expr(
       "filter(zip_with(ws, slice(ws, 2, greatest(size(ws) - 1, 0)), " +
         "(a, b) -> concat(a, ' ', b)), x -> x IS NOT NULL)")
-    val uni = docs.select(explode(col("ws")).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-      .cache()
+    val uni = collocUnigrams(spark, dir)
     val tot = uni.agg(sum(col("c")).cast("long").as("n_tokens"))
     val bgc = docs.select(explode(bigrams).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("c_ab"))

@@ -491,4 +491,70 @@ class PropertySpec extends SparkSpec {
       assert(again(id) == out(id), s"doc $id: not idempotent")
     }
   }
+
+  test("banded hamming plan law: clusters and cross probe == brute force") {
+    import spark.implicits._
+    val (bands, bandBits, maxH) = (Dedup.SimPairsBands,
+      Dedup.SimPairsBandBits, Dedup.SimPairsMaxHamming)
+    val rnd = new scala.util.Random(20261019L)
+    def randomSig(): Long = rnd.nextLong() & ((1L << (bands * bandBits)) - 1)
+    /** `perBand` random bits flipped in each of `hit` (distinct bands). */
+    def flip(sig: Long, hit: Seq[Int], perBand: Int): Long =
+      hit.foldLeft(sig) { (s, b) =>
+        rnd.shuffle((0 until bandBits).toList).take(perBand)
+          .foldLeft(s)((t, i) => t ^ (1L << (b * bandBits + i)))
+      }
+    def someBands(k: Int) = rnd.shuffle((0 until bands).toList).take(k)
+    val base = Vector.fill(300)(randomSig())
+    // near copies: k ∈ 0..3 flips in k distinct bands, so exactly
+    // bands − k bands stay clean and the band arithmetic must find them
+    val near =
+      (0 until 240).map(i => flip(base(i % 120), someBands(i % 4), 1))
+    // far copies: one clean band (a candidate), hamming 6 (verify rejects)
+    val far = (40 until 80).map(i => flip(base(i), someBands(bands).tail, 2))
+    // an identical block past the bucket cap: only the star links it
+    val blockSig = randomSig()
+    val block = Vector.fill(Dedup.LshBucketCap + 6)(blockSig)
+    val sigs = base ++ near ++ far ++ block
+    val ids = rnd.shuffle((1L to sigs.length.toLong).toVector)
+    val rows = ids.zip(sigs)
+    // precondition: every band bucket over the cap holds ONE signature,
+    // so the capped plan loses no pair the brute force keeps
+    (0 until bands).foreach { b =>
+      sigs.groupBy(s => (s >>> (b * bandBits)) % (1L << bandBits))
+        .values.filter(_.size > Dedup.LshBucketCap)
+        .foreach(g => assert(g.distinct.size === 1, s"band $b mixed bucket"))
+    }
+    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
+    // brute force: union-find over all pairs within maxH
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    for (i <- rows.indices; j <- i + 1 until rows.length
+         if ham(rows(i)._2, rows(j)._2) <= maxH) {
+      val (ra, rb) = (find(rows(i)._1), find(rows(j)._1))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val roots = ids.groupBy(find).values.flatMap(g => g.map(_ -> g.min)).toMap
+    val wantClusters = ids.map(i => (i, roots(i), i == roots(i))).toSet
+    val df = rows.toDF("doc_id", "sig")
+    val gotClusters = Dedup.bandedHammingClusters(df, bands, bandBits, maxH)
+      .select("doc_id", "cluster_root", "is_keeper")
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(gotClusters === wantClusters)
+    assert(wantClusters.count(r => !r._3) >= 300, "too few planted dups")
+    // cross probe: the first 60 bases plus the block signature play the
+    // benchmark; the block's 69 other copies are hits past the cap
+    val benchIds =
+      (ids.take(60) :+ ids(base.length + near.length + far.length)).toSet
+    val (bench, corpus) = rows.partition(r => benchIds(r._1))
+    val wantProbe = (for ((c, cs) <- corpus; (b, bs) <- bench
+      if ham(cs, bs) <= maxH) yield (c, b, ham(cs, bs))).sorted
+    val gotProbe = Dedup.bandedCrossProbe(
+        corpus.toDF("doc_id", "sig"), bench.toDF("doc_id", "sig"),
+        bands, bandBits, maxH)
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+    assert(gotProbe === wantProbe)
+    assert(wantProbe.size > Dedup.LshBucketCap, "too few planted leaks")
+  }
 }

@@ -1431,4 +1431,26 @@ class TextDedupSpec extends SparkSpec {
         assert(scores("middle").min >= scores("tail").max)
     }
   }
+
+  test("session eviction unpersists the memoized anchor and collocation frames") {
+    val cacheManager = spark.sharedState.cacheManager
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      cacheManager.lookupCachedData(
+        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
+    // start from an empty cache so the final check sees only these queries
+    SessionMemo.evictSession(spark)
+    spark.catalog.clearCache()
+    SparkEntry.queries("q_anchor_text")(spark, sf).collect()
+    SparkEntry.queries("q_collocations")(spark, sf).collect()
+    val frames = Seq(
+      "anchorCounts" -> TextOps.anchorCounts(spark, sf),
+      "collocUnigrams" -> TextOps.collocUnigrams(spark, sf))
+    frames.foreach { case (n, df) => assert(cached(df), s"$n is not cached") }
+    SessionMemo.evictSession(spark)
+    frames.foreach { case (n, df) =>
+      assert(!cached(df), s"$n stays cached after eviction")
+    }
+    assert(cacheManager.isEmpty,
+      "a frame cached by the two queries outlives eviction")
+  }
 }
