@@ -21,14 +21,6 @@ object Bench {
     */
   val CalibSteps = 100000000L
 
-  /** Fixed-work CPU probe: `threads` threads each run [[CalibSteps]] LCG
-    * steps; the returned wall-clock seconds measure THIS MACHINE AT THIS
-    * MOMENT at the same parallelism as the query sweep. The work is
-    * deterministic and machine-independent, so two bench artifacts are
-    * comparable after normalizing per-query times by the nearest probe
-    * (rule in BASELINE.md "Bench calibration") — ambient host contention
-    * inflates the probe and the queries together.
-    */
   /** Bytes each I/O probe must pull through the page cache. The CPU
     * probe is blind to I/O / memory-bandwidth contention (observed
     * round 10: three same-head sweeps at 88/106/114 s with probe
@@ -53,6 +45,14 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Fixed-work CPU probe: `threads` threads each run [[CalibSteps]] LCG
+    * steps; the returned wall-clock seconds measure THIS MACHINE AT THIS
+    * MOMENT at the same parallelism as the query sweep. The work is
+    * deterministic and machine-independent, so two bench artifacts are
+    * comparable after normalizing per-query times by the nearest probe
+    * (rule in BASELINE.md "Bench calibration") — ambient host contention
+    * inflates the probe and the queries together.
+    */
   private def calibrate(threads: Int): Double = {
     val t0 = System.nanoTime()
     val ts = (0 until threads).map { _ =>

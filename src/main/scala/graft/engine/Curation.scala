@@ -103,22 +103,6 @@ object Curation {
           countExprs.reduceLeft(_ + _) > 0).as("has_pii"): _*)
   }
 
-  /** Deletion / right-to-be-forgotten audit — the compliance record a
-    * release writes when PII-bearing documents must LEAVE the corpus:
-    * one accounting row with the before/deleted/retained counts, the
-    * order-independent content fingerprint of the RETAINED corpus (the
-    * [[graft.engine.SourceQueries.datasetManifest]] sum-mod-prime, so
-    * the audit pins exactly which corpus the release now is), and the
-    * REDACTION-CLOSURE check: the number of documents whose redacted
-    * text STILL matches any PII pattern. That last column must be zero
-    * — a placeholder that leaves partial digits behind would re-match,
-    * i.e. redaction must be a fixed point of detection, and this query
-    * gates it corpus-wide rather than trusting the pattern authors.
-    * Null-text rows are retained (nothing to detect) and excluded from
-    * the fingerprint sum (no content to fingerprint), mirrored on both
-    * engines. One map pass + one global aggregate; no exchange beyond
-    * the 1-row agg.
-    */
   /** The release DATA CARD — the Datasheets-for-Datasets record
     * (Gebru et al. 2021) a model card's data section quotes, assembled
     * in ONE pass over the corpus plus the memoized dup-pair table:
@@ -219,6 +203,22 @@ object Curation {
         col("fp_corpus"))
   }
 
+  /** Deletion / right-to-be-forgotten audit — the compliance record a
+    * release writes when PII-bearing documents must LEAVE the corpus:
+    * one accounting row with the before/deleted/retained counts, the
+    * order-independent content fingerprint of the RETAINED corpus (the
+    * [[graft.engine.SourceQueries.datasetManifest]] sum-mod-prime, so
+    * the audit pins exactly which corpus the release now is), and the
+    * REDACTION-CLOSURE check: the number of documents whose redacted
+    * text STILL matches any PII pattern. That last column must be zero
+    * — a placeholder that leaves partial digits behind would re-match,
+    * i.e. redaction must be a fixed point of detection, and this query
+    * gates it corpus-wide rather than trusting the pattern authors.
+    * Null-text rows are retained (nothing to detect) and excluded from
+    * the fingerprint sum (no content to fingerprint), mirrored on both
+    * engines. One map pass + one global aggregate; no exchange beyond
+    * the 1-row agg.
+    */
   def deletionAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val src = Tables.documents(spark, dir).select("doc_id", "text")
@@ -717,6 +717,20 @@ object Curation {
     */
   val TokenBudget = 10000L
 
+  /** Micro-scaled (×1e6, Long) quality score used by the budget
+    * selections; null or token-free text ⇒ 0 so adversarial rows sort
+    * last, unkept (the segmentation, unlike whitespace split, yields an
+    * EMPTY array for empty text — the n_tok = 0 branch must not divide).
+    */
+  private[engine] def qualityMicro: org.apache.spark.sql.Column = {
+    val nTok = size(toks)
+    val nStop = size(filter(toks, t => t.isInCollection(TextOps.Stopwords)))
+    val q = when(nTok > 0, round(
+      least(nTok.cast("double") / 50, lit(1.0)) *
+        (lit(1.0) - nStop.cast("double") / nTok), 6)).otherwise(0.0)
+    coalesce(round(q * 1000000L).cast("long"), lit(0L))
+  }
+
   /** Token-budget corpus selection: "give me the best N tokens" — order
     * the corpus by quality (micro-scaled integer score, ties broken by
     * doc_id for a total order) and keep every document fully contained in
@@ -733,20 +747,6 @@ object Curation {
     * shuffles once for the range sort and stays fully parallel. Keep
     * decisions are Long comparisons — bit-exact against the oracle.
     */
-  /** Micro-scaled (×1e6, Long) quality score used by the budget
-    * selections; null or token-free text ⇒ 0 so adversarial rows sort
-    * last, unkept (the segmentation, unlike whitespace split, yields an
-    * EMPTY array for empty text — the n_tok = 0 branch must not divide).
-    */
-  private[engine] def qualityMicro: org.apache.spark.sql.Column = {
-    val nTok = size(toks)
-    val nStop = size(filter(toks, t => t.isInCollection(TextOps.Stopwords)))
-    val q = when(nTok > 0, round(
-      least(nTok.cast("double") / 50, lit(1.0)) *
-        (lit(1.0) - nStop.cast("double") / nTok), 6)).otherwise(0.0)
-    coalesce(round(q * 1000000L).cast("long"), lit(0L))
-  }
-
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val sorted = Tables.documents(spark, dir)
       .select(coalesce(col("doc_id"), lit(-1L)).as("doc_id"),

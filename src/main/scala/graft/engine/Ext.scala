@@ -996,6 +996,18 @@ object Ext {
           .cast("long").as("span_s"))
   }
 
+  /** Exactness bound for [[robustOutliers]]' cent quantization: the
+    * whole pipeline is integer arithmetic AFTER `round(value·100)`, but
+    * that round happens in DOUBLE, which represents integers exactly
+    * only below 2^53 — beyond it Spark and an oracle engine can
+    * legitimately round the same value to different cents and the
+    * cross-engine hash silently diverges. Guarded at 2^52 for headroom;
+    * a larger value domain must rescale or move to DECIMAL, and the
+    * in-plan assert makes that a loud job failure instead of a silent
+    * wrong answer.
+    */
+  val RobustOutliersMaxCents: Long = 1L << 52
+
   /** Robust per-group outlier detection — the median/MAD monitor a
     * data-quality pipeline runs per segment (mean/stddev monitors are
     * themselves corrupted by the outliers they hunt; the median and the
@@ -1023,18 +1035,6 @@ object Ext {
     * swaps for `approx_percentile` in the same plan; the fixture keeps
     * the exact form because the oracle gate demands bit equality.
     */
-  /** Exactness bound for [[robustOutliers]]' cent quantization: the
-    * whole pipeline is integer arithmetic AFTER `round(value·100)`, but
-    * that round happens in DOUBLE, which represents integers exactly
-    * only below 2^53 — beyond it Spark and an oracle engine can
-    * legitimately round the same value to different cents and the
-    * cross-engine hash silently diverges. Guarded at 2^52 for headroom;
-    * a larger value domain must rescale or move to DECIMAL, and the
-    * in-plan assert makes that a loud job failure instead of a silent
-    * wrong answer.
-    */
-  val RobustOutliersMaxCents: Long = 1L << 52
-
   def robustOutliers(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_type"),

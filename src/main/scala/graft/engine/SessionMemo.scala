@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Session-scoped memo for expensive shared intermediates (tokenized
-  * shingle-id tables, fitted ML models, the prepared train/test split):
+  * shingle-id tables, fitted ML models, the prepared train/test split,
+  * the fixture tables' resolved schemas — [[Tables.schema]]):
   * several queries in one Verify/Bench session consume the SAME subtree,
   * and without memoization each of them re-caches and re-computes it.
   *
@@ -61,6 +62,11 @@ private[graft] object SessionMemo {
       if (prev != null) prev._1.asInstanceOf[T] else v
     }
   }
+
+  /** How many sessions hold an application-end listener: one per session
+    * that memoized anything and was not evicted since.
+    */
+  def hookedSessions: Int = hooked.size
 
   /** Drop one entry (e.g. after rewriting the data under a dir),
     * running its cleanup.

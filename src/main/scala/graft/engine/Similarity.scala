@@ -743,25 +743,6 @@ object Similarity {
       .select(col("vec_id"), posexplode(expr(proj)).as(Seq("out_dim", "proj")))
   }
 
-  /** ANN index recall canary — the monitor a production vector-search
-    * deployment runs continuously: per sampled query, the fraction of
-    * the TRUE cosine top-k (brute force over the sample) that the LSH
-    * index actually returned. Recall decay is how index staleness,
-    * bad re-bucketing, or a drifting embedding distribution surfaces
-    * FIRST; deploying an ANN index without this gauge means silently
-    * degraded retrieval. The brute-force side is priced per-QUERY
-    * (the [[NQueryVecs]] sample), not per-corpus — the standard
-    * sampled-canary cost model, identical at any corpus size.
-    *
-    * What it reports on the fixture is itself informative: mean top-10
-    * recall 0.13 (sf0.01) for the 4-table × 12-plane LSH index. The
-    * fixture embeddings are near-uniform, the regime where hyperplane
-    * buckets carry least signal (IVF's learned cells reach 0.62 on the
-    * same corpus, SimilaritySpec); clustered production embeddings sit
-    * far higher. That decision — add tables, raise planes, or switch to
-    * IVF — is exactly what this monitor exists to trigger, which is why
-    * it reports the honest number rather than tuning the fixture.
-    */
   /** Probe counts for [[annNprobeSweep]] — all below the cell count so
     * every sweep point is a real approximation (probing every cell is
     * brute force with extra steps).
@@ -818,6 +799,25 @@ object Similarity {
         coalesce(col("c"), lit(0L)).as("n_scored"))
   }
 
+  /** ANN index recall canary — the monitor a production vector-search
+    * deployment runs continuously: per sampled query, the fraction of
+    * the TRUE cosine top-k (brute force over the sample) that the LSH
+    * index actually returned. Recall decay is how index staleness,
+    * bad re-bucketing, or a drifting embedding distribution surfaces
+    * FIRST; deploying an ANN index without this gauge means silently
+    * degraded retrieval. The brute-force side is priced per-QUERY
+    * (the [[NQueryVecs]] sample), not per-corpus — the standard
+    * sampled-canary cost model, identical at any corpus size.
+    *
+    * What it reports on the fixture is itself informative: mean top-10
+    * recall 0.13 (sf0.01) for the 4-table × 12-plane LSH index. The
+    * fixture embeddings are near-uniform, the regime where hyperplane
+    * buckets carry least signal (IVF's learned cells reach 0.62 on the
+    * same corpus, SimilaritySpec); clustered production embeddings sit
+    * far higher. That decision — add tables, raise planes, or switch to
+    * IVF — is exactly what this monitor exists to trigger, which is why
+    * it reports the honest number rather than tuning the fixture.
+    */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val truth = simCosineTopk(spark, dir).select("query_id", "neighbor_id")
     val approx = annLsh(spark, dir)

@@ -993,27 +993,6 @@ object TextOps {
     * floor). */
   private[graft] val BoilerplateMinDocs = 3
 
-  /** Cross-document boilerplate-line removal — the C4/CCNet pass that
-    * drops nav bars, cookie banners, and footers BEFORE dedup ever sees
-    * them: lines whose trimmed form appears in ≥ [[BoilerplateMinDocs]]
-    * distinct documents are removed from every document, and the
-    * survivors are reassembled in original order (kept lines keep their
-    * original, untrimmed form). Empty/whitespace lines never count
-    * toward document frequency and always survive. A document whose
-    * every line is boilerplate comes back as the empty string — the
-    * honest signal ("this page was pure chrome"), distinct from null-in
-    * → null-out.
-    *
-    * 100 TB shape: three linear exchanges, none avoidable — line
-    * document-frequency (group by trimmed line), the anti join of lines
-    * against the over-threshold set, and per-doc reassembly (group by
-    * doc_id). The anti join carries NO broadcast hint on purpose: the
-    * boilerplate set GROWS with the corpus, so the size-based planner
-    * choice is the contract — broadcast while the set fits (it does at
-    * fixture scale, and the plan shows BroadcastHashJoin LeftAnti),
-    * shuffle once it outgrows the threshold. Map-side partial
-    * aggregation carries the df count; nothing collects.
-    */
   /** Planted rows for [[lineCollapse]]: a 3-line run that must fold to
     * one, a NON-consecutive repeat that must survive (this operator is
     * not a line dedup — order context matters), a trimmed-equal run
@@ -1056,6 +1035,27 @@ object TextOps {
           concat_ws("\n", col("kp")), Dedup.IdMod).as("clean_fp"))
   }
 
+  /** Cross-document boilerplate-line removal — the C4/CCNet pass that
+    * drops nav bars, cookie banners, and footers BEFORE dedup ever sees
+    * them: lines whose trimmed form appears in ≥ [[BoilerplateMinDocs]]
+    * distinct documents are removed from every document, and the
+    * survivors are reassembled in original order (kept lines keep their
+    * original, untrimmed form). Empty/whitespace lines never count
+    * toward document frequency and always survive. A document whose
+    * every line is boilerplate comes back as the empty string — the
+    * honest signal ("this page was pure chrome"), distinct from null-in
+    * → null-out.
+    *
+    * 100 TB shape: three linear exchanges, none avoidable — line
+    * document-frequency (group by trimmed line), the anti join of lines
+    * against the over-threshold set, and per-doc reassembly (group by
+    * doc_id). The anti join carries NO broadcast hint on purpose: the
+    * boilerplate set GROWS with the corpus, so the size-based planner
+    * choice is the contract — broadcast while the set fits (it does at
+    * fixture scale, and the plan shows BroadcastHashJoin LeftAnti),
+    * shuffle once it outgrows the threshold. Map-side partial
+    * aggregation carries the df count; nothing collects.
+    */
   def boilerplateLines(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     boilerplateOver(Tables.documents(spark, dir).select("doc_id", "text")
@@ -1310,26 +1310,6 @@ object TextOps {
     */
   val CjkStopwords: Seq[String] = Seq("的", "了", "是", "在")
 
-  /** Heuristic quality-rule bundle — the named-rule verdict table a
-    * production corpus filter actually ships (Gopher/FineWeb style):
-    * per-document booleans for each rule, the failure count, and the
-    * final keep verdict, so downstream dashboards can attribute REMOVAL
-    * REASONS instead of a single opaque score. Rules: token-count floor
-    * and cap, minimum stopword instances, mean-word-length band
-    * (compared as `lo·n_word ≤ Σchars ≤ hi·n_word` — exact integers, no
-    * division), and duplicate-bigram share (`(n − distinct)·den > n`).
-    * One zero-exchange map pass: tokens, stopword filter, and the
-    * bigram zip fold all inside the row.
-    *
-    * Tokens come from [[segmentTokens]] (identical to whitespace split
-    * on Latin text), so the floor/cap and bigram rules see real token
-    * structure on unsegmented scripts; the stopword floor counts
-    * [[CjkStopwords]] beside the Latin list; and the mean-word-length
-    * band is evaluated over WORD RUNS only (single-codepoint CJK tokens
-    * excluded — their "length 1" is an artifact of the per-codepoint
-    * fallback, exactly why English-tuned Gopher rules misfire on CJK),
-    * passing vacuously when a document has no word runs.
-    */
   /** Topical taxonomy for [[contentFlags]] — placeholder category
     * wordlists a deployment swaps for its real ones (the operator
     * shape, not the lexicon, is the deliverable). Token-level exact
@@ -1390,6 +1370,26 @@ object TextOps {
     src.select(col("doc_id"), qs.as("qs")).select(cols: _*)
   }
 
+  /** Heuristic quality-rule bundle — the named-rule verdict table a
+    * production corpus filter actually ships (Gopher/FineWeb style):
+    * per-document booleans for each rule, the failure count, and the
+    * final keep verdict, so downstream dashboards can attribute REMOVAL
+    * REASONS instead of a single opaque score. Rules: token-count floor
+    * and cap, minimum stopword instances, mean-word-length band
+    * (compared as `lo·n_word ≤ Σchars ≤ hi·n_word` — exact integers, no
+    * division), and duplicate-bigram share (`(n − distinct)·den > n`).
+    * One zero-exchange map pass: tokens, stopword filter, and the
+    * bigram zip fold all inside the row.
+    *
+    * Tokens come from [[segmentTokens]] (identical to whitespace split
+    * on Latin text), so the floor/cap and bigram rules see real token
+    * structure on unsegmented scripts; the stopword floor counts
+    * [[CjkStopwords]] beside the Latin list; and the mean-word-length
+    * band is evaluated over WORD RUNS only (single-codepoint CJK tokens
+    * excluded — their "length 1" is an artifact of the per-codepoint
+    * fallback, exactly why English-tuned Gopher rules misfire on CJK),
+    * passing vacuously when a document has no word runs.
+    */
   def qualityRules(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val src = Tables.documents(spark, dir).select("doc_id", "text")
@@ -1425,16 +1425,6 @@ object TextOps {
       ifText(nFailed === 0).as("keep"))
   }
 
-  /** Per-document quality FEATURES + the rule-bundle label, shared by
-    * the classifier trainer (`ml_quality_classifier`) and the
-    * frozen-weight scorer (`q_quality_score`) so train-time and
-    * score-time features cannot drift. Features are the house float
-    * surface: one CAST and three single mirrored divisions of exact
-    * integers (token count, stopword rate, duplicate-bigram rate, mean
-    * word-run length), all over the shared script-aware segmentation.
-    * Label: the [[qualityRules]] keep verdict (the FineWeb-Edu shape —
-    * hand rules bootstrap a trainable scorer).
-    */
   /** The six integer statistics behind the quality features, computed
     * by the native one-pass [[graft.functions.QualityStats]] expression
     * (previously each feature column re-derived the segmented array
@@ -1447,6 +1437,16 @@ object TextOps {
     graft.functions.StringFunctions.quality_stats(col("text"),
       SegPerCharClass, SegWsChars, Stopwords ++ CjkStopwords)
 
+  /** Per-document quality FEATURES + the rule-bundle label, shared by
+    * the classifier trainer (`ml_quality_classifier`) and the
+    * frozen-weight scorer (`q_quality_score`) so train-time and
+    * score-time features cannot drift. Features are the house float
+    * surface: one CAST and three single mirrored divisions of exact
+    * integers (token count, stopword rate, duplicate-bigram rate, mean
+    * word-run length), all over the shared script-aware segmentation.
+    * Label: the [[qualityRules]] keep verdict (the FineWeb-Edu shape —
+    * hand rules bootstrap a trainable scorer).
+    */
   private[graft] def qualityFeatures(docs: DataFrame): DataFrame = {
     val nTok = col("qs.n_tok")
     val nStop = col("qs.n_stop")

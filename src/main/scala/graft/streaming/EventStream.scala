@@ -37,13 +37,19 @@ object EventStream {
     * files it appends after the initial replay.
     *
     * The physical `ts` layout is SNIFFED from the existing files' parquet
-    * footers (a batch schema read — no job) exactly like
-    * [[graft.engine.Tables.events]]: a nanos-generation fixture
-    * (TIMESTAMP(NANOS), read as a nano-epoch long under `nanosAsLong`)
-    * gets the long-schema branch + micros truncation instead of a
-    * runtime decode failure mid-stream. If the footer probe finds no
-    * files yet (an empty spool dir), the current micros generation is
-    * assumed — the drain callers seed the dir before starting the query.
+    * footers exactly like [[graft.engine.Tables.events]]: a
+    * nanos-generation fixture (TIMESTAMP(NANOS), read as a nano-epoch
+    * long under `nanosAsLong`) gets the long-schema branch + micros
+    * truncation instead of a runtime decode failure mid-stream. If the
+    * footer probe finds no files yet (an empty spool dir), the current
+    * micros generation is assumed — the drain callers seed the dir
+    * before starting the query.
+    *
+    * The sniff is a batch schema inference, which on Spark 4.1 runs one
+    * Spark job per call. It is not memoized through the
+    * [[graft.engine.Tables.schema]] catalog on purpose: a spool-dir
+    * caller's glob matches files written during the run, so what it
+    * matches is not a fixed fixture table.
     */
   def readEvents(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame = {

@@ -121,14 +121,22 @@ object SessionState {
     * under a stateless sink picked them up immediately.
     */
   def runToMemory(spark: SparkSession, dir: String,
+      tableName: String): org.apache.spark.sql.streaming.StreamingQuery =
+    runToMemoryIn(spark, spark, dir, tableName)
+
+  /** [[runToMemory]] with the stream running in `child`, a throwaway
+    * `spark.newSession()`, and the sentinel's fixture read in its parent
+    * `spark` (see [[graft.engine.Tables.loadIn]]).
+    */
+  def runToMemoryIn(child: SparkSession, spark: SparkSession, dir: String,
       tableName: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val spool = graft.engine.TempArtifacts.tempDir(s"graft_spool_$tableName")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(dir, "events.parquet"),
       java.nio.file.Paths.get(spool, "events.parquet")): Unit
     appendDrainSentinel(spark, dir, spool)
-    val q = sessionStream(spark,
-        EventStream.readEvents(spark, spool, glob = "*.parquet"))
+    val q = sessionStream(child,
+        EventStream.readEvents(child, spool, glob = "*.parquet"))
       .writeStream.format("memory").queryName(tableName)
       .outputMode("append").start()
     q.processAllAvailable()
@@ -144,7 +152,7 @@ object SessionState {
     // fixture makes events.parquet a directory, which Files.copy copies
     // as an empty dir: the batch count and the stream then agree on
     // seeing only the sentinel)
-    val totalRows = spark.read.schema(EventStream.eventSchema)
+    val totalRows = child.read.schema(EventStream.eventSchema)
       .option("pathGlobFilter", "*.parquet").parquet(spool).count()
     def drained(): Boolean = {
       val ps = q.recentProgress.sortBy(_.batchId)

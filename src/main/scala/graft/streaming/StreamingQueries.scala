@@ -108,7 +108,7 @@ object StreamingQueries {
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
     val table = s"graft_stream_sess_${runSeq.incrementAndGet()}"
     val s2 = sizedStreamSession(spark, dir)
-    val q = SessionState.runToMemory(s2, dir, table)
+    val q = SessionState.runToMemoryIn(s2, spark, dir, table)
     q.stop()
     s2.table(table)
       .select(col("user_id"),
@@ -151,9 +151,10 @@ object StreamingQueries {
     */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
     val s2 = sizedStreamSession(spark, dir)
-    val dim = broadcast(graft.engine.Tables.load(s2, dir, "customer")
-      .select(col("c_custkey").as("user_id"),
-        col("c_mktsegment").as("segment")))
+    val dim = broadcast(
+      graft.engine.Tables.loadIn(s2, spark, dir, "customer")
+        .select(col("c_custkey").as("user_id"),
+          col("c_mktsegment").as("segment")))
     drain(EventStream.readEvents(s2, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
@@ -970,7 +971,7 @@ object StreamingQueries {
       .agg(kmv(col("hv")).as("sketch"), count(lit(1)).as("n_events"))
       .select(col("window.start").as("window_start"),
         col("sketch"), col("n_events")), "kmv", "complete")
-    val exact = graft.engine.Tables.events(s2, dir)
+    val exact = graft.engine.Tables.eventsIn(s2, spark, dir)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
       .select(col("window.start").as("window_start"), col("n_exact"))
