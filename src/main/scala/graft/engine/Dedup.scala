@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (north-star
   * extensions): exact, MinHash+LSH, SimHash, and n-gram Jaccard with
@@ -301,14 +302,13 @@ object Dedup {
     */
   private[graft] def shingleIdsAt(spark: SparkSession, dir: String,
       version: Int): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.shingleIds:v$version:$dir") {
-      // r21 (guide §5): serialized storage + eviction unpersist —
-      // session-long cache, minimal heap held
+    // r21 (guide §5): serialized storage — session-long cache, minimal
+    // heap held
+    SessionMemo.cached(spark, s"dedup.shingleIds:v$version:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER) {
       shingles(spark, dir, version)
         .select(col("doc_id"), portableIdUtf8(col("shingle")).as("sid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** Per-doc shingle-id set + size, for array-based exact verification. */
   private def idSets(ds: DataFrame): DataFrame =
@@ -520,13 +520,12 @@ object Dedup {
     * the verify pass).
     */
   private def dedupMinhashFull(spark: SparkSession, dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.minhashPairsFull:$dir") {
+    SessionMemo.cached(spark, s"dedup.minhashPairsFull:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER) {
       val ds = shingleIds(spark, dir)
       verifyPairsFull(lshCandidates(spark, dir), idSets(ds),
         MinhashThreshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** 12-hash minhash signature per doc — one aggregation pass over the
     * memoized shingle-id table, shared by the full LSH pass and the
@@ -682,42 +681,45 @@ object Dedup {
     * at read time. Written `bucketBy(band, bkey)` + `saveAsTable`: a
     * probe join on (band, bkey) reads the index co-located — NO Exchange
     * on the corpus side (plan-gated in PlanSpec), only the delta side
-    * shuffles, and Spark prunes unneeded buckets. Memoized per
-    * (session, dir): built once, probed every batch.
+    * shuffles, and Spark prunes unneeded buckets. A [[bucketedIndex]]
+    * per (session, dir): built once, probed every batch.
     */
-  private final case class BandIndex(table: String, path: String)
-
   private def corpusBandIndex(spark: SparkSession, dir: String): String =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.corpusBandIndex:v$ShingleGridVersion:$dir") {
-      // the grid version is part of the PERSISTED table name: an index
-      // built under an older grid is never read by a newer engine — the
-      // migration is an explicit rebuild, not a silent mixed-grid probe
-      val table = s"graft_corpus_band_index_v${ShingleGridVersion}_" +
-        s"${math.abs(dir.hashCode.toLong)}"
+    // the grid version is part of the PERSISTED table name: an index
+    // built under an older grid is never read by a newer engine — the
+    // migration is an explicit rebuild, not a silent mixed-grid probe
+    bucketedIndex(spark, s"dedup.corpusBandIndex:v$ShingleGridVersion:$dir",
+        s"graft_corpus_band_index_v${ShingleGridVersion}_", "band", "bkey") {
       val bands = bandRows(signatures(spark, dir)).drop("bkey2")
       val corpus = bands.filter(col("doc_id") % IncrementalDeltaMod > 0)
         .withColumn("bsize",
           count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      val rows = corpus.filter(col("bsize") <= LshBucketCap)
+      corpus.filter(col("bsize") <= LshBucketCap)
         .select(col("band"), col("bkey"), col("doc_id").as("doc_b"))
         .union(corpus.filter(col("bsize") > LshBucketCap)
           .groupBy("band", "bkey").agg(min(col("doc_id")).as("doc_b")))
-      // registered for JVM-exit deletion; the cleanup below additionally
-      // drops it (and the catalog name) as soon as the memo entry goes
-      val path = TempArtifacts.tempDir(s"graft_band_index_$table")
-      rows.write.bucketBy(CorpusIndexBuckets, "band", "bkey")
-        .option("path", s"$path/$table").mode("overwrite")
-        .saveAsTable(table)
-      BandIndex(table, path)
-    } { bi =>
-      // Try: application-end eviction runs while the session stops, where
-      // catalog calls may no longer be served — the dir delete below is
-      // the part that must always happen
-      scala.util.Try(
-        spark.sql(s"DROP TABLE IF EXISTS ${bi.table}")): Unit
-      TempArtifacts.delete(bi.path)
-    }.table
+    }
+
+  /** A session's bucketed index table: `rows` written
+    * `bucketBy(`[[CorpusIndexBuckets]]`, bucketCols)` + `saveAsTable`
+    * into a [[SessionMemo.dir]] memoized under `key`. The catalog name
+    * is the dir's own unique name, so it starts with `prefix` and no two
+    * sessions share one; eviction drops the table, then deletes the dir.
+    * Returns the table name.
+    */
+  private def bucketedIndex(spark: SparkSession, key: String,
+      prefix: String, bucketCols: String*)(rows: => DataFrame): String = {
+    def table(path: String): String =
+      java.nio.file.Paths.get(path).getFileName.toString
+    val dir = SessionMemo.dir(spark, key, prefix,
+        d => spark.sql(s"DROP TABLE IF EXISTS ${table(d)}"): Unit) { d =>
+      rows.write.bucketBy(CorpusIndexBuckets, bucketCols.head,
+          bucketCols.tail: _*)
+        .option("path", s"$d/${table(d)}").mode("overwrite")
+        .saveAsTable(table(d))
+    }
+    table(dir)
+  }
 
   /** Delta-probe candidates against the persisted index: a plain
     * (band, bkey) equi-join — pairwise and star candidates fall out of
@@ -1600,13 +1602,12 @@ object Dedup {
     */
   private def substrWindowsPlain(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.substrWindows:v$SubstrGridVersion:$dir") {
-      // r21 (guide §5, VERDICT r20 #1): serialized storage + eviction
-      // unpersist — session-long cache, minimal heap held
+    // r21 (guide §5, VERDICT r20 #1): serialized storage — session-long
+    // cache, minimal heap held
+    SessionMemo.cached(spark, s"dedup.substrWindows:v$SubstrGridVersion:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER) {
       substrWindowsOf(substrTokens(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** Back half shared by the span queries: marked positions → maximal
     * token intervals ≥ [[SubstrMinSpan]]. Input is (doc_id, pos).
@@ -1659,13 +1660,13 @@ object Dedup {
     */
   private def substrSpansPlanted(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.substrSpansPlanted:v$SubstrGridVersion:$dir") {
+    SessionMemo.cached(spark,
+        s"dedup.substrSpansPlanted:v$SubstrGridVersion:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER) {
       substringSpansFromWindows(
         substrWindowsPlain(spark, dir)
           .unionByName(substrWindowsOf(plantedTokens(spark))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** tok+sh window CTEs from a preceding `src(doc_id, text)` CTE. */
   private def substrWindowSqlCtes: String = {
@@ -1820,23 +1821,12 @@ object Dedup {
     * and changing it must rename, not silently mix).
     */
   private def substrSidIndex(spark: SparkSession, dir: String): String =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"dedup.substrSidIndex:v$SubstrGridVersion:$dir") {
-      val table = s"graft_substr_sid_index_v${SubstrGridVersion}_" +
-        s"${math.abs(dir.hashCode.toLong)}"
-      val corpusSids = substrWindowsPlain(spark, dir)
+    bucketedIndex(spark, s"dedup.substrSidIndex:v$SubstrGridVersion:$dir",
+        s"graft_substr_sid_index_v${SubstrGridVersion}_", "sid") {
+      substrWindowsPlain(spark, dir)
         .filter(col("doc_id") % IncrementalDeltaMod > 0)
         .select("sid").distinct()
-      val path = TempArtifacts.tempDir(s"graft_substr_sid_$table")
-      corpusSids.write.bucketBy(CorpusIndexBuckets, "sid")
-        .option("path", s"$path/$table").mode("overwrite")
-        .saveAsTable(table)
-      BandIndex(table, path)
-    } { bi =>
-      scala.util.Try(
-        spark.sql(s"DROP TABLE IF EXISTS ${bi.table}")): Unit
-      TempArtifacts.delete(bi.path)
-    }.table
+    }
 
   /** [[substringIncremental]] through the persisted bucketed sid index —
     * bit-identical output (same oracle SQL), different physical shape:

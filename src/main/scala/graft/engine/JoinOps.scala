@@ -169,20 +169,17 @@ object JoinOps {
         sum(col("l_quantity").cast("decimal(12,2)")).as("sq"),
         sum(col("l_extendedprice").cast("decimal(12,2)")).as("sp"))
 
-  /** Persisted grain-sized MV state (parquet, memoized per session+dir,
-    * deleted on memo eviction / JVM exit) — the artifact a production
-    * refresh keeps between batches, exactly like the dedup band index
-    * ([[Dedup]] `corpusBandIndex`).
+  /** Persisted grain-sized MV state (parquet in a [[SessionMemo.dir]]
+    * per session+dir) — the artifact a production refresh keeps between
+    * batches, exactly like the dedup band index ([[Dedup]]
+    * `corpusBandIndex`).
     */
   private def mvBasePath(spark: SparkSession, dir: String): String =
-    SessionMemo.getOrComputeCleanup(spark, s"joinops.mvBase:$dir") {
-      val path = TempArtifacts.tempDir(
-        s"graft_mv_base_${math.abs(dir.hashCode.toLong)}")
+    SessionMemo.dir(spark, s"joinops.mvBase:$dir", "graft_mv_base_") { path =>
       mvPartials(Tables.lineitem(spark, dir)
           .filter(col("l_orderkey") % MvDeltaMod =!= 0))
         .write.mode("overwrite").parquet(path)
-      path
-    } { p => TempArtifacts.delete(p) }
+    }
 
   /** Incremental materialized-view maintenance: refresh a per-(returnflag,
     * linestatus) aggregate by merging the DELTA batch's partials into the

@@ -13,6 +13,7 @@ import org.apache.spark.mllib.evaluation.{BinaryClassificationMetrics, Multiclas
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's ML surface (SURVEY.md §2.9 M1–M12) re-hosted on the
   * synthetic basetable: StringIndexer×2 → OneHotEncoder → RFormula →
@@ -49,13 +50,11 @@ object MlSuite {
     * blocks keep the session-long footprint small (guide §5) and what
     * does not fit in memory goes to disk instead of being dropped and
     * recomputed, while each later consumer saves the full fact-side
-    * pass. The eviction cleanup unpersists.
+    * pass.
     */
   private def labeledCached(spark: SparkSession, dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"ml.labeled:$dir") {
-      basetableLabeled(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    SessionMemo.cached(spark, s"ml.labeled:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER)(basetableLabeled(spark, dir))
 
   /** Basetable + binary label, ML-typed: strings→categoricals kept for the
     * indexers, decimal→double, count nulls already filled by the star.
@@ -813,9 +812,9 @@ object MlSuite {
     // reuse fails, so the bounded cache pins the once-only property
     // structurally instead (PlanSpec's frozen-confusion shape test).
     // Memoized per (dir, margin), since the deployment gates share this
-    // skeleton, so session eviction unpersists it.
-    val g = SessionMemo.getOrComputeCleanup(spark,
-        s"ml.confusion:$dir:$marginSql") {
+    // skeleton.
+    val g = SessionMemo.cached(spark, s"ml.confusion:$dir:$marginSql",
+        StorageLevel.MEMORY_AND_DISK) {
       deployFeatures(spark, dir)
         .filter(col("is_test"))
         .select(
@@ -828,8 +827,7 @@ object MlSuite {
             lit(DeployBucketClamp.toDouble)).cast("long").as("bucket"))
         .groupBy("bucket", "pred", "actual")
         .agg(count(lit(1)).as("n"))
-        .cache()
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
     def cell(p: Boolean, a: Boolean): Column =
       coalesce(sum(when(col("pred") === p && col("actual") === a,
         col("n"))), lit(0L))

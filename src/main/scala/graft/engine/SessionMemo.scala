@@ -2,14 +2,24 @@ package graft.engine
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.Try
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memo for expensive shared intermediates (tokenized
   * shingle-id tables, fitted ML models, the prepared train/test split,
   * the fixture tables' resolved schemas — [[Tables.schema]]):
   * several queries in one Verify/Bench session consume the SAME subtree,
   * and without memoization each of them re-caches and re-computes it.
+  *
+  * Session artifacts: [[cached]] frames and [[dir]]s (index dirs and
+  * tables, materialized inputs) are released ONLY by eviction
+  * ([[invalidate]]/[[evictSession]]), never by the query that built them.
+  * A memo dir is uniquely named and exempt from [[TempArtifacts]]'
+  * per-prefix replacement, so two sessions never touch each other's.
   *
   * Lifecycle: entries are evicted when their owning session's application
   * ends (a SparkListener is registered on first insert per session), so a
@@ -36,12 +46,12 @@ private[graft] object SessionMemo {
       (compute: => T): T =
     getOrComputeCleanup(spark, key)(compute)(_ => ())
 
-  /** [[getOrCompute]] plus an eviction cleanup: entries owning on-disk
-    * or catalog artifacts (the persisted band/cell indexes) register how
-    * to release them, and [[invalidate]]/[[evictSession]] run it exactly
-    * once when the entry goes. Cleanups must be idempotent and safe on a
-    * stopping session (wrap catalog calls in Try — application-end
-    * eviction fires while the context shuts down).
+  /** [[getOrCompute]] plus an eviction cleanup, which
+    * [[invalidate]]/[[evictSession]] run exactly once when the entry
+    * goes, for an entry that is neither one frame nor one dir (those go
+    * through [[cached]] and [[dir]]). Cleanups must be idempotent and
+    * safe on a stopping session (wrap Spark calls in Try —
+    * application-end eviction fires while the context shuts down).
     */
   def getOrComputeCleanup[T <: AnyRef](spark: SparkSession, key: String)
       (compute: => T)(cleanup: T => Unit): T = {
@@ -61,6 +71,35 @@ private[graft] object SessionMemo {
       val prev = store.putIfAbsent(k, (v, () => cleanup(v)))
       if (prev != null) prev._1.asInstanceOf[T] else v
     }
+  }
+
+  /** The frame `df` persisted at `level` and memoized under `key`;
+    * eviction unpersists it. `MEMORY_AND_DISK` is what `.cache()` means;
+    * the session-long token, signature and window tables keep
+    * `MEMORY_AND_DISK_SER` to hold less heap.
+    */
+  def cached(spark: SparkSession, key: String, level: StorageLevel)
+      (df: => DataFrame): DataFrame =
+    getOrComputeCleanup(spark, key)(df.persist(level))(d =>
+      Try(d.unpersist()): Unit)
+
+  /** A fresh, uniquely named dir under `prefix`, filled by `write` and
+    * memoized under `key`; returns its path. It is registered for
+    * JVM-exit deletion and deleted on eviction (or when `write` fails),
+    * after `release`, which drops what else points into the dir, such as
+    * a catalog table.
+    */
+  def dir(spark: SparkSession, key: String, prefix: String,
+      release: String => Unit = _ => ())(write: String => Unit): String = {
+    def free(d: String): Unit = {
+      Try(release(d)): Unit
+      TempArtifacts.delete(d)
+    }
+    getOrComputeCleanup(spark, key) {
+      val d = TempArtifacts.ownedDir(prefix)
+      try { write(d); d }
+      catch { case NonFatal(e) => free(d); throw e }
+    }(free)
   }
 
   /** How many sessions hold an application-end listener: one per session
@@ -85,7 +124,7 @@ private[graft] object SessionMemo {
     }
     Option(hooked.remove(spark)).foreach { l =>
       // the context may already be shutting down (application-end path)
-      scala.util.Try(spark.sparkContext.removeSparkListener(l)): Unit
+      Try(spark.sparkContext.removeSparkListener(l)): Unit
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -358,11 +359,12 @@ object Similarity {
     */
   private[graft] def corpusCentroids(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"sim.corpusCent:$dir") {
+    SessionMemo.cached(spark, s"sim.corpusCent:$dir",
+        StorageLevel.MEMORY_AND_DISK) {
       centroidsOf(Tables.embeddings(spark, dir)
         .filter(col("vec_id") >= NQueryVecs)
-        .withColumn("cell", col("label"))).cache()
-    }(df => scala.util.Try(df.unpersist()): Unit)
+        .withColumn("cell", col("label")))
+    }
 
   /** Persisted corpus cell INDEX — the artifact a production vector store
     * keeps BETWEEN ingest batches. Corpus vectors are assigned to their
@@ -370,10 +372,12 @@ object Similarity {
     * written `partitionBy(cell)`, so a probe restricted to its nProbe
     * cells is a PARTITION-PRUNED scan: only the probed cells' files are
     * read, and the corpus is never rescanned or reshuffled per batch.
-    * Memoized per (session, dir): built once, probed every batch.
+    * A [[SessionMemo.dir]] per (session, dir): built once, probed every
+    * batch.
     */
   private def corpusCellIndex(spark: SparkSession, dir: String): String =
-    SessionMemo.getOrComputeCleanup(spark, s"sim.cellIndex:$dir") {
+    SessionMemo.dir(spark, s"sim.cellIndex:$dir",
+        "graft_cell_index_") { path =>
       val wAssign = Window.partitionBy(col("vec_id"))
         .orderBy(col("cos_c").desc, col("cell"))
       val assigned = Tables.embeddings(spark, dir)
@@ -385,13 +389,8 @@ object Similarity {
         .filter(col("crank") === 1)
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
           col("cell"))
-      // registered for JVM-exit deletion AND deleted eagerly when the
-      // memo entry is invalidated/evicted
-      val path = TempArtifacts.tempDir(
-        s"graft_cell_index_${math.abs(dir.hashCode.toLong)}")
       assigned.write.partitionBy("cell").mode("overwrite").parquet(path)
-      path
-    } { path => TempArtifacts.delete(path) }
+    }
 
   /** Incremental (delta-vs-corpus) ANN — the per-batch shape: each new
     * vector finds its top-k among the EXISTING corpus through the
@@ -666,14 +665,14 @@ object Similarity {
     * so one corpus pass serves both queries in a sweep (64 cached rows).
     */
   private[graft] def dimStats(spark: SparkSession, dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"sim.dimStats:$dir") {
+    SessionMemo.cached(spark, s"sim.dimStats:$dir",
+        StorageLevel.MEMORY_AND_DISK) {
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("pos"), col("col").cast("double").as("v"))
         .groupBy("pos")
         .agg(min(col("v")).as("dmin"), max(col("v")).as("dmax"))
-        .cache()
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   def embedQuantize(spark: SparkSession, dir: String): DataFrame = {
     val dims = Tables.embeddings(spark, dir)

@@ -24,21 +24,17 @@ import graft.sources.JsonCsvSources
 object SourceQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-invocation sink dirs — Verify/Bench/test runs must not leak
-    * round-trip output on disk. Registration/JVM-exit cleanup lives in
-    * the shared [[TempArtifacts]] registry (one queue + one shutdown
-    * hook for sink dirs and the persisted dedup/ANN index dirs alike);
-    * the per-prefix replacement means a session iterating a round-trip
-    * query holds at most one live dir per prefix.
-    */
-  private def tempSinkDir(prefix: String): String =
-    TempArtifacts.tempDir(prefix)
-
   private val eventsLite = StructType(Seq(
     StructField("event_id", LongType),
     StructField("user_id", LongType),
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
+
+  /** The quarantine reads' schema: the events projection plus the
+    * corrupt-record column.
+    */
+  private val withCorrupt = StructType(
+    eventsLite.fields :+ StructField("_corrupt_record", StringType))
 
   private def eventsProjection(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
@@ -67,14 +63,14 @@ object SourceQueries {
 
   /** S2+S8: events → JSONL sink → schema'd JSONL scan → aggregate. */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-jsonl")
+    val tmp = TempArtifacts.tempDir("graft-jsonl")
     JsonCsvSources.writeJsonl(eventsProjection(spark, dir), tmp)
     checksum(JsonCsvSources.readJsonl(spark, tmp, Some(eventsLite)))
   }
 
   /** CSV twin of [[jsonlRoundtrip]] (S8 CSV writer + schema'd CSV scan). */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-csv")
+    val tmp = TempArtifacts.tempDir("graft-csv")
     JsonCsvSources.writeCsv(eventsProjection(spark, dir), tmp)
     checksum(JsonCsvSources.readCsv(spark, tmp, Some(eventsLite)))
   }
@@ -90,7 +86,7 @@ object SourceQueries {
     * inference samples the FULL input — a whole extra pass at 100 TB).
     */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-xml")
+    val tmp = TempArtifacts.tempDir("graft-xml")
     JsonCsvSources.writeXml(eventsProjection(spark, dir), tmp)
     checksum(JsonCsvSources.readXml(spark, tmp, Some(eventsLite)))
   }
@@ -145,29 +141,20 @@ object SourceQueries {
   def csvQuarantine(spark: SparkSession, dir: String): DataFrame =
     quarantineChecksum(csvQuarantineRead(spark, dir))
 
-  // The three quarantine reads are MEMOIZED per (session, dir) — each
-  // used to re-export the whole events projection to its text format on
-  // EVERY call, so q_ingest_report re-paid all three writes the
-  // standalone quarantine queries already pay in the same session (r20,
-  // guide §2.4: don't recompute what the session already materialized).
-  // The planted bytes and the permissive read are unchanged — only the
-  // redundant second write of identical files is gone.
+  // The three quarantine reads plant their dirs once per (session, dir),
+  // as [[SessionMemo.dir]]s: q_ingest_report reads all three after the
+  // standalone quarantine queries in the same session, and re-exporting
+  // the events projection per call would write identical files again.
   private def csvQuarantineRead(spark: SparkSession,
-      dir: String): DataFrame =
-    SessionMemo.getOrCompute(spark, s"srcq.csv-quarantine:$dir") {
-      csvQuarantineReadFresh(spark, dir)
-    }
-
-  private def csvQuarantineReadFresh(spark: SparkSession,
       dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-csv-q")
-    JsonCsvSources.writeCsv(eventsProjection(spark, dir), tmp)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tmp, "part-malformed.csv"),
-      ("event_id,user_id,event_type,value" +: CsvMalformedRows)
-        .mkString("\n"))
-    val withCorrupt = StructType(
-      eventsLite.fields :+ StructField("_corrupt_record", StringType))
+    val tmp = SessionMemo.dir(spark, s"srcq.csv-quarantine:$dir",
+        "graft-csv-q") { tmp =>
+      JsonCsvSources.writeCsv(eventsProjection(spark, dir), tmp)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(tmp, "part-malformed.csv"),
+        ("event_id,user_id,event_type,value" +: CsvMalformedRows)
+          .mkString("\n"))
+    }
     spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
@@ -179,20 +166,14 @@ object SourceQueries {
     * so [[ingestReport]] can aggregate it with the full-schema pin.
     */
   private def jsonlQuarantineRead(spark: SparkSession,
-      dir: String): DataFrame =
-    SessionMemo.getOrCompute(spark, s"srcq.jsonl-quarantine:$dir") {
-      jsonlQuarantineReadFresh(spark, dir)
-    }
-
-  private def jsonlQuarantineReadFresh(spark: SparkSession,
       dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-jsonl-q")
-    JsonCsvSources.writeJsonl(eventsProjection(spark, dir), tmp)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tmp, "part-malformed.json"),
-      JsonlMalformedRows.mkString("\n"))
-    val withCorrupt = StructType(
-      eventsLite.fields :+ StructField("_corrupt_record", StringType))
+    val tmp = SessionMemo.dir(spark, s"srcq.jsonl-quarantine:$dir",
+        "graft-jsonl-q") { tmp =>
+      JsonCsvSources.writeJsonl(eventsProjection(spark, dir), tmp)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(tmp, "part-malformed.json"),
+        JsonlMalformedRows.mkString("\n"))
+    }
     spark.read
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
@@ -245,26 +226,20 @@ object SourceQueries {
     * [[ingestReport]] can aggregate it with the full-schema pin.
     */
   private def xmlQuarantineRead(spark: SparkSession,
-      dir: String): DataFrame =
-    SessionMemo.getOrCompute(spark, s"srcq.xml-quarantine:$dir") {
-      xmlQuarantineReadFresh(spark, dir)
-    }
-
-  private def xmlQuarantineReadFresh(spark: SparkSession,
       dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-xml-q")
-    JsonCsvSources.writeXml(eventsProjection(spark, dir), tmp)
-    // salt the sink with malformed part files (driver-side, a few
-    // hundred bytes — fixture planting, same class as the multimodal
-    // payload plants). ONE row per file: after a parse failure the
-    // rowTag splitter reports the rest of the file as part of the same
-    // corrupt record, so co-planted rows would collapse into one
-    XmlMalformedRows.zipWithIndex.foreach { case (r, i) =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tmp, s"part-malformed-$i.xml"), r)
+    val tmp = SessionMemo.dir(spark, s"srcq.xml-quarantine:$dir",
+        "graft-xml-q") { tmp =>
+      JsonCsvSources.writeXml(eventsProjection(spark, dir), tmp)
+      // salt the sink with malformed part files (driver-side, a few
+      // hundred bytes — fixture planting, same class as the multimodal
+      // payload plants). ONE row per file: after a parse failure the
+      // rowTag splitter reports the rest of the file as part of the same
+      // corrupt record, so co-planted rows would collapse into one
+      XmlMalformedRows.zipWithIndex.foreach { case (r, i) =>
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(tmp, s"part-malformed-$i.xml"), r)
+      }
     }
-    val withCorrupt = StructType(
-      eventsLite.fields :+ StructField("_corrupt_record", StringType))
     spark.read.option("rowTag", "row")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
@@ -276,7 +251,7 @@ object SourceQueries {
     * the read side).
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-orc")
+    val tmp = TempArtifacts.tempDir("graft-orc")
     JsonCsvSources.writeOrc(eventsProjection(spark, dir), tmp)
     checksum(JsonCsvSources.readOrc(spark, tmp))
   }
@@ -288,7 +263,7 @@ object SourceQueries {
     * checksum equality proves a landing→convert hop is lossless.
     */
   def avroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-avro")
+    val tmp = TempArtifacts.tempDir("graft-avro")
     JsonCsvSources.writeAvro(eventsProjection(spark, dir), tmp)
     checksum(JsonCsvSources.readAvro(spark, tmp))
   }
@@ -304,7 +279,7 @@ object SourceQueries {
   val ExportLangs: Seq[String] = Seq("en", "de")
 
   def partitionedExport(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-part")
+    val tmp = TempArtifacts.tempDir("graft-part")
     JsonCsvSources.writeParquetPartitioned(
       Tables.documents(spark, dir)
         .select("doc_id", "lang", "source", "n_chars"), tmp, "lang")
@@ -363,7 +338,7 @@ object SourceQueries {
     * lang rollup.
     */
   def datasetManifest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-manifest")
+    val tmp = TempArtifacts.tempDir("graft-manifest")
     JsonCsvSources.writeParquetPartitioned(
       Tables.documents(spark, dir)
         .select("doc_id", "source", "n_chars", "text", "lang"),
@@ -394,7 +369,7 @@ object SourceQueries {
     * when totals happen to match.
     */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-textlines")
+    val tmp = TempArtifacts.tempDir("graft-textlines")
     Tables.documents(spark, dir)
       .select(concat_ws("\t", col("doc_id"), col("lang"), col("source"),
         col("text")).as("value"))
@@ -438,8 +413,8 @@ object SourceQueries {
     * spec asserts the file-count collapse.
     */
   def compactStore(spark: SparkSession, dir: String): DataFrame =
-    compactInto(spark, dir, tempSinkDir("graft-frag"),
-      tempSinkDir("graft-compact"))
+    compactInto(spark, dir, TempArtifacts.tempDir("graft-frag"),
+      TempArtifacts.tempDir("graft-compact"))
 
   private[graft] def compactInto(spark: SparkSession, dir: String,
       frag: String, compacted: String): DataFrame = {
@@ -472,7 +447,7 @@ object SourceQueries {
     * also how production stores version their layout.
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-evolve")
+    val tmp = TempArtifacts.tempDir("graft-evolve")
     val docs = Tables.documents(spark, dir)
     // %3 split: the fixture assigns source by doc_id % 20, so a %2
     // split would put every source entirely in one generation; %3
@@ -538,7 +513,7 @@ object SourceQueries {
     * SourcesExtensionsSpec against a round-robin control layout.
     */
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-zorder")
+    val tmp = TempArtifacts.tempDir("graft-zorder")
     writeZOrdered(spark, dir, tmp)
     spark.read.schema(zSchema).parquet(tmp)
       .groupBy(expr("CAST(z DIV 1024 AS BIGINT)").as("tile"))
@@ -598,7 +573,7 @@ object SourceQueries {
     * the one-file-one-task format is legitimate for.
     */
   def multilineRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = tempSinkDir("graft-mljson")
+    val tmp = TempArtifacts.tempDir("graft-mljson")
     JsonCsvSources.writeMultilineJson(
       Tables.customer(spark, dir)
         .select("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),

@@ -32,7 +32,7 @@ object Tables {
   val Names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def path(dir: String, name: String): String =
     s"$dir/$name.parquet"
@@ -79,12 +79,12 @@ object Tables {
     * read as a nano-epoch long via `nanosAsLong` and truncate to micros,
     * the same floor DuckDB applies), and tz-less TIMESTAMP(MICROS) (read
     * as a UTC-instant TimestampType — NTZ inference is disabled
-    * engine-wide, see [[graft.GraftSession]]). The LongType guard picks
-    * the right normalization per file, so either generation yields the
-    * same UTC instants. The streaming surface sniffs the same physical
-    * layout from the footers before declaring its readStream schema
-    * ([[graft.streaming.EventStream.readEvents]]), so both loaders track
-    * fixture regenerations together.
+    * engine-wide, see [[graft.GraftSession]]). [[microsTs]] picks the
+    * right normalization per file, so either generation yields the same
+    * UTC instants. The streaming surface declares its readStream `ts`
+    * with the type [[schema]] resolved and normalizes through the same
+    * [[microsTs]] ([[graft.streaming.EventStream.readEvents]]), so both
+    * loaders track fixture regenerations together.
     *
     * Side effect, by design: `nanosAsLong` is a session-wide SQLConf (no
     * per-read option exists), so after the events schema is resolved any
@@ -97,12 +97,17 @@ object Tables {
 
   /** [[events]] into a throwaway child session, as [[loadIn]]. */
   def eventsIn(child: SparkSession, s: SparkSession, d: String)
-      : DataFrame = {
-    val raw = loadIn(child, s, d, "events")
-    if (raw.schema("ts").dataType == LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw
-  }
+      : DataFrame =
+    microsTs(loadIn(child, s, d, "events"))
+
+  /** `ts` as a UTC-instant TIMESTAMP: a nanos-generation file's
+    * nano-epoch long (under `nanosAsLong`) truncated to micros, the floor
+    * DuckDB applies; a micros file passes through. Batch and stream alike.
+    */
+  private[graft] def microsTs(events: DataFrame): DataFrame =
+    if (events.schema("ts").dataType == LongType)
+      events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    else events
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (beyond-reference extensions; BASELINE.json north-star): quality
@@ -53,17 +54,14 @@ object TextOps {
     */
   private[engine] def tokenizedDocs(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark,
-        s"textops.tokenizedDocs:$dir") {
-      // r21 (guide §5, VERDICT r20 #1): SERIALIZED in-memory storage —
-      // the cache lives for the whole session, and the serialized form
-      // cuts the heap held against every later query's execution
-      // memory; the eviction cleanup unpersists instead of leaving the
-      // blocks to die with the context.
+    // r21 (guide §5, VERDICT r20 #1): SERIALIZED in-memory storage —
+    // the cache lives for the whole session, and the serialized form
+    // cuts the heap held against every later query's execution memory
+    SessionMemo.cached(spark, s"textops.tokenizedDocs:$dir",
+        StorageLevel.MEMORY_AND_DISK_SER) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), tokens.as("ws"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   // ===== script-aware deterministic segmentation (CJK-safe) ==========
 
@@ -903,11 +901,12 @@ object TextOps {
   /** (dst_host, atext, n): link counts per target host and normalized
     * anchor text over the corpus plus [[AnchorPlantedRows]] — the input
     * of both [[anchorText]] branches, CACHED and memoized per (session,
-    * dir); session eviction unpersists it.
+    * dir) by [[SessionMemo.cached]].
     */
   private[graft] def anchorCounts(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"textops.anchorCounts:$dir") {
+    SessionMemo.cached(spark, s"textops.anchorCounts:$dir",
+        StorageLevel.MEMORY_AND_DISK) {
       import spark.implicits._
       val synth = Tables.documents(spark, dir).select(col("doc_id"),
         concat(
@@ -932,8 +931,7 @@ object TextOps {
         .select(host.as("dst_host"), anchor.as("atext"))
         .groupBy("dst_host", "atext")
         .agg(count(lit(1)).as("n"))
-        .cache()
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** Anchor-text aggregation — the web-graph RELEVANCE signal next to
     * [[linkGraph]]'s authority signal: what the web CALLS a page is a
@@ -1153,17 +1151,17 @@ object TextOps {
 
   /** (term, c): unigram counts over [[tokenizedDocs]] — the three
     * unigram consumers of [[collocations]] (both join sides and the
-    * corpus total), CACHED and memoized per (session, dir); session
-    * eviction unpersists it.
+    * corpus total), CACHED and memoized per (session, dir) by
+    * [[SessionMemo.cached]].
     */
   private[graft] def collocUnigrams(spark: SparkSession,
       dir: String): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"textops.collocUnigrams:$dir") {
+    SessionMemo.cached(spark, s"textops.collocUnigrams:$dir",
+        StorageLevel.MEMORY_AND_DISK) {
       tokenizedDocs(spark, dir).select(col("ws"))
         .select(explode(col("ws")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("c"))
-        .cache()
-    }(df => scala.util.Try(df.unpersist()): Unit)
+    }
 
   /** Collocation mining — the statistical phrase detector that feeds a
     * tokenizer's multi-word merge list and a curation pipeline's

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (beyond-reference: the reference is pure
@@ -31,47 +30,52 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming DataFrame over a fixture dir (file-source replay). The
-    * default glob selects just the events table out of a fixture dir; a
-    * spool-dir caller (the sessionization drain) widens it to pick up
-    * files it appends after the initial replay.
-    *
-    * The physical `ts` layout is SNIFFED from the existing files' parquet
-    * footers exactly like [[graft.engine.Tables.events]]: a
-    * nanos-generation fixture (TIMESTAMP(NANOS), read as a nano-epoch
-    * long under `nanosAsLong`) gets the long-schema branch + micros
-    * truncation instead of a runtime decode failure mid-stream. If the
-    * footer probe finds no files yet (an empty spool dir), the current
-    * micros generation is assumed — the drain callers seed the dir
-    * before starting the query.
-    *
-    * The sniff is a batch schema inference, which on Spark 4.1 runs one
-    * Spark job per call. It is not memoized through the
-    * [[graft.engine.Tables.schema]] catalog on purpose: a spool-dir
-    * caller's glob matches files written during the run, so what it
-    * matches is not a fixed fixture table.
+  /** Streaming DataFrame over a fixture dir's events table (file-source
+    * replay), resolved in `spark` itself — [[readEventsIn]] with no
+    * child session.
     */
-  def readEvents(spark: SparkSession, dir: String,
-      glob: String = "events.parquet"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsIsLong = scala.util.Try(
-      spark.read.option("pathGlobFilter", glob).parquet(dir)
-        .schema("ts").dataType == LongType
-    ).getOrElse(false)
-    // file-stream sources take a directory; the glob selects the table
-    if (tsIsLong) {
-      val longSchema = StructType(eventSchema.map(f =>
-        if (f.name == "ts") f.copy(dataType = LongType) else f))
-      spark.readStream
-        .schema(longSchema)
-        .option("pathGlobFilter", glob)
-        .parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    } else
-      spark.readStream
-        .schema(eventSchema)
-        .option("pathGlobFilter", glob)
-        .parquet(dir)
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    readEventsIn(spark, spark, dir)
+
+  /** [[readEvents]] into `child`, a throwaway `spark.newSession()`: the
+    * physical `ts` type comes from the events schema its parent `spark`
+    * resolved ([[graft.engine.Tables.schema]], as
+    * [[graft.engine.Tables.loadIn]]), so the read launches no job. A
+    * nanos-generation fixture (TIMESTAMP(NANOS), a nano-epoch long under
+    * `nanosAsLong`) gets the long schema and the micros truncation
+    * instead of a runtime decode failure mid-stream.
+    */
+  def readEventsIn(child: SparkSession, spark: SparkSession,
+      dir: String): DataFrame =
+    fileStream(child, dir, "events.parquet",
+      graft.engine.Tables.schema(spark, dir, "events")("ts").dataType)
+
+  /** Streaming DataFrame over a spool dir the sessionization drain
+    * appends to after the initial replay. Its files are written during
+    * the run, so `ts`'s layout is sniffed from their footers (one Spark
+    * job); an empty spool reads as the micros generation.
+    */
+  def readSpool(spark: SparkSession, spool: String): DataFrame = {
+    spark.conf.set(graft.engine.Tables.NanosAsLong, "true")
+    val ts = scala.util.Try(
+      spark.read.option("pathGlobFilter", "*.parquet").parquet(spool)
+        .schema("ts").dataType
+    ).getOrElse(TimestampType)
+    fileStream(spark, spool, "*.parquet", ts)
+  }
+
+  /** The file stream over `dir`'s files matching `glob` (file-stream
+    * sources take a directory; the glob selects the table), `ts`
+    * declared as `tsType` and normalized by
+    * [[graft.engine.Tables.microsTs]].
+    */
+  private def fileStream(spark: SparkSession, dir: String, glob: String,
+      tsType: DataType): DataFrame = {
+    spark.conf.set(graft.engine.Tables.NanosAsLong, "true")
+    val schema = StructType(eventSchema.map(f =>
+      if (f.name == "ts") f.copy(dataType = tsType) else f))
+    graft.engine.Tables.microsTs(spark.readStream.schema(schema)
+      .option("pathGlobFilter", glob).parquet(dir))
   }
 
   /** Watermarked tumbling-window aggregation: counts + exact decimal sums
@@ -87,21 +91,4 @@ object EventStream {
         sum(col("value").cast("decimal(12,2)")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Run the pipeline to completion against the (finite) fixture replay
-    * into an in-memory table; returns the query for the caller to stop.
-    * `complete` mode because tests want every window, including ones the
-    * watermark has not finalized.
-    */
-  def runToMemory(spark: SparkSession, dir: String,
-      tableName: String): StreamingQuery = {
-    val q = windowedCounts(readEvents(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode("complete")
-      .start()
-    q.processAllAvailable()
-    q
-  }
 }

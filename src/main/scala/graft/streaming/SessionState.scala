@@ -135,8 +135,7 @@ object SessionState {
       java.nio.file.Paths.get(dir, "events.parquet"),
       java.nio.file.Paths.get(spool, "events.parquet")): Unit
     appendDrainSentinel(spark, dir, spool)
-    val q = sessionStream(child,
-        EventStream.readEvents(child, spool, glob = "*.parquet"))
+    val q = sessionStream(child, EventStream.readSpool(child, spool))
       .writeStream.format("memory").queryName(tableName)
       .outputMode("append").start()
     q.processAllAvailable()

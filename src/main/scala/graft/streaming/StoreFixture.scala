@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.engine.{SessionMemo, Tables, TempArtifacts}
 
@@ -44,20 +45,20 @@ private[graft] object StoreFixture {
   /** The events table in spool shape — (event_id, ts, user_id,
     * event_type, value) plus `__batch` = ntile(`parts`) over the
     * (ts, event_id) total order, 0-based — cached and memoized per
-    * (session, dir, parts); memo eviction unpersists it. Every ntile
+    * (session, dir, parts) by [[SessionMemo.cached]]. Every ntile
     * batch of the fixture, spooled or merged directly, filters THIS
     * frame, so the global-order window sort runs once per split.
     */
   private def ntileFrame(spark: SparkSession, dir: String,
       parts: Int): DataFrame =
-    SessionMemo.getOrComputeCleanup(spark, s"graft:ntile:$dir:$parts") {
+    SessionMemo.cached(spark, s"graft:ntile:$dir:$parts",
+        StorageLevel.MEMORY_AND_DISK) {
       Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .withColumn("__batch", (ntile(parts).over(
           Window.orderBy(col("ts"), col("event_id"))) - 1).cast("int"))
-        .cache()
-    }(df => df.unpersist(): Unit)
+    }
 
   /** One right-to-be-forgotten tombstone per user_id divisible by
     * [[StreamingQueries.ForgetMod]], as the event rows of batch `b`.
@@ -202,27 +203,19 @@ private[graft] object StoreFixture {
     * spool and the stream. Memoized per (session, dir, parts, gens,
     * withTombstones): ingest runs once, many consumers read snapshots or
     * fork a prefix ([[forkStorePrefix]]); no consumer may mutate it. The
-    * memo's eviction deletes the store dir (ScaleBench evicts between
-    * scales, so each scale re-ingests cold, then reads warm).
+    * store dir is a [[SessionMemo.dir]], deleted on eviction (ScaleBench
+    * evicts between scales, so each scale re-ingests cold, then reads
+    * warm).
     */
   private[graft] def sharedStore(spark: SparkSession, dir: String,
       parts: Int, gens: Int, withTombstones: Boolean): String =
-    SessionMemo.getOrComputeCleanup(spark,
-      s"graft:vstore:$parts:$gens:$withTombstones:$dir") {
-      // the tempDir prefix must be unique per LIVE store: tempDir
-      // deletes the previous dir registered under the same prefix, and
-      // this store outlives the call under the session memo — a second
-      // session building the same store must not sweep the first's
-      // files while its memo still points there
-      val root = TempArtifacts.tempDir(
-        s"graft-vstore-base$parts-$gens-$withTombstones-" +
-          s"${dir.hashCode.toHexString}-${runSeq.incrementAndGet()}")
+    SessionMemo.dir(spark, s"graft:vstore:$parts:$gens:$withTombstones:$dir",
+        s"graft-vstore-base$parts-$gens-$withTombstones-") { root =>
       def merge(rows: DataFrame, g: Int): Unit =
         VersionedStore.mergeGeneration(rows, g, root, commitTs = commitTs(g))
       (0 until gens).foreach(g => merge(ntileBatch(spark, dir, parts, g), g))
       if (withTombstones) merge(storeRows(tombstones(spark, dir, gens)), gens)
-      root
-    }(root => TempArtifacts.delete(root))
+    }
 
   /** Deep-copy the committed prefix (manifests 0..`upToGen` plus the
     * `data/gen=g` dirs they reference) of a store into a fresh private

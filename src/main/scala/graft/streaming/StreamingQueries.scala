@@ -86,8 +86,8 @@ object StreamingQueries {
 
   def streamEventWindow(spark: SparkSession, dir: String): DataFrame = {
     val s2 = sizedStreamSession(spark, dir)
-    drain(EventStream.windowedCounts(EventStream.readEvents(s2, dir)), "win",
-      "complete")
+    drain(EventStream.windowedCounts(EventStream.readEventsIn(s2, spark, dir)),
+      "win", "complete")
       .select(col("window_start"), col("event_type"), col("n"),
         round(col("sum_value").cast("double"), 2).as("sum_value"),
         round(col("sum_value").cast("double") / col("n"), 6)
@@ -133,7 +133,7 @@ object StreamingQueries {
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val s2 = sizedStreamSession(spark, dir)
-    drain(EventStream.readEvents(s2, dir)
+    drain(EventStream.readEventsIn(s2, spark, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type"), "dedup", "append")
   }
@@ -155,7 +155,7 @@ object StreamingQueries {
       graft.engine.Tables.loadIn(s2, spark, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment")))
-    drain(EventStream.readEvents(s2, dir)
+    drain(EventStream.readEventsIn(s2, spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .join(dim, Seq("user_id"), "left")
@@ -191,12 +191,12 @@ object StreamingQueries {
     // Left ON for the session-window/timeout queries, whose final rows
     // only EMIT on watermark advancement.
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val clicks = EventStream.readEvents(s2, dir)
+    val clicks = EventStream.readEventsIn(s2, spark, dir)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "14 days")
-    val purchases = EventStream.readEvents(s2, dir)
+    val purchases = EventStream.readEventsIn(s2, spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"),
         col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
@@ -961,7 +961,7 @@ object StreamingQueries {
     val k = graft.engine.Ext.KmvK
     val kmv = udaf(new graft.functions.KmvSketchSql(k),
       org.apache.spark.sql.Encoders.LONG)
-    val sketches = drain(EventStream.readEvents(s2, dir)
+    val sketches = drain(EventStream.readEventsIn(s2, spark, dir)
       .withWatermark("ts", "2 hours")
       .select(col("ts"),
         graft.functions.StringFunctions.utf8_poly_id(

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.engine.{SessionMemo, SqlEntry, Tables}
-import graft.streaming.StreamingQueries
+import graft.streaming.{EventStream, StreamingQueries}
 
 /** The fixture schema catalog: [[Tables.schema]] resolves each table's
   * schema once per (session, table path) and every load reads with it.
@@ -66,6 +66,12 @@ class TablesCatalogSpec extends SparkSpec {
       assert(child.conf.get("spark.sql.legacy.parquet.nanosAsLong") ===
         "true")
     } finally SessionMemo.evictSession(child)
+  }
+
+  test("a stream read of the fixture events launches no job once the " +
+      "schema is resolved") {
+    Tables.schema(spark, sf, "events")
+    assert(jobsDuring(EventStream.readEvents(spark, sf)) === 0)
   }
 
   test("data rewritten under the same schema is read fresh") {

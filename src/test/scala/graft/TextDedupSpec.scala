@@ -1432,7 +1432,7 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("session eviction unpersists the memoized anchor and collocation frames") {
+  test("session eviction unpersists every memoized frame") {
     val cacheManager = spark.sharedState.cacheManager
     def cached(df: org.apache.spark.sql.DataFrame) =
       cacheManager.lookupCachedData(
@@ -1440,17 +1440,29 @@ class TextDedupSpec extends SparkSpec {
     // start from an empty cache so the final check sees only these queries
     SessionMemo.evictSession(spark)
     spark.catalog.clearCache()
-    SparkEntry.queries("q_anchor_text")(spark, sf).collect()
-    SparkEntry.queries("q_collocations")(spark, sf).collect()
+    // between them these reach all twelve SessionMemo.cached sites; the
+    // private ones (tokenized docs, the minhash pair table, the substring
+    // windows and spans, the labeled basetable, the confusion table, the
+    // store fixture's ntile frame) are checked by the empty cache below
+    Seq("q_anchor_text", "q_collocations", "q_embed_quantize",
+        "q_ann_incremental")
+      .foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    Dedup.dedupMinhash(spark, sf).collect()
+    Dedup.substringDedup(spark, sf).collect()
+    MlSuite.lrConfusion(spark, sf).collect()
+    graft.streaming.StreamingQueries.storeSchemaEvolution(spark, sf).collect()
     val frames = Seq(
       "anchorCounts" -> TextOps.anchorCounts(spark, sf),
-      "collocUnigrams" -> TextOps.collocUnigrams(spark, sf))
+      "collocUnigrams" -> TextOps.collocUnigrams(spark, sf),
+      "dimStats" -> Similarity.dimStats(spark, sf),
+      "corpusCentroids" -> Similarity.corpusCentroids(spark, sf),
+      "shingleIds" -> Dedup.shingleIdsAt(spark, sf, Dedup.ShingleGridVersion))
     frames.foreach { case (n, df) => assert(cached(df), s"$n is not cached") }
     SessionMemo.evictSession(spark)
     frames.foreach { case (n, df) =>
       assert(!cached(df), s"$n stays cached after eviction")
     }
     assert(cacheManager.isEmpty,
-      "a frame cached by the two queries outlives eviction")
+      "a frame cached by the queries outlives eviction")
   }
 }
