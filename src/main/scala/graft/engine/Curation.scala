@@ -62,16 +62,17 @@ object Curation {
     * separator variants (the +44-20… phone shape needs the 2–4-digit
     * group repetition), and a null row.
     */
-  private[graft] val PiiPlantedRows: Seq[(Long, String)] = Seq(
-    (970001L, "contact alice at alice.smith+spam@example.com or " +
-      "+1 415 555 0173 today"),
-    (970002L, "server at 10.0.0.1 and 192.168.1.254 responded"),
-    (970003L, "card 4111 1111 1111 1111 on file, backup " +
-      "5500-0000-0000-0004"),
-    (970004L, "no sensitive content in this row at all"),
-    (970005L, "mixed bob@corp.io from 172.16.254.3 using " +
-      "+44-20-7946-0958 and card 4012 8888 8888 1881"),
-    (970006L, null))
+  private[graft] val PiiPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (970001L, "contact alice at alice.smith+spam@example.com or " +
+        "+1 415 555 0173 today"),
+      (970002L, "server at 10.0.0.1 and 192.168.1.254 responded"),
+      (970003L, "card 4111 1111 1111 1111 on file, backup " +
+        "5500-0000-0000-0004"),
+      (970004L, "no sensitive content in this row at all"),
+      (970005L, "mixed bob@corp.io from 172.16.254.3 using " +
+        "+44-20-7946-0958 and card 4012 8888 8888 1881"),
+      (970006L, null))
 
   /** Typed-PII audit + redaction — the release gate a training corpus
     * runs before anything leaves the pipeline: per-type match counts
@@ -84,9 +85,7 @@ object Curation {
     * on adversarial corpus bytes).
     */
   def piiAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(PiiPlantedRows.toDF("doc_id", "text"))
+    val src = PiiPlantedRows.onto(Tables.documents(spark, dir))
     val countExprs = PiiPatterns.map { case (_, re, _) =>
       size(regexp_extract_all(col("text"), lit(re), lit(0))).cast("long")
     }
@@ -220,9 +219,7 @@ object Curation {
     * the 1-row agg.
     */
   def deletionAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(PiiPlantedRows.toDF("doc_id", "text"))
+    val src = PiiPlantedRows.onto(Tables.documents(spark, dir))
     val nPii = PiiPatterns.map { case (_, re, _) =>
       size(regexp_extract_all(col("text"), lit(re), lit(0)))
     }.reduce(_ + _)
@@ -951,12 +948,13 @@ object Curation {
     * out-of-scope (neither engine's builtin decodes it; a production
     * pass adds it at this same seam).
     */
-  private[graft] val UrlPlantedRows: Seq[(Long, String)] = Seq(
-    (915001L, "HTTP://Sub.Example.COM:80/A/B?z=9&a=1#top"),
-    (915002L, "http://sub.example.com/A/B?a=1&z=9"),
-    (915003L, "https://tracker.example.com/page?utm_source=x&utm_medium=y&fbclid=abc"),
-    (915004L, "https://bare.example.com"),
-    (915005L, "https://WWW.bare.example.com:443/?utm_campaign=z"))
+  private[graft] val UrlPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "url")(
+      (915001L, "HTTP://Sub.Example.COM:80/A/B?z=9&a=1#top"),
+      (915002L, "http://sub.example.com/A/B?a=1&z=9"),
+      (915003L, "https://tracker.example.com/page?utm_source=x&utm_medium=y&fbclid=abc"),
+      (915004L, "https://bare.example.com"),
+      (915005L, "https://WWW.bare.example.com:443/?utm_campaign=z"))
 
   /** Tracking-parameter prefixes stripped during canonicalization (the
     * standard utm/click-id hygiene list).
@@ -983,7 +981,6 @@ object Curation {
     * exchange on the canonical key for group stats.
     */
   def urlCanonical(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val synth = Tables.documents(spark, dir).select(col("doc_id"),
       concat(
         when(col("doc_id") % 4 === 0, lit("HTTPS")).otherwise(lit("https")),
@@ -999,7 +996,7 @@ object Curation {
         when(col("doc_id") % 6 === 0,
           concat(lit("#sec"), col("doc_id") % 3)).otherwise(lit("")))
         .as("url"))
-    val all = synth.unionByName(UrlPlantedRows.toDF("doc_id", "url"))
+    val all = UrlPlantedRows.onto(synth)
     val re = "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]*)(:[0-9]+)?([^?#]*)(\\?[^#]*)?"
     val scheme = lower(regexp_extract(col("url"), re, 1))
     val host = regexp_replace(
@@ -1036,12 +1033,13 @@ object Curation {
     "src3.example.com")
 
   /** Deep-subdomain / boundary cases planted into [[domainFilter]]. */
-  private[graft] val DomainPlantedRows: Seq[(Long, String)] = Seq(
-    (980001L, "https://a.b.spam.example.com/page?x=1"),
-    (980002L, "https://notspam.example.com/ok"),
-    (980003L, "http://ads.example.net/banner"),
-    (980004L, "https://WWW.Tracker.Example.COM:443/t"),
-    (980005L, "https://clean.example.org/fine"))
+  private[graft] val DomainPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "url")(
+      (980001L, "https://a.b.spam.example.com/page?x=1"),
+      (980002L, "https://notspam.example.com/ok"),
+      (980003L, "http://ads.example.net/banner"),
+      (980004L, "https://WWW.Tracker.Example.COM:443/t"),
+      (980005L, "https://clean.example.org/fine"))
 
   /** Domain-blocklist filtering — the crawl-curation gate that runs ON
     * TOP of [[urlCanonical]]'s output (canonicalize first, then judge
@@ -1060,9 +1058,8 @@ object Curation {
   def domainFilter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val re = "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]*)(:[0-9]+)?"
-    val all = urlCanonical(spark, dir)
-      .select(col("doc_id"), col("canonical_url").as("url"))
-      .unionByName(DomainPlantedRows.toDF("doc_id", "url"))
+    val all = DomainPlantedRows.onto(urlCanonical(spark, dir)
+      .select(col("doc_id"), col("canonical_url").as("url")))
     val hosts = all.select(col("doc_id"),
       regexp_replace(lower(regexp_extract(col("url"), re, 2)),
         "^www\\.", "").as("host"))
@@ -1173,11 +1170,8 @@ object Curation {
        |FROM flagged GROUP BY source""".stripMargin
 
   private val urlCanonicalSql: String = {
-    val values = UrlPlantedRows.map { case (id, u) =>
-      s"($id, ${TextOps.sqlLit(u)})"
-    }.mkString(", ")
     val re = "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]*)(:[0-9]+)?([^?#]*)(\\?[^#]*)?"
-    s"""WITH u AS (SELECT doc_id,
+    s"""WITH syn AS (SELECT doc_id,
        |    (CASE WHEN doc_id % 4 = 0 THEN 'HTTPS' ELSE 'https' END)
        |    || '://'
        |    || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
@@ -1190,8 +1184,8 @@ object Curation {
        |    || '&b=2&a=1'
        |    || (CASE WHEN doc_id % 6 = 0 THEN '#sec' || (doc_id % 3)
        |        ELSE '' END) AS url
-       |  FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, url)),
+       |  FROM documents),
+       |u AS (${UrlPlantedRows.ontoSql("syn")}),
        |p AS (SELECT doc_id, url,
        |    lower(regexp_extract(url, '$re', 1)) AS scheme,
        |    regexp_replace(lower(regexp_extract(url, '$re', 2)),
@@ -1307,15 +1301,12 @@ object Curation {
          |  true AS suppressed
          |FROM g WHERE n < $KAnonK""".stripMargin,
     "q_domain_filter" -> {
-      val values = DomainPlantedRows.map { case (id, u) =>
-        s"($id, ${TextOps.sqlLit(u)})"
-      }.mkString(", ")
       val rules = DomainBlocklist.map(r => s"'$r'").mkString(", ")
       // NOTE: urlCanonicalSql contains `||` concat operators, so it must
       // be spliced in AFTER stripMargin (stripMargin would eat one pipe)
       val tail =
-        s"""src AS (SELECT doc_id, canonical_url AS url FROM uc
-           |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, url)),
+        s"""cu AS (SELECT doc_id, canonical_url AS url FROM uc),
+           |src AS (${DomainPlantedRows.ontoSql("cu")}),
            |h AS (SELECT doc_id, regexp_replace(lower(regexp_extract(url,
            |    '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]*)(:[0-9]+)?', 2)),
            |    '^www\\.', '') AS host FROM src),
@@ -1383,9 +1374,6 @@ object Curation {
     "q_text_scrub" ->
       """SELECT doc_id, CAST(len(regexp_extract_all(raw, '[a-z0-9]+@[a-z0-9.]+')) AS BIGINT) AS n_emails, CAST(len(regexp_extract_all(raw, 'https?://[^ ]+')) AS BIGINT) AS n_urls, regexp_replace(regexp_replace(raw, 'https?://[^ ]+', '<URL>', 'g'), '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>', 'g') AS scrubbed FROM (SELECT doc_id, text || ' contact user' || doc_id || '@example.com via http://site' || doc_id || '.com' AS raw FROM documents)""",
     "q_pii_audit" -> {
-      val values = PiiPlantedRows.map { case (id, t) =>
-        s"($id, ${TextOps.sqlLit(t)})"
-      }.mkString(", ")
       val countCols = PiiPatterns.map { case (name, re, _) =>
         s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS n_$name"
       }.mkString(", ")
@@ -1395,8 +1383,7 @@ object Curation {
       val total = PiiPatterns.map { case (_, re, _) =>
         s"len(regexp_extract_all(text, '$re'))"
       }.mkString(" + ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text))
+      s"""WITH src AS (${PiiPlantedRows.ontoSql("documents")})
          |SELECT doc_id, $countCols, $red AS redacted,
          |  ($total) > 0 AS has_pii
          |FROM src""".stripMargin
@@ -1482,9 +1469,6 @@ object Curation {
          |FROM base, top, dp, dd""".stripMargin
     },
     "q_deletion_audit" -> {
-      val values = PiiPlantedRows.map { case (id, t) =>
-        s"($id, ${TextOps.sqlLit(t)})"
-      }.mkString(", ")
       val total = PiiPatterns.map { case (_, re, _) =>
         s"len(regexp_extract_all(text, '$re'))"
       }.mkString(" + ")
@@ -1494,8 +1478,7 @@ object Curation {
       val resid = PiiPatterns.map { case (_, re, _) =>
         s"len(regexp_extract_all($red, '$re'))"
       }.mkString(" + ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${PiiPlantedRows.ontoSql("documents")}),
          |per AS (SELECT doc_id, text,
          |    COALESCE(text IS NOT NULL AND ($total) > 0, FALSE) AS p,
          |    CASE WHEN text IS NOT NULL AND ($resid) > 0

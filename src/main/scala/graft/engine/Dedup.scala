@@ -148,11 +148,12 @@ object Dedup {
     * VALUES clause is generated from these same literals, so both engines
     * are guaranteed to hash identical byte sequences.
     */
-  private[graft] val Utf8PlantedRows: Seq[(Long, String)] = Seq(
-    (900001L, "héllo wörld"),
-    (900002L, "日本語のテキスト"),
-    (900003L, "emoji 🚀 mix"),
-    (900004L, "кириллица текст"))
+  private[graft] val Utf8PlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (900001L, "héllo wörld"),
+      (900002L, "日本語のテキスト"),
+      (900003L, "emoji 🚀 mix"),
+      (900004L, "кириллица текст"))
 
   /** UTF-8 portable-fingerprint gate: [[portableIdUtf8]] proven engine-
     * portable end to end — the (ASCII) fixture corpus plus the planted
@@ -161,13 +162,9 @@ object Dedup {
     * ASCII-equivalence surface (PropertySpec asserts utf8 id == ascii id
     * there).
     */
-  def utf8Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val planted = Utf8PlantedRows.toDF("doc_id", "text")
-    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .unionByName(planted)
+  def utf8Fingerprint(spark: SparkSession, dir: String): DataFrame =
+    Utf8PlantedRows.onto(Tables.documents(spark, dir))
       .select(col("doc_id"), portableIdUtf8(col("text")).as("utf8_fp"))
-  }
 
   /** Shared unsegmented prefix of the planted CJK near-dup pair: 52
     * codepoints, no whitespace. With the differing 2-codepoint suffix the
@@ -187,11 +184,11 @@ object Dedup {
     * gated on multilingual text in every dedup query, not just the
     * dedicated fingerprint query.
     */
-  private[graft] val MultilingualDedupRows: Seq[(Long, String)] = {
+  private[graft] val MultilingualDedupRows: PlantedRows[(Long, String)] = {
     val base = "zürich café naïve résumé touché crème brûlée déjà vu piñata " +
       "日本語 テキスト 解析 変換 処理 データ 🚀 ロケット 発射 準備 " +
       "кириллица текст пример слово данные поток система анализ"
-    Seq(
+    PlantedRows("doc_id", "text")(
       (910001L, base + " конец"),
       (910002L, base + " финал"),
       (910003L, "véritablement autre document 完全に異なる内容 другой текст совсем 😀 ici"),
@@ -215,11 +212,8 @@ object Dedup {
     * multilingual rows. The oracle mirror is [[docsCte]], whose VALUES
     * clause is generated from the same literals.
     */
-  private[graft] def dedupDocs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .unionByName(MultilingualDedupRows.toDF("doc_id", "text"))
-  }
+  private[graft] def dedupDocs(spark: SparkSession, dir: String): DataFrame =
+    MultilingualDedupRows.onto(Tables.documents(spark, dir))
 
   /** Exact dedup: group by full content, keep the minimum id (the standard
     * hash-groupBy exact pass run before any fuzzy matching).
@@ -1525,9 +1519,9 @@ object Dedup {
     * offsets (position 4 in the first doc, 8 in the second) — the
     * arbitrary-alignment case chunk-level dedup structurally misses.
     */
-  private[graft] val SubstrPlantedRows: Seq[(Long, String)] = {
+  private[graft] val SubstrPlantedRows: PlantedRows[(Long, String)] = {
     val quote = (1 to 16).map(i => f"zq$i%02d").mkString(" ")
-    Seq(
+    PlantedRows("doc_id", "text")(
       (993001L, s"pza1 pza2 pza3 $quote wza1 wza2"),
       (993002L, s"pzb1 pzb2 pzb3 pzb4 pzb5 pzb6 pzb7 $quote wzb1"))
   }
@@ -1581,11 +1575,9 @@ object Dedup {
       .select(col("doc_id"), col("ws").as("t"))
 
   /** The [[SubstrPlantedRows]] tokenized — a two-row local branch. */
-  private def plantedTokens(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    SubstrPlantedRows.toDF("doc_id", "text")
+  private def plantedTokens(spark: SparkSession): DataFrame =
+    SubstrPlantedRows.frame(spark)
       .select(col("doc_id"), TextOps.segmentTokens(col("text")).as("t"))
-  }
 
   /** CACHED plain-corpus window grid `(doc_id, pos, sid)` — memoized
     * per (session, dir) like the shingle grid (r20, guide §2.4). Five
@@ -2090,6 +2082,14 @@ object Dedup {
     */
   val MemorizedRunMin = 8
 
+  /** The fully novel "generated" rows of [[memorizationAudit]]: no
+    * shingle of either can match the corpus.
+    */
+  private[graft] val NovelGenRows: PlantedRows[(Long, String)] =
+    PlantedRows("gen_id", "text")(
+      (9000001L, (1 to 40).map(i => s"fresh$i").mkString(" ")),
+      (9000002L, (1 to 33).map(i => s"unseen$i").mkString(" ")))
+
   /** Memorization / regurgitation audit — decontamination's MIRROR:
     * decontamination asks "did benchmark text leak INTO the corpus?",
     * this asks "does (model) OUTPUT text reproduce the corpus?" — the
@@ -2113,7 +2113,6 @@ object Dedup {
     * doc.
     */
   def memorizationAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 30)
@@ -2125,11 +2124,8 @@ object Dedup {
         concat(concat_ws(" ", slice(col("w"), 1, 15)),
           lit(" " + (1 to 16).map(i => s"novel$i").mkString(" ")))
           .as("text"))
-    val novel = Seq(
-      (9000001L, (1 to 40).map(i => s"fresh$i").mkString(" ")),
-      (9000002L, (1 to 33).map(i => s"unseen$i").mkString(" ")))
-      .toDF("gen_id", "text")
-    val gen = copies.unionByName(splices).unionByName(novel)
+    val gen = copies.unionByName(splices)
+      .unionByName(NovelGenRows.frame(spark))
       .select(col("gen_id"), split(col("text"), " ").as("t"))
       .select(col("gen_id"),
         explode(sequence(lit(1), size(col("t")) - 2)).as("p"),
@@ -2209,11 +2205,12 @@ object Dedup {
     * storage-dedup failure CDC exists to fix), and a half-overlapping
     * tail-divergent variant.
     */
-  private[graft] val CdcPlantedRows: Seq[(Long, String)] = Seq(
-    (996001L, (1 to 64).map(i => f"cdc$i%02d").mkString(" ")),
-    (996002L, "shift " + (1 to 64).map(i => f"cdc$i%02d").mkString(" ")),
-    (996003L, (1 to 32).map(i => f"cdc$i%02d").mkString(" ") + " " +
-      (1 to 32).map(i => f"tail$i%02d").mkString(" ")))
+  private[graft] val CdcPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (996001L, (1 to 64).map(i => f"cdc$i%02d").mkString(" ")),
+      (996002L, "shift " + (1 to 64).map(i => f"cdc$i%02d").mkString(" ")),
+      (996003L, (1 to 32).map(i => f"cdc$i%02d").mkString(" ") + " " +
+        (1 to 32).map(i => f"tail$i%02d").mkString(" ")))
 
   /** Content-defined chunk dedup — the shift-resistant sibling of
     * [[chunkDedup]]: fixed-grid windows change EVERY fingerprint when a
@@ -2238,9 +2235,7 @@ object Dedup {
     * the boundary window.
     */
   def cdcDedup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(CdcPlantedRows.toDF("doc_id", "text"))
+    val docs = CdcPlantedRows.onto(Tables.documents(spark, dir))
     val tok = docs
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
@@ -2385,13 +2380,8 @@ object Dedup {
   /** DuckDB twin of [[dedupDocs]]: fixture corpus + the planted
     * multilingual VALUES, generated from the same literals.
     */
-  private val docsCte: String = {
-    val values = MultilingualDedupRows.map { case (id, t) =>
-      s"($id, '${t.replace("'", "''")}')"
-    }.mkString(", ")
-    s"""docs AS (SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text))""".stripMargin
-  }
+  private val docsCte: String =
+    s"docs AS (${MultilingualDedupRows.ontoSql("documents")})"
 
   /** DuckDB twin of [[shingles]] at [[ShingleGridVersion]] (v2): NFC +
     * script-aware segmentation, then 3-grams — kept in lockstep with the
@@ -2669,12 +2659,8 @@ object Dedup {
          |  CAST(count(*) - sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_dup
          |FROM r GROUP BY doc_id""".stripMargin,
-    "q_cdc_dedup" -> {
-      val values = CdcPlantedRows.map { case (id, t) =>
-        s"($id, ${TextOps.sqlLit(t)})"
-      }.mkString(", ")
-      s"""WITH docs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+    "q_cdc_dedup" ->
+      s"""WITH docs AS (${CdcPlantedRows.ontoSql("documents")}),
          |t AS (SELECT doc_id, string_split(text, ' ') AS w FROM docs),
          |tk AS (SELECT doc_id, p, w[p] AS tok,
          |    CASE WHEN ${idUtf8Sql("w[p]")} % $CdcMod = 0
@@ -2701,12 +2687,9 @@ object Dedup {
          |    AS BIGINT) AS n_dup,
          |  CAST(sum(n_chunk_tokens) AS BIGINT) AS n_tokens,
          |  CAST(max(n_chunk_tokens) AS BIGINT) AS max_chunk_tokens
-         |FROM r GROUP BY doc_id""".stripMargin
-    },
+         |FROM r GROUP BY doc_id""".stripMargin,
     "q_memorization_audit" -> {
       val novelTail = (1 to 16).map(i => s"novel$i").mkString(" ")
-      val fresh = (1 to 40).map(i => s"fresh$i").mkString(" ")
-      val unseen = (1 to 33).map(i => s"unseen$i").mkString(" ")
       s"""WITH $shingleSql,
          |gd AS (SELECT doc_id, string_split(text, ' ') AS w
          |  FROM documents WHERE len(string_split(text, ' ')) >= 30),
@@ -2719,8 +2702,8 @@ object Dedup {
          |      array_to_string(w[1:15], ' ') || ' ' || '$novelTail'
          |    FROM gd WHERE doc_id % 101 = 0
          |  UNION ALL
-         |  SELECT CAST(gen_id AS BIGINT), text FROM (VALUES
-         |    (9000001, '$fresh'), (9000002, '$unseen')) v(gen_id, text)),
+         |  SELECT CAST(gen_id AS BIGINT), text
+         |    FROM ${NovelGenRows.valuesSql}),
          |g AS (SELECT gen_id, string_split(text, ' ') AS t FROM g0),
          |gp AS (SELECT gen_id, unnest(range(1, len(t) - 1)) AS p, t
          |  FROM g),
@@ -2967,11 +2950,7 @@ object Dedup {
          |ORDER BY n_docs DESC, n_occ DESC, span
          |LIMIT $SpanTopK""".stripMargin,
     "q_substring_dedup" -> {
-      val values = SubstrPlantedRows.map { case (id, t) =>
-        s"($id, '${t.replace("'", "''")}')"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${SubstrPlantedRows.ontoSql("documents")}),
          |$substrSpanSqlCtes
          |SELECT doc_id, span_start, span_end,
          |  span_end - span_start + 1 AS span_tokens, n_windows
@@ -2979,11 +2958,7 @@ object Dedup {
         .stripMargin
     },
     "q_substring_scrub" -> {
-      val values = SubstrPlantedRows.map { case (id, t) =>
-        s"($id, '${t.replace("'", "''")}')"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${SubstrPlantedRows.ontoSql("documents")}),
          |$substrSpanSqlCtes,
          |spans AS (SELECT doc_id, span_start, span_end FROM sp
          |  WHERE span_end - span_start + 1 >= $SubstrMinSpan),
@@ -3056,14 +3031,9 @@ object Dedup {
          |  CAST(max(coalesce(max_span, 0)) AS BIGINT) AS max_span
          |FROM per p LEFT JOIN agg a ON p.doc_id = a.doc_id
          |GROUP BY source""".stripMargin,
-    "q_utf8_fingerprint" -> {
-      val values = Utf8PlantedRows.map { case (id, t) =>
-        s"($id, '${t.replace("'", "''")}')"
-      }.mkString(", ")
+    "q_utf8_fingerprint" ->
       s"""SELECT doc_id, ${idUtf8Sql("text")} AS utf8_fp FROM (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) t(doc_id, text))""".stripMargin
-    },
+         |  ${Utf8PlantedRows.ontoSql("documents")})""".stripMargin,
     "q_corpus_overlap" ->
       s"""WITH $shingleSql,
          |pres AS (SELECT sid,

@@ -519,9 +519,10 @@ object Ext {
     */
   private val StatCols = Seq("doc_id", "lang", "source", "n_chars")
   private[graft] val StatsPlantedRows
-      : Seq[(Long, Option[String], Option[String], Option[Long])] = Seq(
-    (994001L, None, None, None),
-    (994002L, None, Some("srcX"), None))
+      : PlantedRows[(Long, Option[String], Option[String], Option[Long])] =
+    PlantedRows(StatCols: _*)(
+      (994001L, None, None, None),
+      (994002L, None, Some("srcX"), None))
 
   /** ANALYZE-style per-column table statistics — the catalog profile a
     * cost-based optimizer (or a data-quality dashboard) reads: row
@@ -537,13 +538,8 @@ object Ext {
     * no per-column scans, no Expand (single distinct aggregate).
     */
   def tableStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val planted = StatsPlantedRows.toDF("doc_id", "lang", "source",
-      "n_chars")
-    val src = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"),
-        col("n_chars").cast("long").as("n_chars"))
-      .unionByName(planted)
+    val src = StatsPlantedRows.onto(Tables.documents(spark, dir)
+      .withColumn("n_chars", col("n_chars").cast("long")))
     val stacked = src.select(explode(array(StatCols.map(c =>
         struct(lit(c).as("cname"), col(c).cast("string").as("v"))): _*))
         .as("s"))
@@ -1114,8 +1110,9 @@ object Ext {
     * that max — a row is then late under delay D iff minutes_late > D,
     * giving every audited delay a distinct count.
     */
-  private[graft] val LatePlanted: Seq[(Long, Long, Int)] =
-    Seq((100000001L, 1L, 2), (100000002L, 2L, 8), (100000003L, 3L, 20),
+  private[graft] val LatePlanted: PlantedRows[(Long, Long, Int)] =
+    PlantedRows("event_id", "user_id", "late_min")(
+        (100000001L, 1L, 2), (100000002L, 2L, 8), (100000003L, 3L, 20),
         (100000004L, 4L, 90), (100000005L, 1L, 400))
 
   /** Watermark-delay audit — the batch replay that SIZES a streaming
@@ -1133,13 +1130,12 @@ object Ext {
     * rows. No corpus self-join, no driver state.
     */
   def watermarkAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val minuteUs = 60L * 1000000L
     val corpus = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("tsu"))
     val maxRow = corpus.agg(max(col("tsu")).as("corpus_max"))
-    val planted = LatePlanted.toDF("event_id", "user_id", "late_min")
+    val planted = LatePlanted.frame(spark)
       .crossJoin(broadcast(maxRow))
       .select(col("event_id"), col("user_id"),
         (col("corpus_max") - col("late_min") * minuteUs).as("tsu"))
@@ -1206,17 +1202,15 @@ object Ext {
 
   val oracles: Map[String, String] = Map(
     "q_watermark_audit" -> {
-      val planted = LatePlanted.map { case (id, u, m) => s"($id, $u, $m)" }
-        .mkString(", ")
       val delays = WatermarkDelaysMin.mkString(", ")
       s"""WITH corpus AS (SELECT event_id, user_id, epoch_us(ts) AS tsu
          |  FROM events),
          |arr AS (SELECT event_id, user_id, tsu FROM corpus
          |  UNION ALL
-         |  SELECT p.event_id, p.user_id,
-         |    (SELECT max(tsu) FROM corpus) - CAST(p.late_min AS BIGINT)
+         |  SELECT event_id, user_id,
+         |    (SELECT max(tsu) FROM corpus) - CAST(late_min AS BIGINT)
          |      * 60000000 AS tsu
-         |  FROM (VALUES $planted) p(event_id, user_id, late_min)),
+         |  FROM ${LatePlanted.valuesSql}),
          |b AS (SELECT *, event_id // $WatermarkBatch AS batch FROM arr),
          |wm AS (SELECT batch, max(bmax) OVER (ORDER BY batch
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS wbase
@@ -1396,23 +1390,13 @@ object Ext {
          |    AS kmv_est
          |FROM ex JOIN kth USING (source)""".stripMargin,
     "q_table_stats" -> {
-      val values = StatsPlantedRows.map { case (id, l, s, n) =>
-        def str(o: Option[String]) =
-          o.map(x => s"'$x'").getOrElse("CAST(NULL AS VARCHAR)")
-        def num(o: Option[Long]) =
-          o.map(_.toString).getOrElse("CAST(NULL AS BIGINT)")
-        s"($id, ${str(l)}, ${str(s)}, ${num(n)})"
-      }.mkString(", ")
       val unions = StatCols.map {
         case c @ ("doc_id" | "n_chars") =>
           s"SELECT '$c' AS cname, CAST($c AS VARCHAR) AS v FROM src"
         case c =>
           s"SELECT '$c' AS cname, $c AS v FROM src"
       }.mkString("\n  UNION ALL ")
-      s"""WITH src AS (SELECT doc_id, lang, source,
-         |    CAST(n_chars AS BIGINT) AS n_chars FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values)
-         |    v(doc_id, lang, source, n_chars)),
+      s"""WITH src AS (${StatsPlantedRows.ontoSql("documents")}),
          |st AS ($unions),
          |h AS (SELECT DISTINCT cname,
          |    (${Dedup.idUtf8Sql("v")} * 1103515245 + 12345)

@@ -138,11 +138,11 @@ object MlSuite {
     * classifier fit iterates the train frame — without the memo each query
     * re-runs the whole preparation. The post-selection frames are tiny
     * (|customers| rows × selected-feature vectors), so keeping them cached
-    * for the session costs ~nothing; [[SessionMemo]] evicts on session end
-    * and unpersists both frames.
+    * for the session costs ~nothing; each frame is a [[SessionMemo.cached]]
+    * entry, so eviction on session end unpersists both.
     */
   def prepared(spark: SparkSession, dir: String): PreparedMl =
-    SessionMemo.getOrComputeCleanup(spark, s"ml.prepare:$dir") {
+    SessionMemo.getOrCompute(spark, s"ml.prepare:$dir") {
       // the two StringIndexer fits, the OHE fit, the RFormula fit, and the
       // formula transform each traverse the labeled basetable — served
       // from the session-wide [[labeledCached]] memo (r21: the confusion
@@ -252,19 +252,19 @@ object MlSuite {
       // lineage shipping is NOT where ml_cross_validate's time goes
       // (see BASELINE.md "Round-15 ML attribution"), so the simpler
       // cache + count materialization stays.
-      def sel(df: DataFrame): DataFrame = slicer.transform(df)
-        .drop("features", "features_disc")
-        .withColumnRenamed("selectedFeatures", "features")
-        .cache()
-      val (trainS, testS) = (sel(train), sel(test))
+      def sel(df: DataFrame, part: String): DataFrame =
+        SessionMemo.cached(spark, s"ml.prepare:$dir:$part",
+            StorageLevel.MEMORY_AND_DISK) {
+          slicer.transform(df)
+            .drop("features", "features_disc")
+            .withColumnRenamed("selectedFeatures", "features")
+        }
+      val (trainS, testS) = (sel(train, "train"), sel(test, "test"))
       trainS.count(); testS.count()
       // labeled stays persisted — it is the session-wide memo's frame,
       // shared with the deployment confusion reads
       formed.unpersist()
       PreparedMl(trainS, testS, statistic, selIdx.length, nTotal)
-    } { p =>
-      scala.util.Try(p.train.unpersist()): Unit
-      scala.util.Try(p.test.unpersist()): Unit
     }
 
   /** M4–M6 frames only (the common call shape). */

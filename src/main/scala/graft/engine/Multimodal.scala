@@ -347,7 +347,7 @@ object Multimodal {
   private def mediaTableFull(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val planted =
-      (PpmPlanted.map { case (id, w, h) => (id, "image", ppmPayload(w, h)) }
+      (ppmBench.map { case (id, p) => (id, "image", p) }
         ++ PngPlanted.map { case (id, w, h) => (id, "image", pngPayload(w, h)) }
         ++ JpegPlanted.map { case (id, w, h) => (id, "image", jpegPayload(w, h)) }
         :+ ((MalformedJpegId, "image", malformedJpegPayload)))
@@ -594,8 +594,9 @@ object Multimodal {
     * [[PpmPlanted]] trio plays the eval suite) must be flagged before
     * training, and byte-level checks cannot do it (a re-encoded or
     * brightness-shifted copy of an eval image has entirely different
-    * bytes). Plan: one dHash pass over benchmark ∪ corpus, then
-    * [[Dedup.bandedCrossProbe]], which owns the plan: benchmark bands
+    * bytes). Plan: one dHash pass over the corpus and one over the
+    * benchmark rows alone, then [[Dedup.bandedCrossProbe]], which owns
+    * the plan: benchmark bands
     * BROADCAST (the eval suite is thousands of images, never
     * corpus-sized) against the corpus's band keys with no bucket cap,
     * exact hamming verify — pigeonhole recall is perfect at the
@@ -1190,7 +1191,10 @@ object Multimodal {
     * is common. `base` is the media source the planted rows join;
     * `planted` wraps a query's planted (id, payload) rows with the
     * modality's fixed rows; payloads whose prefix matches one of
-    * `magics` reach `hash`, which throws on malformed input.
+    * `magics` reach `hash`, which throws on malformed input. `bench`
+    * is the eval suite [[hashDecontaminate]] probes against: rows that
+    * also sit in the corpus source, hashed on their own for the bench
+    * side.
     */
   private final case class HashModality(
       mediaType: String,
@@ -1200,7 +1204,7 @@ object Multimodal {
       hash: Array[Byte] => Long,
       bands: Int, bandBits: Int, maxHamming: Int,
       hashCol: String,
-      benchIds: Seq[Long],
+      bench: () => Seq[(Long, Array[Byte])],
       dedupPayloads: () => Seq[(Long, Array[Byte])],
       leakPayloads: () => Seq[(Long, Array[Byte])])
 
@@ -1217,12 +1221,24 @@ object Multimodal {
     (id, wavPayloadF(1, 8000, n, withList = false, sc, ma, ab))
   }
 
+  /** Each modality's benchmark rows as (id, payload): the planted
+    * trio that plays the eval suite in its decontamination query.
+    */
+  private def ppmBench: Seq[(Long, Array[Byte])] =
+    PpmPlanted.map { case (id, w, h) => (id, ppmPayload(w, h)) }
+  private def wavBench: Seq[(Long, Array[Byte])] =
+    WavPlanted.map { case (id, ch, rate, n, lst) =>
+      (id, wavPayload(ch, rate, n, lst)) }
+  private def videoBench: Seq[(Long, Array[Byte])] =
+    VideoPlanted.map { case (id, w, h, n, fn, fd, x) =>
+      (id, y4mPayload(w, h, n, fn, fd, x)) }
+
   /** P6 + PNG dHash over [[mediaTableFull]]; lossy JPEG stays out. */
   private val ImageHash = HashModality("image", mediaTableFull, identity,
     Seq("P6".getBytes(US_ASCII),
       Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte)),
     bytes => if (bytes(0) == 'P') dhashPpm(bytes) else dhashImage(bytes),
-    DHashBands, DHashBandBits, DHashMaxHamming, "dhash", PpmPlanted.map(_._1),
+    DHashBands, DHashBandBits, DHashMaxHamming, "dhash", () => ppmBench,
     () => ImageDedupPlanted.map(imagePayload),
     () => ImageLeakPlanted.map(imagePayload))
 
@@ -1230,11 +1246,9 @@ object Multimodal {
     * the malformed WAV.
     */
   private val AudioHash = HashModality("audio", mediaTable,
-    extra => (WavPlanted.map { case (id, ch, rate, n, lst) =>
-        (id, wavPayload(ch, rate, n, lst)) } ++ extra)
-      :+ ((MalformedWavId, malformedWavPayload)),
+    extra => (wavBench ++ extra) :+ ((MalformedWavId, malformedWavPayload)),
     Seq("RIFF".getBytes(US_ASCII)), dhashWav,
-    AHashBands, AHashBandBits, AHashMaxHamming, "ahash", WavPlanted.map(_._1),
+    AHashBands, AHashBandBits, AHashMaxHamming, "ahash", () => wavBench,
     () => AudioDedupPlanted.map(audioPayload),
     () => AudioLeakPlanted.map(audioPayload))
 
@@ -1242,11 +1256,9 @@ object Multimodal {
     * the malformed stream.
     */
   private val VideoHash = HashModality("video", mediaTable,
-    extra => (VideoPlanted.map { case (id, w, h, n, fn, fd, x) =>
-        (id, y4mPayload(w, h, n, fn, fd, x)) } ++ extra)
-      :+ ((MalformedY4mId, malformedY4mPayload)),
+    extra => (videoBench ++ extra) :+ ((MalformedY4mId, malformedY4mPayload)),
     Seq("YUV4MPEG2".getBytes(US_ASCII)), dhashY4m,
-    AHashBands, AHashBandBits, AHashMaxHamming, "vhash", VideoPlanted.map(_._1),
+    AHashBands, AHashBandBits, AHashMaxHamming, "vhash", () => videoBench,
     () => VideoDedupPlanted.map {
       case (id, w, h, n, sc, ma, fa, ab, mm, altF, altA) =>
         (id, y4mPayloadF(w, h, n, 25, 1, extras = false, sc, ma, fa, ab, mm,
@@ -1264,8 +1276,17 @@ object Multimodal {
     import spark.implicits._
     val planted = m.planted(extra).map { case (id, p) => (id, m.mediaType, p) }
       .toDF("doc_id", "media_type", "payload")
+    hashSigs(spark, m, m.base(spark, dir).unionByName(planted))
+  }
+
+  /** (doc_id, sig) over `media`'s (doc_id, payload) rows: the
+    * magic filter and the partition-wise, quarantining hash.
+    */
+  private def hashSigs(spark: SparkSession, m: HashModality,
+      media: DataFrame): DataFrame = {
+    import spark.implicits._
     val hash = m.hash // the closure below must capture only the kernel
-    m.base(spark, dir).unionByName(planted)
+    media
       .filter(col("payload").isNotNull && m.magics.map(g =>
         substring(col("payload"), 1, g.length) === lit(g)).reduce(_ || _))
       .select(col("doc_id"), col("payload"))
@@ -1288,15 +1309,19 @@ object Multimodal {
         m.bands, m.bandBits, m.maxHamming)
       .withColumnRenamed("sig", m.hashCol)
 
-  /** The modality decontamination: [[sigTable]] over the dedup and leak
-    * plants, split at `m.benchIds` → [[Dedup.bandedCrossProbe]].
+  /** The modality decontamination → [[Dedup.bandedCrossProbe]]: the
+    * corpus side is [[sigTable]] over the dedup and leak plants without
+    * the bench ids; the bench side hashes `m.bench` alone, so the media
+    * table is scanned and decoded once.
     */
   private def hashDecontaminate(spark: SparkSession, dir: String,
       m: HashModality): DataFrame = {
-    val sigs = sigTable(spark, dir, m, m.dedupPayloads() ++ m.leakPayloads())
+    import spark.implicits._
+    val bench = m.bench()
     Dedup.bandedCrossProbe(
-      sigs.filter(!col("doc_id").isInCollection(m.benchIds)),
-      sigs.filter(col("doc_id").isInCollection(m.benchIds)),
+      sigTable(spark, dir, m, m.dedupPayloads() ++ m.leakPayloads())
+        .filter(!col("doc_id").isInCollection(bench.map(_._1))),
+      hashSigs(spark, m, bench.toDF("doc_id", "payload")),
       m.bands, m.bandBits, m.maxHamming)
   }
 

@@ -48,12 +48,12 @@ private[graft] object SessionMemo {
 
   /** [[getOrCompute]] plus an eviction cleanup, which
     * [[invalidate]]/[[evictSession]] run exactly once when the entry
-    * goes, for an entry that is neither one frame nor one dir (those go
-    * through [[cached]] and [[dir]]). Cleanups must be idempotent and
-    * safe on a stopping session (wrap Spark calls in Try —
-    * application-end eviction fires while the context shuts down).
+    * goes: the one path behind [[cached]] and [[dir]]. Cleanups must be
+    * idempotent and safe on a stopping session (wrap Spark calls in
+    * Try — application-end eviction fires while the context shuts
+    * down).
     */
-  def getOrComputeCleanup[T <: AnyRef](spark: SparkSession, key: String)
+  private def getOrComputeCleanup[T <: AnyRef](spark: SparkSession, key: String)
       (compute: => T)(cleanup: T => Unit): T = {
     if (!hooked.containsKey(spark)) {
       val l = new SparkListener {
@@ -77,6 +77,12 @@ private[graft] object SessionMemo {
     * eviction unpersists it. `MEMORY_AND_DISK` is what `.cache()` means;
     * the session-long token, signature and window tables keep
     * `MEMORY_AND_DISK_SER` to hold less heap.
+    *
+    * Known defect, left open: Spark's `CacheManager` keys its entries
+    * by plan, not by session, so the same frame memoized in two
+    * sessions on one SparkContext shares ONE cache entry, and either
+    * session's eviction uncaches it for the other, whose later
+    * consumers then recompute it.
     */
   def cached(spark: SparkSession, key: String, level: StorageLevel)
       (df: => DataFrame): DataFrame =

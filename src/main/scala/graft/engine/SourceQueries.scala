@@ -609,12 +609,13 @@ object SourceQueries {
     * (920001 twice — BOTH instances count as violations).
     */
   private[graft] val ContractPlantedRows
-      : Seq[(java.lang.Long, String, String, java.lang.Long)] = Seq(
-    (920001L, "dup id row one", "en", 14L),
-    (920001L, "dup id row two", "en", 14L),
-    (920002L, null, "en", 0L),
-    (920003L, "unknown lang row", "xx", 16L),
-    (920004L, "bad count row", "de", 999L))
+      : PlantedRows[(java.lang.Long, String, String, java.lang.Long)] =
+    PlantedRows("doc_id", "text", "lang", "n_chars")(
+      (920001L, "dup id row one", "en", 14L),
+      (920001L, "dup id row two", "en", 14L),
+      (920002L, null, "en", 0L),
+      (920003L, "unknown lang row", "xx", 16L),
+      (920004L, "bad count row", "de", 999L))
 
   /** Ingest data-contract gate — the declared-constraint validation a
     * pipeline runs BEFORE admitting a batch (the dbt-test /
@@ -630,12 +631,8 @@ object SourceQueries {
     * corpus size.
     */
   def dataContract(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val langList = ContractLangs
-    val src = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      .unionByName(ContractPlantedRows
-        .toDF("doc_id", "text", "lang", "n_chars"))
+    val src = ContractPlantedRows.onto(Tables.documents(spark, dir))
     val dupInstances = src.groupBy("doc_id")
       .agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(when(col("c") > 1, col("c"))), lit(0L))
@@ -752,13 +749,7 @@ object SourceQueries {
     */
   private val contractOracleSql: String = {
       val langs = ContractLangs.map(l => s"'$l'").mkString(", ")
-      val values = ContractPlantedRows.map { case (id, t, l, nc) =>
-        val tv = if (t == null) "CAST(NULL AS VARCHAR)" else s"'$t'"
-        s"($id, $tv, '$l', $nc)"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text, lang, n_chars FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values)
-         |    v(doc_id, text, lang, n_chars)),
+      s"""WITH src AS (${ContractPlantedRows.ontoSql("documents")}),
          |d AS (SELECT CAST(coalesce(sum(CASE WHEN c > 1 THEN c END), 0)
          |    AS BIGINT) AS v_dup
          |  FROM (SELECT doc_id, count(*) AS c FROM src GROUP BY doc_id)),

@@ -1,8 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{LongType, StructType}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType,
+  StructType}
 
 /** Parquet loaders for the driver fixtures (TESTDATA.md / FIXTURES.md §B).
   *
@@ -110,4 +113,82 @@ object Tables {
     else events
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+}
+
+/** A planted row set: a few literal rows unioned into a fixture table to
+  * pin the edge cases the fixture lacks (nulls, quotes, newlines,
+  * non-ASCII text, duplicate ids). The contract:
+  *
+  *  - ids sit above the fixture's id range (documents and events stop
+  *    below 900000 up to sf0.1), so a planted row never collides with a
+  *    fixture row unless it is meant to;
+  *  - both engines read this one value: the Spark side gets [[frame]] or
+  *    [[onto]], the DuckDB oracle gets [[valuesSql]] or [[ontoSql]], and
+  *    the column list is stated only here;
+  *  - [[valuesSql]] is the only DuckDB literal renderer for planted rows:
+  *    each cell is rendered by the type the row type's encoder gives its
+  *    column — a string quoted with `'` doubled and each newline spliced
+  *    as `' || chr(10) || '`, a number bare, a null or `None`
+  *    `CAST(NULL AS <type>)`.
+  *
+  * The schema comes from the encoder, so building the value needs no
+  * session, and [[frame]] is the same local relation `rows.toDF(cols)`
+  * builds.
+  */
+final class PlantedRows[T <: Product: TypeTag](val cols: Seq[String],
+    val rows: Seq[T]) {
+  private val encoder: Encoder[T] = Encoders.product[T]
+
+  /** The column types, from the row type's encoder. */
+  val schema: StructType = {
+    val fields = encoder.schema.fields
+    require(fields.length == cols.length,
+      s"${cols.length} column names for a ${fields.length}-column row type")
+    // fail fast on a column type the literal renderer lacks
+    fields.foreach(f => PlantedRows.sqlType(f.dataType))
+    StructType(fields.zip(cols).map { case (f, c) => f.copy(name = c) })
+  }
+
+  /** The rows as a local relation with the planted column names. */
+  def frame(spark: SparkSession): DataFrame =
+    spark.createDataset(rows)(encoder).toDF(cols: _*)
+
+  /** `base`'s planted columns with the rows unioned in by name. */
+  def onto(base: DataFrame): DataFrame =
+    base.select(cols.map(col): _*).unionByName(frame(base.sparkSession))
+
+  /** The rows as a DuckDB relation: `(VALUES …) v(<cols>)`. */
+  def valuesSql: String =
+    rows.map(_.productIterator.zip(schema.iterator)
+        .map { case (v, f) => PlantedRows.literal(v, f.dataType) }
+        .mkString("(", ", ", ")"))
+      .mkString("(VALUES ", ", ", s") v(${cols.mkString(", ")})")
+
+  /** The DuckDB twin of [[onto]]: `SELECT <cols> FROM <from>` with the
+    * rows unioned in; `from` is a table, a CTE or a parenthesized query.
+    */
+  def ontoSql(from: String): String =
+    s"SELECT ${cols.mkString(", ")} FROM $from\n  UNION ALL SELECT * FROM $valuesSql"
+}
+
+object PlantedRows {
+  def apply[T <: Product: TypeTag](cols: String*)(rows: T*): PlantedRows[T] =
+    new PlantedRows(cols, rows)
+
+  private def sqlType(t: DataType): String = t match {
+    case StringType => "VARCHAR"
+    case LongType => "BIGINT"
+    case IntegerType => "INTEGER"
+    case other => throw new IllegalArgumentException(
+      s"no DuckDB literal for a planted $other column")
+  }
+
+  /** One cell as a DuckDB literal of its column type `t`. */
+  private[graft] def literal(v: Any, t: DataType): String = v match {
+    case null | None => s"CAST(NULL AS ${sqlType(t)})"
+    case Some(x) => literal(x, t)
+    case s: String =>
+      s"'${s.replace("'", "''").replace("\n", "' || chr(10) || '")}'"
+    case n => n.toString
+  }
 }

@@ -112,15 +112,6 @@ object TextOps {
   def segmentSql(e: String): String =
     s"regexp_extract_all($e, '$SegPattern')"
 
-  /** A string as a DuckDB literal, the one escaper every oracle's
-    * planted rows go through: null → `CAST(NULL AS VARCHAR)`, `'` →
-    * `''`, newline → `' || chr(10) || '`. Quotes are escaped FIRST, so
-    * the escaper never doubles the quotes the newline splice inserts.
-    */
-  private[graft] def sqlLit(t: String): String =
-    if (t == null) "CAST(NULL AS VARCHAR)"
-    else s"'${t.replace("'", "''").replace("\n", "' || chr(10) || '")}'"
-
   /** Quality scoring: token counts, per-token length, stopword ratio,
     * lexical diversity, and a composite [0,1] score — the heuristics used
     * to filter web corpora before LLM training. All ratios are small-int
@@ -211,13 +202,14 @@ object TextOps {
     * documented crudeness of the per-codepoint fallback), and a Latin
     * control row that must tokenize identically to whitespace split.
     */
-  private[graft] val SegPlantedRows: Seq[(Long, String)] = Seq(
-    (992001L, "大规模语料上训练模型"),
-    (992002L, "GPU集群训练 batch 大小 128"),
-    (992003L, "データでモデルを学習する"),
-    (992004L, "대규모 언어 모델"),
-    (992005L, "ภาษาไทยไม่มีช่องว่าง"),
-    (992006L, "plain latin text stays whitespace split"))
+  private[graft] val SegPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (992001L, "大规模语料上训练模型"),
+      (992002L, "GPU集群训练 batch 大小 128"),
+      (992003L, "データでモデルを学習する"),
+      (992004L, "대규모 언어 모델"),
+      (992005L, "ภาษาไทยไม่มีช่องว่าง"),
+      (992006L, "plain latin text stays whitespace split"))
 
   /** Script-aware segmentation audit — the proof query for
     * [[segmentTokens]]: whitespace vs segmented token counts,
@@ -228,9 +220,7 @@ object TextOps {
     * one byte fold per row.
     */
   def segmentCjk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(SegPlantedRows.toDF("doc_id", "text"))
+    val src = SegPlantedRows.onto(Tables.documents(spark, dir))
     val seg = segmentTokens(col("text"))
     def classCount(cls: String): Column =
       size(regexp_extract_all(col("text"), lit(s"[$cls]"), lit(0)))
@@ -274,10 +264,9 @@ object TextOps {
     * language reports null instead of dividing.
     */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val src = Tables.documents(spark, dir).select(
         col("doc_id"), col("text"), col("lang"))
-      .unionByName(SegPlantedRows.toDF("doc_id", "text")
+      .unionByName(SegPlantedRows.frame(spark)
         .withColumn("lang", lit("xx_planted")))
     val perDoc = src.select(
       col("lang"),
@@ -661,15 +650,16 @@ object TextOps {
     * carries combining acute/diaeresis marks that NFC must fold into
     * precomposed code points; 920002 is already NFC; 920003 is ASCII.
     */
-  private[graft] val NormPlantedRows: Seq[(Long, String)] = Seq(
-    // 920001 is DECOMPOSED on purpose: combining acute (U+0301),
-    // diaeresis (U+0308), grave (U+0300) written as escapes so no
-    // editor/tool silently precomposes them
-    (920001L, "cafe\u0301 nai\u0308ve re\u0301sume\u0301" +
-      " zu\u0308rich de\u0301ja\u0300 vu"),
-    (920002L, "caf\u00e9 na\u00efve r\u00e9sum\u00e9" +
-      " z\u00fcrich d\u00e9j\u00e0 vu"),
-    (920003L, "plain ascii stays byte identical"))
+  private[graft] val NormPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      // 920001 is DECOMPOSED on purpose: combining acute (U+0301),
+      // diaeresis (U+0308), grave (U+0300) written as escapes so no
+      // editor/tool silently precomposes them
+      (920001L, "cafe\u0301 nai\u0308ve re\u0301sume\u0301" +
+        " zu\u0308rich de\u0301ja\u0300 vu"),
+      (920002L, "caf\u00e9 na\u00efve r\u00e9sum\u00e9" +
+        " z\u00fcrich d\u00e9j\u00e0 vu"),
+      (920003L, "plain ascii stays byte identical"))
 
   /** Unicode NFC normalization — the text-hygiene pass a multilingual
     * corpus runs before ANY hashing: the same visible string in composed
@@ -688,11 +678,8 @@ object TextOps {
     * `length` — not UTF-16 units).
     */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val planted = NormPlantedRows.toDF("doc_id", "text")
     val norm = graft.functions.StringFunctions.nfc_normalize(col("text"))
-    Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(planted)
+    NormPlantedRows.onto(Tables.documents(spark, dir))
       .select(
         col("doc_id"),
         norm.as("norm_text"),
@@ -711,22 +698,23 @@ object TextOps {
     * PropertySpec: decoded `&lt;` IS legitimate output text, the law holds
     * because no matching `>` follows).
     */
-  private[graft] val HtmlPlantedRows: Seq[(Long, String)] = Seq(
-    (930001L, "<!DOCTYPE html><html><head><title>Widget specs</title>" +
-      "<style type=\"text/css\">body { color: red; }</style>" +
-      "<script>var x = 1 < 2 && y > 0;</script></head>" +
-      "<body><h1>Widget&nbsp;specs</h1>" +
-      "<p class=\"intro\">Tom &amp; Jerry &lt;3 data " +
-      "&#39;quoted&#39; &quot;double&quot;</p>" +
-      "<!-- hidden comment --><ul><li>alpha</li><li>beta</li></ul>" +
-      "</body></html>"),
-    (930002L, "<SCRIPT SRC=\"app.js\">var hidden = true;</SCRIPT>" +
-      "<P>Upper case tags</P><STYLE>h1 { margin: 0 }</STYLE> done"),
-    (930003L, "fish &amp; chips cost &lt;5 and &apos;more&apos;"),
-    (930004L, "no markup at all here"),
-    (930005L, "<div>\n  line one\n  <br/>\n  line two\n</div>"),
-    (930006L, "double encoded: &amp;lt;tag&amp;gt; stays text"),
-    (930007L, null))
+  private[graft] val HtmlPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (930001L, "<!DOCTYPE html><html><head><title>Widget specs</title>" +
+        "<style type=\"text/css\">body { color: red; }</style>" +
+        "<script>var x = 1 < 2 && y > 0;</script></head>" +
+        "<body><h1>Widget&nbsp;specs</h1>" +
+        "<p class=\"intro\">Tom &amp; Jerry &lt;3 data " +
+        "&#39;quoted&#39; &quot;double&quot;</p>" +
+        "<!-- hidden comment --><ul><li>alpha</li><li>beta</li></ul>" +
+        "</body></html>"),
+      (930002L, "<SCRIPT SRC=\"app.js\">var hidden = true;</SCRIPT>" +
+        "<P>Upper case tags</P><STYLE>h1 { margin: 0 }</STYLE> done"),
+      (930003L, "fish &amp; chips cost &lt;5 and &apos;more&apos;"),
+      (930004L, "no markup at all here"),
+      (930005L, "<div>\n  line one\n  <br/>\n  line two\n</div>"),
+      (930006L, "double encoded: &amp;lt;tag&amp;gt; stays text"),
+      (930007L, null))
 
   /** HTML entity decode table, applied AFTER tag stripping (decoding
     * first would turn entity-encoded text into strippable markup — the
@@ -779,12 +767,9 @@ object TextOps {
     * projection, no UDFs, no shuffles, no driver round-trips.
     */
   def htmlExtract(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val planted = HtmlPlantedRows.toDF("doc_id", "text")
     val nTags = size(regexp_extract_all(col("text"),
       lit(HtmlTagPattern), lit(0)))
-    Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(planted)
+    HtmlPlantedRows.onto(Tables.documents(spark, dir))
       .select(
         col("doc_id"),
         htmlToText(col("text")).as("clean_text"),
@@ -802,12 +787,13 @@ object TextOps {
     * noisy-host link (`HTTP://WWW.Src1…:80`) that must land in the
     * clean `src1.example.com` group after host normalization.
     */
-  private[graft] val LinkPlantedRows: Seq[(Long, String)] = Seq(
-    (945001L, "<p><a href=\"https://hub.example.net/\">hub</a> twice " +
-      "<a href=\"https://hub.example.net/\">hub</a></p>"),
-    (945002L, "<p>no links at all</p>"),
-    (945003L, null),
-    (945004L, "<a href=\"HTTP://WWW.Src1.Example.COM:80/x\">noisy</a>"))
+  private[graft] val LinkPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "page")(
+      (945001L, "<p><a href=\"https://hub.example.net/\">hub</a> twice " +
+        "<a href=\"https://hub.example.net/\">hub</a></p>"),
+      (945002L, "<p>no links at all</p>"),
+      (945003L, null),
+      (945004L, "<a href=\"HTTP://WWW.Src1.Example.COM:80/x\">noisy</a>"))
 
   /** Outbound-link extraction + host-level link graph — the web-graph
     * signal every crawl-curation stack computes next to [[htmlExtract]]
@@ -830,7 +816,6 @@ object TextOps {
     * smaller than the edge stream it collapses.
     */
   def linkGraph(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val synth = Tables.documents(spark, dir).select(col("doc_id"),
       concat(
         lit("<html><body><a href=\"https://src"), (col("doc_id") + 1) % 20,
@@ -842,7 +827,7 @@ object TextOps {
           lit(" <a href=\"http://hub.example.net/\">h</a>"))
           .otherwise(lit("")),
         lit("</body></html>")).as("page"))
-    val all = synth.unionByName(LinkPlantedRows.toDF("doc_id", "page"))
+    val all = LinkPlantedRows.onto(synth)
     val hrefs = regexp_extract_all(col("page"),
       lit("href=\"([^\"]*)\""), lit(1))
     val host = regexp_replace(
@@ -890,13 +875,14 @@ object TextOps {
     * link — counted as a link, excluded from text stats), and a
     * contested host whose top anchor needs the deterministic tie-break.
     */
-  private[graft] val AnchorPlantedRows: Seq[(Long, String)] = Seq(
-    (996001L, "<a href=\"https://t1.example.org/\">Data Guide</a>" +
-      "<a href=\"https://t1.example.org/x\">  data GUIDE </a>"),
-    (996002L, "<a href=\"https://t1.example.org/y\">data guide</a>" +
-      "<a href=\"https://t2.example.org/\"></a>"),
-    (996003L, "<a href=\"https://t2.example.org/a\">beta ref</a>" +
-      "<a href=\"https://t2.example.org/b\">alpha ref</a>"))
+  private[graft] val AnchorPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "page")(
+      (996001L, "<a href=\"https://t1.example.org/\">Data Guide</a>" +
+        "<a href=\"https://t1.example.org/x\">  data GUIDE </a>"),
+      (996002L, "<a href=\"https://t1.example.org/y\">data guide</a>" +
+        "<a href=\"https://t2.example.org/\"></a>"),
+      (996003L, "<a href=\"https://t2.example.org/a\">beta ref</a>" +
+        "<a href=\"https://t2.example.org/b\">alpha ref</a>"))
 
   /** (dst_host, atext, n): link counts per target host and normalized
     * anchor text over the corpus plus [[AnchorPlantedRows]] — the input
@@ -907,7 +893,6 @@ object TextOps {
       dir: String): DataFrame =
     SessionMemo.cached(spark, s"textops.anchorCounts:$dir",
         StorageLevel.MEMORY_AND_DISK) {
-      import spark.implicits._
       val synth = Tables.documents(spark, dir).select(col("doc_id"),
         concat(
           lit("<a href=\"https://src"), (col("doc_id") + 1) % 20,
@@ -915,7 +900,7 @@ object TextOps {
           lit("</a><a href=\"https://src"), (col("doc_id") * 3) % 20,
           lit(".example.com/p\">REF "), col("doc_id") % 3,
           lit("</a>")).as("page"))
-      val all = synth.unionByName(AnchorPlantedRows.toDF("doc_id", "page"))
+      val all = AnchorPlantedRows.onto(synth)
       val matches = regexp_extract_all(col("page"),
         lit("<a href=\"[^\"]*\"[^>]*>[^<]*</a>"), lit(0))
       val href = regexp_extract(col("m"), "href=\"([^\"]*)\"", 1)
@@ -974,17 +959,18 @@ object TextOps {
     * single-line docs: only texts repeated verbatim in ≥3 docs (the
     * planted exact-dup groups) cross the document-frequency floor there.
     */
-  private[graft] val BoilerplatePlantedRows: Seq[(Long, String)] = Seq(
-    (950001L, "subscribe to our newsletter\ncookie policy applies\n" +
-      "unique fact one about storage engines"),
-    (950002L, "subscribe to our newsletter\n" +
-      "unique fact two about shuffle hashing\ncookie policy applies"),
-    (950003L, "cookie policy applies\nsubscribe to our newsletter\n" +
-      "unique fact three about join orders"),
-    (950004L, "subscribe to our newsletter\ncookie policy applies"),
-    (950005L, "  subscribe to our newsletter  \n" +
-      "unique fact four with padded boilerplate"),
-    (950006L, null))
+  private[graft] val BoilerplatePlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (950001L, "subscribe to our newsletter\ncookie policy applies\n" +
+        "unique fact one about storage engines"),
+      (950002L, "subscribe to our newsletter\n" +
+        "unique fact two about shuffle hashing\ncookie policy applies"),
+      (950003L, "cookie policy applies\nsubscribe to our newsletter\n" +
+        "unique fact three about join orders"),
+      (950004L, "subscribe to our newsletter\ncookie policy applies"),
+      (950005L, "  subscribe to our newsletter  \n" +
+        "unique fact four with padded boilerplate"),
+      (950006L, null))
 
   /** A line is boilerplate when its trimmed form appears in at least
     * this many distinct documents (the C4-style document-frequency
@@ -997,12 +983,13 @@ object TextOps {
     * whose FIRST original spelling must be the survivor, a single-line
     * doc, and an empty doc.
     */
-  private[graft] val LineCollapsePlantedRows: Seq[(Long, String)] = Seq(
-    (994001L, "alpha line\nalpha line\nalpha line\nbeta"),
-    (994002L, "xrep\nyother\nxrep"),
-    (994003L, "pad\n  pad \npad\ntail"),
-    (994004L, "single"),
-    (994005L, ""))
+  private[graft] val LineCollapsePlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (994001L, "alpha line\nalpha line\nalpha line\nbeta"),
+      (994002L, "xrep\nyother\nxrep"),
+      (994003L, "pad\n  pad \npad\ntail"),
+      (994004L, "single"),
+      (994005L, ""))
 
   /** Intra-document consecutive-duplicate-line collapse — the
     * repetition cleaner (C4/RefinedWeb-style) that runs BEFORE
@@ -1017,9 +1004,7 @@ object TextOps {
     * the reconstructed content like [[graft.engine.Dedup.substringScrub]].
     */
   def lineCollapse(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(LineCollapsePlantedRows.toDF("doc_id", "text"))
+    val src = LineCollapsePlantedRows.onto(Tables.documents(spark, dir))
     val kept = filter(col("ls"), (l, i) =>
       (i === lit(0)) ||
         (trim(l) =!= trim(element_at(col("ls"), greatest(i, lit(1))))))
@@ -1054,11 +1039,8 @@ object TextOps {
     * shuffle once it outgrows the threshold. Map-side partial
     * aggregation carries the df count; nothing collects.
     */
-  def boilerplateLines(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    boilerplateOver(Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(BoilerplatePlantedRows.toDF("doc_id", "text")))
-  }
+  def boilerplateLines(spark: SparkSession, dir: String): DataFrame =
+    boilerplateOver(BoilerplatePlantedRows.onto(Tables.documents(spark, dir)))
 
   /** [[boilerplateLines]] over an arbitrary (doc_id, text) corpus —
     * the composable core (PropertySpec drives generated corpora through
@@ -1279,19 +1261,20 @@ object TextOps {
     * one rule is the whole-chain proof that the rules now see real CJK
     * token structure.
     */
-  private[graft] val QualityPlantedRows: Seq[(Long, String)] = Seq(
-    (990001L, "the value data"),
-    (990002L, "the a " + (1 to 199).map(i => f"w$i%03d").mkString(" ")),
-    (990003L, "the a " + Seq.fill(12)("alpha beta").mkString(" ")),
-    (990004L, "the a zz qq ww pp"),
-    (990005L, "the a alpha beta gamma delta"),
-    (990006L, null),
-    (990007L, "alpha beta gamma delta epsilon"),
-    // CJK rows (content chosen against CjkStopwords 的/了/是/在):
-    (990008L, "我的数据是在这里的"), // 9 Han tokens, 4 stop instances → all-pass
-    (990009L, "的了是在"), // 4 tokens < floor → too_short ONLY
-    (990010L, "的的的的的的的的的的"), // 1 distinct bigram of 9 → repetitive ONLY
-    (990011L, "的 是 qq zz 在 的 pp")) // Latin words mean len 2 → bad_word_len ONLY
+  private[graft] val QualityPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (990001L, "the value data"),
+      (990002L, "the a " + (1 to 199).map(i => f"w$i%03d").mkString(" ")),
+      (990003L, "the a " + Seq.fill(12)("alpha beta").mkString(" ")),
+      (990004L, "the a zz qq ww pp"),
+      (990005L, "the a alpha beta gamma delta"),
+      (990006L, null),
+      (990007L, "alpha beta gamma delta epsilon"),
+      // CJK rows (content chosen against CjkStopwords 的/了/是/在):
+      (990008L, "我的数据是在这里的"), // 9 Han tokens, 4 stop instances → all-pass
+      (990009L, "的了是在"), // 4 tokens < floor → too_short ONLY
+      (990010L, "的的的的的的的的的的"), // 1 distinct bigram of 9 → repetitive ONLY
+      (990011L, "的 是 qq zz 在 的 pp")) // Latin words mean len 2 → bad_word_len ONLY
 
   /** Quality-rule floors/caps (the Gopher/FineWeb-style heuristic
     * bundle, expressed in exact integers). */
@@ -1330,13 +1313,14 @@ object TextOps {
     * exactly threshold−1 instances (must NOT flag), a term embedded in
     * a larger token (must not count), and a clean control.
     */
-  private[graft] val ContentPlantedRows: Seq[(Long, String)] = Seq(
-    (995001L, "explicit content explicit banner nsfw page"),
-    (995002L, "weapon report and assault case and gore detail"),
-    (995003L, "casino night jackpot draw betting pool casino"),
-    (995004L, "casino mentioned once in passing"),
-    (995005L, "nonexplicit words like weaponry stay uncounted"),
-    (995006L, "plain clean control document"))
+  private[graft] val ContentPlantedRows: PlantedRows[(Long, String)] =
+    PlantedRows("doc_id", "text")(
+      (995001L, "explicit content explicit banner nsfw page"),
+      (995002L, "weapon report and assault case and gore detail"),
+      (995003L, "casino night jackpot draw betting pool casino"),
+      (995004L, "casino mentioned once in passing"),
+      (995005L, "nonexplicit words like weaponry stay uncounted"),
+      (995006L, "plain clean control document"))
 
   /** Content-taxonomy safety flags — the TOPICAL filter beside the
     * STATISTICAL [[qualityRules]]: per document, exact token-level hit
@@ -1347,9 +1331,7 @@ object TextOps {
     * broadcast set lookup, same plan class).
     */
   def contentFlags(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(ContentPlantedRows.toDF("doc_id", "text"))
+    val src = ContentPlantedRows.onto(Tables.documents(spark, dir))
     // one native scan counts every category together
     // ([[graft.functions.TokenSetStats]]); the composed form
     // re-tokenized the row once per count and once per flag column
@@ -1389,9 +1371,7 @@ object TextOps {
     * passing vacuously when a document has no word runs.
     */
   def qualityRules(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(QualityPlantedRows.toDF("doc_id", "text"))
+    val src = QualityPlantedRows.onto(Tables.documents(spark, dir))
       // one native scan per row ([[graft.functions.QualityStats]], the
       // same struct the feature/scorer chain rides); the composed form
       // re-tokenized the row once per rule column. The null planted row
@@ -1655,11 +1635,8 @@ object TextOps {
   /** Shared link-synthesis CTE chain (pg -> l -> h) behind the
     * q_link_graph and q_degree_dist oracles.
     */
-  private def linkGraphCtes: String = {
-    val values = LinkPlantedRows.map { case (id, p) =>
-      if (p == null) s"($id, CAST(NULL AS VARCHAR))" else s"($id, '$p')"
-    }.mkString(", ")
-    s"""pg AS (SELECT doc_id,
+  private def linkGraphCtes: String =
+    s"""syn AS (SELECT doc_id,
        |    '<html><body><a href="https://src' || ((doc_id + 1) % 20) ||
        |    '.example.com/doc/' || (doc_id % 7) ||
        |    '">r</a> <a href="HTTPS://WWW.Src' || ((doc_id * 3) % 20) ||
@@ -1668,15 +1645,14 @@ object TextOps {
        |        ' <a href="http://hub.example.net/">h</a>'
        |        ELSE '' END) ||
        |    '</body></html>' AS page
-       |  FROM documents
-       |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, page)),
+       |  FROM documents),
+       |pg AS (${LinkPlantedRows.ontoSql("syn")}),
        |l AS (SELECT doc_id,
        |    unnest(regexp_extract_all(page, 'href="([^"]*)"', 1))
        |      AS link FROM pg),
        |h AS (SELECT doc_id, regexp_replace(
        |    lower(regexp_extract(link, '://([^/?#:]*)', 1)),
        |    '^www\\.', '') AS dst_host FROM l)""".stripMargin
-  }
 
   /** Shared feature/margin CTE chain (s→x→y→f→g) behind the
     * q_quality_score and q_quality_calibration oracles — g carries
@@ -1740,15 +1716,11 @@ object TextOps {
          |FROM pr JOIN cms ON pr.i = cms.i AND pr.bucket = cms.bucket
          |GROUP BY pr.term, pr.n_exact""".stripMargin,
     "q_quality_rules" -> {
-      val values = QualityPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
       val sl = (Stopwords ++ CjkStopwords).map(s => s"'$s'").mkString(", ")
       val flags = Seq("too_short", "too_long", "low_stopword",
         "bad_word_len", "repetitive")
       val nf = flags.map(f => s"CAST($f AS INTEGER)").mkString(" + ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${QualityPlantedRows.ontoSql("documents")}),
          |s AS (SELECT doc_id, text, ${segmentSql("text")} AS t
          |  FROM src),
          |x AS (SELECT doc_id, text, len(t) AS n_tok,
@@ -1845,12 +1817,8 @@ object TextOps {
          |  CAST(sum(CASE WHEN dec = decile THEN vn ELSE 0 END) AS BIGINT)
          |    AS vocab_new
          |FROM ex GROUP BY decile""".stripMargin,
-    "q_boilerplate_lines" -> {
-      val values = BoilerplatePlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+    "q_boilerplate_lines" ->
+      s"""WITH src AS (${BoilerplatePlantedRows.ontoSql("documents")}),
          |l AS (SELECT doc_id,
          |    unnest(string_split(text, chr(10))) AS line,
          |    generate_subscripts(string_split(text, chr(10)), 1) AS pos
@@ -1872,12 +1840,8 @@ object TextOps {
          |  CASE WHEN s.text IS NULL THEN NULL
          |    ELSE CAST(len(string_split(s.text, chr(10)))
          |      - coalesce(r.n_kept, 0) AS BIGINT) END AS n_removed
-         |FROM src s LEFT JOIN r ON s.doc_id = r.doc_id""".stripMargin
-    },
+         |FROM src s LEFT JOIN r ON s.doc_id = r.doc_id""".stripMargin,
     "q_html_extract" -> {
-      val values = HtmlPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
       // identical pattern constants as the Spark side; RE2 needs the 'g'
       // option where Java regexp_replace is global by default, and
       // DuckDB's plain replace() mirrors Spark's literal regexp_replace
@@ -1888,8 +1852,7 @@ object TextOps {
       val decoded = HtmlEntities.foldLeft(stripped) { case (acc, (ent, ch)) =>
         s"replace($acc, '$ent', '${ch.replace("'", "''")}')"
       }
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${HtmlPlantedRows.ontoSql("documents")}),
          |c AS (SELECT doc_id, text,
          |  trim(regexp_replace($decoded, '\\s+', ' ', 'g')) AS clean_text
          |  FROM src)
@@ -1901,17 +1864,12 @@ object TextOps {
          |    AS had_markup
          |FROM c""".stripMargin
     },
-    "q_text_normalize" -> {
-      val values = NormPlantedRows.map { case (id, t) =>
-        s"($id, '${t.replace("'", "''")}')"
-      }.mkString(", ")
+    "q_text_normalize" ->
       s"""SELECT doc_id, nfc_normalize(text) AS norm_text,
          |  CAST(CASE WHEN nfc_normalize(text) <> text THEN 1 ELSE 0 END
          |    AS INTEGER) AS changed,
          |  CAST(length(nfc_normalize(text)) AS BIGINT) AS n_cp
-         |FROM (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text))""".stripMargin
-    },
+         |FROM (${NormPlantedRows.ontoSql("documents")})""".stripMargin,
     "q_array_stats" ->
       s"""SELECT doc_id,
         |  CAST(len(${segmentSql("text")}) AS BIGINT) AS n_words,
@@ -1965,12 +1923,8 @@ object TextOps {
          |  CAST(n_rules_keep * 1000000 // n_docs AS BIGINT)
          |    AS rule_keep_ppm
          |FROM b""".stripMargin,
-    "q_segment_cjk" -> {
-      val values = SegPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text))
+    "q_segment_cjk" ->
+      s"""WITH src AS (${SegPlantedRows.ontoSql("documents")})
          |SELECT doc_id,
          |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
          |  CAST(len(${segmentSql("text")}) AS BIGINT) AS seg_tokens,
@@ -1984,14 +1938,11 @@ object TextOps {
          |    AS BIGINT) AS n_thai,
          |  ${Dedup.idUtf8Sql(
                s"array_to_string(${segmentSql("text")}, ' ')")} AS seg_fp
-         |FROM src""".stripMargin
-    },
-    "q_tokenizer_fertility" -> {
-      val values = SegPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)}, 'xx_planted')"
-      }.mkString(", ")
+         |FROM src""".stripMargin,
+    "q_tokenizer_fertility" ->
       s"""WITH src AS (SELECT doc_id, text, lang FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text, lang)),
+         |  UNION ALL SELECT *, 'xx_planted' AS lang
+         |    FROM ${SegPlantedRows.valuesSql}),
          |per AS (SELECT lang,
          |  CAST(strlen(text) AS BIGINT) AS nb,
          |  CAST(length(text) AS BIGINT) AS nc,
@@ -2012,12 +1963,8 @@ object TextOps {
          |  CASE WHEN sum(ns) > 0
          |    THEN round(CAST(sum(nc) AS DOUBLE) / sum(ns), 6) END
          |    AS chars_per_token
-         |FROM per GROUP BY lang""".stripMargin
-    },
+         |FROM per GROUP BY lang""".stripMargin,
     "q_content_flags" -> {
-      val values = ContentPlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
       val catCols = ContentTaxonomy.map { case (cat, words) =>
         val lst = words.map(w => s"'$w'").mkString(", ")
         s"""CAST(len(list_filter(${segmentSql("text")},
@@ -2029,8 +1976,7 @@ object TextOps {
         s"n_$c >= $ContentFlagMin AS flag_$c").mkString(", ")
       val anyFlag = cats.map(c => s"n_$c >= $ContentFlagMin")
         .mkString(" OR ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH src AS (${ContentPlantedRows.ontoSql("documents")}),
          |h AS (SELECT doc_id,
          |  $catCols
          |FROM src)
@@ -2040,12 +1986,8 @@ object TextOps {
          |  $anyFlag AS flagged
          |FROM h""".stripMargin
     },
-    "q_line_collapse" -> {
-      val values = LineCollapsePlantedRows.map { case (id, t) =>
-        s"($id, ${sqlLit(t)})"
-      }.mkString(", ")
-      s"""WITH src AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+    "q_line_collapse" ->
+      s"""WITH src AS (${LineCollapsePlantedRows.ontoSql("documents")}),
          |ln AS (SELECT doc_id, string_split(text, chr(10)) AS ls
          |  FROM src),
          |pos AS (SELECT doc_id, i, ls[i] AS line FROM ln,
@@ -2061,8 +2003,7 @@ object TextOps {
          |  CAST(len(ls) - COALESCE(n_kept, 0) AS BIGINT) AS n_collapsed,
          |  COALESCE(clean_text, '') AS clean_text,
          |  ${Dedup.idUtf8Sql("COALESCE(clean_text, '')")} AS clean_fp
-         |FROM ln LEFT JOIN reb ON ln.doc_id = reb.doc_id""".stripMargin
-    },
+         |FROM ln LEFT JOIN reb ON ln.doc_id = reb.doc_id""".stripMargin,
     "q_doc_fingerprint" ->
       s"""SELECT doc_id, ${portableFpSql("text", 31, 1000000007L)} AS fingerprint, CAST(len(text) AS BIGINT) AS len_chars FROM documents""",
     "q_salient_terms" ->
@@ -2117,17 +2058,14 @@ object TextOps {
         |    WHEN rn * 3 <= n_lang * 2 THEN 'middle'
         |    ELSE 'tail' END AS bucket
         |FROM r""".stripMargin,
-    "q_anchor_text" -> {
-      val values = AnchorPlantedRows.map { case (id, p) =>
-        s"($id, '${p.replace("'", "''")}')"
-      }.mkString(", ")
-      s"""WITH pg AS (SELECT doc_id,
+    "q_anchor_text" ->
+      s"""WITH syn AS (SELECT doc_id,
          |    '<a href="https://src' || ((doc_id + 1) % 20)
          |    || '.example.com/">guide ' || (doc_id % 4)
          |    || '</a><a href="https://src' || ((doc_id * 3) % 20)
          |    || '.example.com/p">REF ' || (doc_id % 3) || '</a>' AS page
-         |  FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, page)),
+         |  FROM documents),
+         |pg AS (${AnchorPlantedRows.ontoSql("syn")}),
          |m AS (SELECT unnest(regexp_extract_all(page,
          |    '<a href="[^"]*"[^>]*>[^<]*</a>')) AS m FROM pg),
          |lab AS (SELECT regexp_replace(lower(regexp_extract(
@@ -2150,8 +2088,7 @@ object TextOps {
          |  any_value(top_anchor) AS top_anchor,
          |  any_value(top_anchor_n) AS top_anchor_n
          |FROM pt LEFT JOIN top USING (dst_host)
-         |GROUP BY pt.dst_host""".stripMargin
-    },
+         |GROUP BY pt.dst_host""".stripMargin,
     "q_link_graph" ->
       s"""WITH $linkGraphCtes
          |SELECT dst_host, CAST(count(*) AS BIGINT) AS n_links,

@@ -913,11 +913,9 @@ object StreamingQueries {
     * the audit-trail hit totals.
     */
   def streamContentGate(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     import graft.engine.TextOps
     val in = graft.engine.TempArtifacts.tempDir("graft_cgate_in")
-    graft.engine.Tables.documents(spark, dir).select("doc_id", "text")
-      .unionByName(TextOps.ContentPlantedRows.toDF("doc_id", "text"))
+    TextOps.ContentPlantedRows.onto(graft.engine.Tables.documents(spark, dir))
       .write.mode("overwrite").parquet(s"$in/documents.parquet")
     val s2 = spark.newSession() // stateless: no state sizing needed
     val docs = s2.readStream.schema(gateSchema)
@@ -1110,9 +1108,6 @@ object StreamingQueries {
       s"""SELECT user_id, ${bucketSql("user_id")} AS bucket, ts AS last_ts, event_id AS last_event_id, event_type AS last_event_type, round(CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE), 2) AS last_value, cnt AS n_versions FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn, count(*) OVER (PARTITION BY user_id) AS cnt FROM events) WHERE rn = 1 AND user_id % $ForgetMod <> 0""",
     "q_stream_content_gate" -> {
       import graft.engine.TextOps
-      val values = TextOps.ContentPlantedRows.map { case (id, t) =>
-        s"($id, ${TextOps.sqlLit(t)})"
-      }.mkString(", ")
       val hitSum = TextOps.ContentTaxonomy.map { case (_, words) =>
         val ws = words.map(w => s"'$w'").mkString(", ")
         s"len(list_filter(t, x -> x IN ($ws)))"
@@ -1122,8 +1117,7 @@ object StreamingQueries {
         s"len(list_filter(t, x -> x IN ($ws)))" +
           s" >= ${TextOps.ContentFlagMin}"
       }.mkString(" OR ")
-      s"""WITH docs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT * FROM (VALUES $values) v(doc_id, text)),
+      s"""WITH docs AS (${TextOps.ContentPlantedRows.ontoSql("documents")}),
          |tok AS (SELECT doc_id, ${TextOps.segmentSql("text")} AS t
          |  FROM docs)
          |SELECT doc_id, CAST($hitSum AS BIGINT) AS n_total

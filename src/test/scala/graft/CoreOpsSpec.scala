@@ -445,7 +445,7 @@ class CoreOpsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r).toMap
     assert(rows.keySet === Set("doc_id", "lang", "source", "n_chars"))
     val n = Tables.documents(spark, sf).count() +
-      Ext.StatsPlantedRows.size
+      Ext.StatsPlantedRows.rows.size
     rows.values.foreach(r => assert(r.getLong(1) === n))
     // planted nulls: 2 lang, 1 source, 2 n_chars, 0 doc_id
     assert(rows("doc_id").getLong(2) === 0L)

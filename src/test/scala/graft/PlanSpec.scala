@@ -407,6 +407,15 @@ class PlanSpec extends SparkSpec {
       s"dual-countDistinct Expand crept back into decontamination:\n$p")
   }
 
+  test("image decontamination scans and decodes the media table once") {
+    // the bench side hashes the benchmark rows alone, so only the corpus
+    // side reads the documents parquet behind the media table
+    val p = plan(Multimodal.imageDecontaminate(spark, sf))
+    assert(p.split("\n").count(
+      _.matches("""\(\d+\) Scan parquet\s*""")) === 1,
+      s"image decontamination must scan the media table once:\n$p")
+  }
+
   test("bloom decontamination: sort-merge sid join, bloom prunes the probe") {
     // the bloom variant is the benchmark-set-too-big-to-broadcast plan:
     // the exact sid join must be the pinned sort-merge (no broadcast of

@@ -105,7 +105,7 @@ class PropertySpec extends SparkSpec {
     // per-character fold)
     val strs = (samples(Gen.nonEmptyListOf(
       Gen.choose(33.toChar, 126.toChar)).map(_.mkString), 100) ++
-      graft.engine.Dedup.Utf8PlantedRows.map(_._2) ++ Seq("")).distinct
+      graft.engine.Dedup.Utf8PlantedRows.rows.map(_._2) ++ Seq("")).distinct
     import spark.implicits._
     val got = strs.toDF("s")
       .select(col("s"),
@@ -327,7 +327,7 @@ class PropertySpec extends SparkSpec {
       .flatMap(n => Gen.listOfN(n, piece)).map(_.mkString(" "))
     val generated = samples(docGen, 40).zipWithIndex
       .map { case (t, i) => (940000L + i, t) }
-    val planted = graft.engine.TextOps.HtmlPlantedRows
+    val planted = graft.engine.TextOps.HtmlPlantedRows.rows
     val rows = (generated ++ planted).toDF("doc_id", "text")
       .withColumn("clean", graft.engine.TextOps.htmlToText(col("text")))
       .withColumn("again", graft.engine.TextOps.htmlToText(col("clean")))
@@ -410,7 +410,7 @@ class PropertySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-      .unionByName(Dedup.SubstrPlantedRows.toDF("doc_id", "text"))
+      .unionByName(Dedup.SubstrPlantedRows.rows.toDF("doc_id", "text"))
     val spans = Dedup.substringSpans(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(spans.nonEmpty)

@@ -119,7 +119,7 @@ class SkewPipelineSpec extends SparkSpec {
     for (d <- Ext.WatermarkDelaysMin) {
       // the corpus arrives event-time-ordered (zero genuine lateness),
       // so late rows are exactly the planted ones with minutes_late > D
-      val expected = Ext.LatePlanted.count(_._3 > d).toLong
+      val expected = Ext.LatePlanted.rows.count(_._3 > d).toLong
       assert(rows(d)._1 === expected, s"delay $d")
     }
     // wider delay never drops more than a tighter one

@@ -219,7 +219,7 @@ class TextDedupSpec extends SparkSpec {
     // the UTF-8 id contract gate: the accented/CJK/emoji/Cyrillic planted
     // pair must surface as a confirmed near-dup, proving non-ASCII text
     // flows through shingle ids -> LSH -> exact-jaccard verification
-    val Seq(a, b) = Dedup.MultilingualDedupRows.take(2).map(_._1)
+    val Seq(a, b) = Dedup.MultilingualDedupRows.rows.take(2).map(_._1)
     val hit = Dedup.dedupMinhash(spark, sf)
       .filter(col("doc_a") === a && col("doc_b") === b).collect()
     assert(hit.length === 1, "planted multilingual pair missing")
@@ -232,7 +232,7 @@ class TextDedupSpec extends SparkSpec {
     // near-dup; under the legacy v1 whitespace grid each doc is ONE
     // token and yields zero shingles — the blindness the version bump
     // fixes, demonstrated side by side through the version-keyed builder
-    val Seq(a, b) = Dedup.MultilingualDedupRows
+    val Seq(a, b) = Dedup.MultilingualDedupRows.rows
       .filter(r => r._1 == 910004L || r._1 == 910005L).map(_._1)
     val hit = Dedup.dedupMinhash(spark, sf)
       .filter(col("doc_a") === a && col("doc_b") === b).collect()
@@ -302,7 +302,7 @@ class TextDedupSpec extends SparkSpec {
     val sig = Dedup.dedupSimhash(spark, sf)
     // one signature per doc, planted multilingual rows included
     assert(sig.count() === Tables.documents(spark, sf).count()
-      + Dedup.MultilingualDedupRows.size)
+      + Dedup.MultilingualDedupRows.rows.size)
     // doc tokens -> signature must be a function: join docs with equal
     // distinct-token sets and check signatures match
     val toks = Tables.documents(spark, sf).select(
@@ -1163,7 +1163,7 @@ class TextDedupSpec extends SparkSpec {
     engine.Tables.documents(spark, sf)
       .select(col("text")).collect().foreach(r => addDoc(r.getString(0)))
     // planted multilingual rows join the corpus in shingleIds — replay
-    Dedup.MultilingualDedupRows.foreach { case (_, text) => addDoc(text) }
+    Dedup.MultilingualDedupRows.rows.foreach { case (_, text) => addDoc(text) }
     assert(rows.map(_._3).sum === counts.size.toLong,
       "bucket shingle counts do not partition the distinct set")
     assert(rows.map(_._4).sum === counts.values.sum,
@@ -1219,8 +1219,8 @@ class TextDedupSpec extends SparkSpec {
       "CDC found no duplicate chunks in the shifted copy")
     // ... while the FIXED grid shares zero aligned windows: replay
     // chunkDedup's fingerprinting on the planted pair in the driver
-    val baseToks = Dedup.CdcPlantedRows(0)._2.split(" ")
-    val shiftToks = Dedup.CdcPlantedRows(1)._2.split(" ")
+    val baseToks = Dedup.CdcPlantedRows.rows(0)._2.split(" ")
+    val shiftToks = Dedup.CdcPlantedRows.rows(1)._2.split(" ")
     def gridFps(t: Array[String]): Set[String] =
       (1 to t.length by Dedup.ChunkWords).map(p =>
         t.slice(p - 1, p - 1 + Dedup.ChunkWords).mkString(" ")).toSet
